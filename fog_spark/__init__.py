@@ -8,12 +8,12 @@ as idiomatic distributed Spark DataFrame programs:
 - FOG's per-CPU update bufs  -> the shuffle (groupBy(dst).agg)
 - FOG's bitmap frontiers     -> frontier DataFrames (broadcast when small)
 - FOG's segment scheduler    -> explicit hash partitioning + AQE
-- FOG's work stealing        -> salted-key skew mitigation
+- FOG's work stealing        -> AQE skew-join splitting + map-side partial aggregation
 - FOG's .attr write-back     -> per-superstep checkpoints with lineage
 
 Nothing in this package is a translation of the reference's C++; all
 physical strategy is Spark-first (Catalyst, AQE, Arrow-vectorized
-pandas UDFs for the CSR kernel path).
+pandas UDFs only where SQL cannot express the kernel).
 """
 
 __version__ = "0.1.0"

@@ -13,13 +13,13 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.engine.skew import HUB_DEGREE_THRESHOLD, HUB_FLAG, pick_hub_keys, skewed_gather, tag_hubs, top_degree_keys
 from fog_spark.engine.superstep import (
     active_metric,
     materialize,
     materialize_observed,
     merge_join,
     prepare_gather_edges,
+    vertices_of,
     with_frontier_hint,
 )
 
@@ -32,66 +32,31 @@ def bfs_levels(
     vertices: DataFrame | None = None,
     max_iters: int = 10_000,
     ctx=None,
-    hub_threshold: int | None = HUB_DEGREE_THRESHOLD,
-    n_salts: int = 16,
 ) -> DataFrame:
     """Returns (id, level); unreached vertices carry the 4294967295 sentinel."""
     fwd = edges.filter(F.col("src") != F.col("dst")).select("src", "dst")
 
-    # default vertex set + fwd in-degree (hub keys) from ONE
-    # union-aggregate over the edge table instead of the vertices_of
-    # distinct plus a separate top_degree_keys probe scan (self-loop
-    # endpoints stay in the vertex set with a zero degree contribution,
-    # matching the probe's self-loop-filtered view)
-    if vertices is None:
-        dv = (
-            edges.select(F.col("src").alias("id"), F.lit(0).alias("_d"))
-            .unionByName(
-                edges.select(
-                    F.col("dst").alias("id"),
-                    (F.col("src") != F.col("dst")).cast("int").alias("_d"),
-                )
-            )
-            .groupBy("id")
-            .agg(F.sum("_d").alias("indeg"))
-        )
-    else:
-        dv = vertices.select("id").withColumn("indeg", F.lit(None).cast("long"))
+    # default vertex set: every endpoint of every edge (self-loop
+    # endpoints included) in ONE aggregate over the edge table
+    dv = vertices_of(edges) if vertices is None else vertices.select("id")
     state = dv.select(
         "id",
         F.when(F.col("id") == root, F.lit(0)).otherwise(F.lit(UNREACHED)).cast("long").alias("level"),
         (F.col("id") == root).alias("changed"),
-        "indeg",
     )
     start_step = 0
-    resumed = False
     if ctx is not None:
         rp = ctx.resume_point_at_most(max_iters)
         if rp is not None:
             start_step, state = rp
-            resumed = True
     if start_step == 0:
         state = materialize(state, ctx, 0)
     n_vertices = state.count()
     active = state.filter("changed").count() if start_step else 1
 
-    salted, hubs = False, None
-    if hub_threshold is not None:
-        if resumed or vertices is not None:
-            # no cached in-degree available — probe the edge table
-            salted, hubs = pick_hub_keys(probe=top_degree_keys(fwd, "dst", hub_threshold))
-        else:
-            # hub keys read off the cached state — no separate probe scan
-            salted, hubs = pick_hub_keys(
-                state_keys=state.filter(F.col("indeg") > hub_threshold).select(F.col("id").alias("dst"))
-            )
-        if salted:
-            fwd = tag_hubs(fwd, hubs)
-    if "indeg" in state.columns:
-        state = state.select("id", "level", "changed")
     # gather-aligned edge cache (superstep.prepare_gather_edges): zero
     # shuffle exchanges per superstep in the broadcast-state regime
-    prepared = prepare_gather_edges(fwd, n_vertices, salted)
+    prepared = prepare_gather_edges(fwd, n_vertices)
     owned_cache = prepared is not fwd
     fwd = prepared
 
@@ -100,12 +65,10 @@ def bfs_levels(
             break
         t0 = time.time()
         frontier = with_frontier_hint(state.filter("changed").select("id", "level"), active)
-        msg_cols = [fwd["dst"], (F.col("level") + 1).alias("cand")] + ([fwd[HUB_FLAG]] if salted else [])
-        msgs = fwd.join(frontier, fwd["src"] == frontier["id"]).select(*msg_cols)
-        if salted:
-            agg = skewed_gather(msgs, "dst", [("min", "cand", "cand")], n_salts)
-        else:
-            agg = msgs.groupBy("dst").agg(F.min("cand").alias("cand"))
+        msgs = fwd.join(frontier, fwd["src"] == frontier["id"]).select(
+            fwd["dst"], (F.col("level") + 1).alias("cand")
+        )
+        agg = msgs.groupBy("dst").agg(F.min("cand").alias("cand"))
         state = (
             # fan-out guard: the agg is bounded by |V|, not frontier * 64
             merge_join(state, agg, state["id"] == agg["dst"], min(active * 64, n_vertices))
@@ -122,6 +85,4 @@ def bfs_levels(
 
     if owned_cache:
         fwd.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
     return state.select("id", "level")

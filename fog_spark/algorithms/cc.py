@@ -11,15 +11,10 @@ one on disk).
 
 TARGET-engine frontier scheduling (fogsrc/fog_engine.cpp:159-209):
 only changed vertices scatter; terminate when the frontier empties.
-The frontier join is broadcast-hinted when it fits.
-
-Scale hygiene:
-- hub gather keys (in-degree > hub_threshold) route through the
-  two-stage salted fold (engine/skew.skewed_gather) so no single
-  reduce partition owns a hub's entire MIN gather;
-- the per-superstep active count is observed on the materialize job
-  itself (engine/superstep.materialize_observed) — one Spark job per
-  superstep, not two.
+The frontier join is broadcast-hinted when it fits, and the
+per-superstep active count is observed on the materialize job itself
+(engine/superstep.materialize_observed) — one Spark job per superstep,
+not two.
 """
 
 from __future__ import annotations
@@ -28,7 +23,6 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.engine.skew import HUB_DEGREE_THRESHOLD, HUB_FLAG, pick_hub_keys, skewed_gather, tag_hubs, top_degree_keys
 from fog_spark.engine.superstep import (
     active_metric,
     materialize,
@@ -45,8 +39,6 @@ def connected_components(
     vertices: DataFrame | None = None,
     max_iters: int = 200,
     ctx=None,
-    hub_threshold: int | None = HUB_DEGREE_THRESHOLD,
-    n_salts: int = 16,
     init_labels: DataFrame | None = None,
 ) -> DataFrame:
     """Returns (id, component) — component = min id of the WCC. Exact.
@@ -74,24 +66,21 @@ def connected_components(
     sym = symmetrize(base)  # self-loops dropped: TARGET rule cpu_thread.cpp:236-240
 
     # state carries a `changed` flag; the frontier is a projection of it.
-    # Default vertex set + sym-degree (for the hub probe) come from ONE
-    # union-aggregate over sym — sym reaches every endpoint of every
-    # non-self-loop edge, and self-loop-only vertices ride along with a
-    # zero degree contribution — instead of the two full passes the old
-    # preamble paid (vertices_of distinct + top_degree_keys probe scan).
+    # Default vertex set = ONE aggregate over sym — sym reaches every
+    # endpoint of every non-self-loop edge — plus the self-loop-only
+    # vertices it drops.
     if vertices is None:
         dv = (
-            sym.select(F.col("dst").alias("id"), F.lit(1).alias("_d"))
+            sym.select(F.col("dst").alias("id"))
             .unionByName(
                 base.select("src", "dst")
                 .filter(F.col("src") == F.col("dst"))
-                .select(F.col("src").alias("id"), F.lit(0).alias("_d"))
+                .select(F.col("src").alias("id"))
             )
-            .groupBy("id")
-            .agg(F.sum("_d").alias("deg"))
+            .distinct()
         )
     else:
-        dv = vertices.select("id").withColumn("deg", F.lit(None).cast("long"))
+        dv = vertices.select("id")
     if init_labels is not None:
         wl = init_labels.select(F.col("id").alias("wid"), F.col("component").alias("wcomp"))
         state = (
@@ -100,40 +89,25 @@ def connected_components(
                 "id",
                 F.coalesce("wcomp", F.col("id")).alias("comp"),
                 F.lit(True).alias("changed"),
-                "deg",
             )
         )
     else:
-        state = dv.select("id", F.col("id").alias("comp"), F.lit(True).alias("changed"), "deg")
+        state = dv.select("id", F.col("id").alias("comp"), F.lit(True).alias("changed"))
     start_step = 0
-    resumed = False
     if ctx is not None:
-        rp = ctx.resume_point()
+        # capped at the requested depth: a run dir left by a deeper run
+        # must not hand back a deeper iterate than max_iters
+        rp = ctx.resume_point_at_most(max_iters)
         if rp is not None:
             start_step, state = rp  # changed flag persisted -> frontier restored
-            resumed = True
     if start_step == 0:
         state = materialize(state, ctx, 0)
     n_vertices = state.count()
     active = state.filter("changed").count() if start_step else n_vertices
 
-    salted, hubs = False, None
-    if hub_threshold is not None:
-        if resumed or vertices is not None:
-            # no cached sym-degree available — probe the edge table
-            salted, hubs = pick_hub_keys(probe=top_degree_keys(sym, "dst", hub_threshold))
-        else:
-            # hub keys read off the cached state — no separate probe scan
-            salted, hubs = pick_hub_keys(
-                state_keys=state.filter(F.col("deg") > hub_threshold).select(F.col("id").alias("dst"))
-            )
-        if salted:
-            sym = tag_hubs(sym, hubs)
-    if "deg" in state.columns:
-        state = state.select("id", "comp", "changed")
     # gather-aligned edge cache: zero shuffle exchanges per superstep in
     # the broadcast-state regime (superstep.prepare_gather_edges)
-    prepared = prepare_gather_edges(sym, n_vertices, salted)
+    prepared = prepare_gather_edges(sym, n_vertices)
     owned_cache = prepared is not sym
     sym = prepared
 
@@ -142,12 +116,8 @@ def connected_components(
             break
         t0 = time.time()
         frontier = with_frontier_hint(state.filter("changed").select("id", "comp"), active)
-        msg_cols = [sym["dst"], F.col("comp")] + ([sym[HUB_FLAG]] if salted else [])
-        msgs = sym.join(frontier, sym["src"] == frontier["id"]).select(*msg_cols)
-        if salted:
-            agg = skewed_gather(msgs, "dst", [("min", "comp", "new_comp")], n_salts)
-        else:
-            agg = msgs.groupBy("dst").agg(F.min("comp").alias("new_comp"))
+        msgs = sym.join(frontier, sym["src"] == frontier["id"]).select(sym["dst"], F.col("comp"))
+        agg = msgs.groupBy("dst").agg(F.min("comp").alias("new_comp"))
         state = (
             # fan-out guard: the agg can have far more rows than the
             # frontier (hub out-neighborhoods) but never more than |V|
@@ -165,6 +135,4 @@ def connected_components(
 
     if owned_cache:
         sym.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
     return state.select("id", F.col("comp").alias("component"))

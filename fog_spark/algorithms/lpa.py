@@ -14,10 +14,8 @@ one MIN over struct(-count, label): lexicographic struct ordering gives
 second shuffle (the second groupBy reuses the first's hash partitioning
 on dst prefix via AQE).
 
-Scale hygiene: hub (dst) keys run the count stage through the salted
-two-stage fold (engine/skew.skewed_gather) on the composite
-(dst, label) key, and the changed count is observed on the materialize
-job (one Spark job per superstep).
+The changed count is observed on the materialize job (one Spark job
+per superstep).
 """
 
 from __future__ import annotations
@@ -26,7 +24,6 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.engine.skew import HUB_DEGREE_THRESHOLD, HUB_FLAG, pick_hub_keys, skewed_gather, tag_hubs, top_degree_keys
 from fog_spark.engine.superstep import (
     active_metric,
     materialize,
@@ -43,42 +40,34 @@ def label_propagation(
     vertices: DataFrame | None = None,
     max_iters: int = 20,
     ctx=None,
-    hub_threshold: int | None = HUB_DEGREE_THRESHOLD,
-    n_salts: int = 16,
 ) -> DataFrame:
     """Returns (id, label). Isolated vertices keep their own id."""
     # mode counts must not double-count duplicate (src,dst) pairs.
-    # The distinct is a full shuffle — cache it so the hub probe and the
-    # aligned re-partition below read it once, not recompute it each.
+    # The distinct is a full shuffle — cache it so the vertex set and
+    # the aligned re-partition below read it once, not recompute it each.
     sym0 = symmetrize(edges).distinct().persist()
-    sym = sym0
 
-    # default vertex set + sym-degree (for the hub probe) from ONE
-    # union-aggregate over the cached sym0 (self-loop-only vertices ride
-    # along with a zero contribution) — replaces the vertices_of
-    # distinct AND the separate top_degree_keys probe scan
+    # default vertex set from ONE aggregate over the cached sym0 plus the
+    # self-loop-only vertices symmetrize drops
     if vertices is None:
         state = (
-            sym0.select(F.col("dst").alias("id"), F.lit(1).alias("_d"))
+            sym0.select(F.col("dst").alias("id"))
             .unionByName(
                 edges.select("src", "dst")
                 .filter(F.col("src") == F.col("dst"))
-                .select(F.col("src").alias("id"), F.lit(0).alias("_d"))
+                .select(F.col("src").alias("id"))
             )
-            .groupBy("id")
-            .agg(F.sum("_d").alias("deg"))
-            .select("id", F.col("id").alias("label"), "deg")
+            .distinct()
+            .select("id", F.col("id").alias("label"))
         )
     else:
-        state = vertices.select("id", F.col("id").alias("label"), F.lit(None).cast("long").alias("deg"))
+        state = vertices.select("id", F.col("id").alias("label"))
     start_step = 0
-    resumed = False
     if ctx is not None:
         rp = ctx.resume_point_at_most(max_iters)
         if rp is not None:
             start_step, state = rp
             state = state.select("id", "label")
-            resumed = True
             last = ctx.last_committed() or {}
             if last.get("active") == 0:  # already at fixed point
                 sym0.unpersist()
@@ -87,39 +76,21 @@ def label_propagation(
         state = materialize(state, ctx, 0)
     n = state.count()
 
-    salted, hubs = False, None
-    if hub_threshold is not None:
-        if resumed or vertices is not None:
-            salted, hubs = pick_hub_keys(probe=top_degree_keys(sym0, "dst", hub_threshold))
-        else:
-            # hub keys read off the cached state — no separate probe scan
-            salted, hubs = pick_hub_keys(
-                state_keys=state.filter(F.col("deg") > hub_threshold).select(F.col("id").alias("dst"))
-            )
-        if salted:
-            sym = tag_hubs(sym0, hubs)
-    if "deg" in state.columns:
-        state = state.select("id", "label")
     # gather-aligned cache: with broadcast state both mode aggregations
     # reuse hash(dst) — zero exchanges per superstep (see
     # superstep.prepare_gather_edges; the LPA composite (dst,label) key
     # shuffles near-|E| partials otherwise, the worst case of the folds)
-    prepared = prepare_gather_edges(sym, n, salted)
-    if prepared is not sym:  # new aligned cache: materialize it off sym0's
-        sym = prepared
+    sym = prepare_gather_edges(sym0, n)
+    if sym is not sym0:  # new aligned cache: materialize it off sym0's
         sym.count()
         sym0.unpersist()
-    # else (salted): the loop keeps reading through sym0's cache
+    # else (big state): the loop keeps reading through sym0's cache
 
     for step in range(start_step + 1, max_iters + 1):
         t0 = time.time()
         st = maybe_broadcast(state, n)
-        msg_cols = [sym["dst"], F.col("label")] + ([sym[HUB_FLAG]] if salted else [])
-        msgs = sym.join(st, sym["src"] == st["id"]).select(*msg_cols)
-        if salted:
-            counts = skewed_gather(msgs, ["dst", "label"], [("count", F.lit(1), "cnt")], n_salts)
-        else:
-            counts = msgs.groupBy("dst", "label").agg(F.count(F.lit(1)).alias("cnt"))
+        msgs = sym.join(st, sym["src"] == st["id"]).select(sym["dst"], F.col("label"))
+        counts = msgs.groupBy("dst", "label").agg(F.count(F.lit(1)).alias("cnt"))
         best = counts.groupBy("dst").agg(
             F.min(F.struct((-F.col("cnt")).alias("neg"), F.col("label").alias("lbl"))).alias("b")
         ).select("dst", F.col("b.lbl").alias("new_label"))
@@ -141,6 +112,4 @@ def label_propagation(
 
     sym.unpersist()
     sym0.unpersist()  # no-op when already dropped above
-    if hubs is not None:
-        hubs.unpersist()  # no-op for the checkpointed form
     return state.select("id", "label")

@@ -1,7 +1,5 @@
-"""PageRank — two modes, two kernels.
+"""PageRank — FOG mode, standard, weighted and personalized.
 
-Modes
------
 - **FOG mode** (the correctness oracle): the reference's exact —
   non-standard — recurrence, traced in SURVEY §2.8 from
   application/pagerank.hpp:62-77,102-106 + fogsrc/cpu_thread.cpp:509-534:
@@ -18,32 +16,18 @@ Modes
   with uniform dangling-mass redistribution, iterated until
   max_v |rank_k − rank_{k−1}| < tol (north_rule: 1e-6).
 
-Kernels
--------
-- ``kernel="df"``: pure DataFrame ops — scatter join + partial-hash-agg
-  shuffle, whole-stage-codegen'd, zero Python in the loop.
-- ``kernel="csr"``: the north_star's CSR-packed path — edges and state
-  are co-partitioned by hash(src); adjacency is packed into NumPy CSR
-  arrays ONCE (engine/csr.pack_csr), and each superstep a cogrouped
-  Arrow pandas UDF computes all messages vectorized and PRE-AGGREGATES
-  them by dst before the shuffle (np.bincount = map-side combine). No
-  per-row Python anywhere.
-
-Measured tradeoff (sandbox, 8 cores): df 46s vs csr 452s for 5
-supersteps over 40M edges — the packed arrays cross the JVM<->Python
-Arrow boundary every superstep (~640MB/superstep here), while the df
-kernel never leaves whole-stage codegen. Use csr only when the per-edge
-kernel cannot be expressed in Spark SQL (custom numerics, model
-scoring); for SQL-expressible folds the df kernel is strictly better.
+Every mode runs the same pure-DataFrame superstep — scatter join +
+partial-hash-agg shuffle, whole-stage-codegen'd, zero Python in the
+loop. A pandas-UDF kernel would move the state across the JVM<->Python
+Arrow boundary every superstep (measured ~10x slower, BASELINE.md).
 """
 
 from __future__ import annotations
 
 import time
-import numpy as np
+
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.engine.skew import HUB_DEGREE_THRESHOLD, HUB_FLAG, pick_hub_keys, skewed_gather, tag_hubs, top_degree_keys
 from fog_spark.engine.superstep import (
     degrees_and_vertices,
     materialize,
@@ -57,48 +41,17 @@ from fog_spark.engine.superstep import (
 DAMPING = 0.85  # application/pagerank.hpp:22
 
 
-def _hub_tagged(edges: DataFrame, hub_threshold: int | None) -> tuple[DataFrame, bool, "DataFrame | None"]:
-    """Tag hub in-degree keys once before the loop (skew mitigation).
-
-    The (tiny) hub set is persisted and returned for cleanup — the
-    per-superstep tag join rebuilds its broadcast from that cache
-    instead of re-aggregating degrees over the whole edge table, and
-    no second full-size copy of the edge table is cached."""
-    if hub_threshold is None:
-        return edges, False, None
-    hubs = top_degree_keys(edges, "dst", hub_threshold).persist()
-    if hubs.isEmpty():  # take(1) probe, not a full count job
-        hubs.unpersist()
-        return edges, False, None
-    return tag_hubs(edges, hubs), True, hubs
-
-
-def _degrees(edges: DataFrame, vertices: DataFrame) -> DataFrame:
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    return (
-        vertices.join(deg, vertices["id"] == deg["src"], "left")
-        .select("id", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
-    )
-
-
-def _degrees_with_indeg(edges: DataFrame, vertices: DataFrame | None) -> DataFrame:
-    """(id, outdeg, indeg) loop-preamble frame — ONE union-aggregate
-    shuffle (superstep.degrees_and_vertices) instead of the three passes
-    the preamble used to pay (vertices distinct + out-degree groupBy +
-    the top_degree_keys hub-probe scan). With an explicit ``vertices``
-    frame the vertex set is joined on (semantics: callers may restrict
-    or extend the vertex set); hub keys outside that set are then not
-    detected — a performance-only caveat (salting never changes gather
-    results), irrelevant when vertices ⊇ edge endpoints, the documented
-    contract of every in-tree caller."""
+def _outdegrees(edges: DataFrame, vertices: DataFrame | None) -> DataFrame:
+    """(id, outdeg) loop-preamble frame — ONE union-aggregate shuffle
+    (superstep.degrees_and_vertices) for the vertex set and the scatter
+    degrees. With an explicit ``vertices`` frame the vertex set is
+    joined on (callers may restrict or extend the vertex set)."""
     dv = degrees_and_vertices(edges)
     if vertices is None:
         return dv
-    dva = dv.select(F.col("id").alias("_vid"), "outdeg", "indeg")
+    dva = dv.select(F.col("id").alias("_vid"), "outdeg")
     return vertices.join(dva, vertices["id"] == F.col("_vid"), "left").select(
-        vertices["id"],
-        F.coalesce("outdeg", F.lit(0)).alias("outdeg"),
-        F.coalesce("indeg", F.lit(0)).alias("indeg"),
+        vertices["id"], F.coalesce("outdeg", F.lit(0)).alias("outdeg")
     )
 
 
@@ -113,22 +66,15 @@ def pagerank_fog(
     niters: int = 10,
     d: float = DAMPING,
     ctx=None,
-    kernel: str = "df",
-    n_kernel_parts: int | None = None,
-    hub_threshold: int | None = HUB_DEGREE_THRESHOLD,
-    n_salts: int = 16,
 ) -> DataFrame:
     """FOG-mode accumulating PageRank. Returns (id, rank)."""
-    spark = edges.sparkSession
-    state = _degrees_with_indeg(edges, vertices).withColumn("rank", F.lit(1.0))
+    state = _outdegrees(edges, vertices).withColumn("rank", F.lit(1.0))
 
     start_step = 0
-    resumed = False
     if ctx is not None:
         rp = ctx.resume_point_at_most(niters)
         if rp is not None:
             start_step, state = rp
-            resumed = True
 
     if start_step == 0:
         # resumed state is already parquet-backed — re-writing it would
@@ -136,59 +82,21 @@ def pagerank_fog(
         state = materialize(state, ctx, 0)
     n = state.count()  # known once; drives broadcast decisions every superstep
 
-    salted, hubs = False, None
-    if kernel == "csr":
-        from fog_spark.engine.csr import pack_csr
-
-        nparts = n_kernel_parts or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        packed = pack_csr(edges, nparts).persist()
-        packed.count()  # pack ONCE; reused by every superstep
-    elif hub_threshold is not None:
-        if resumed:
-            # resumed snapshots past step 0 carry no indeg — probe edges
-            edges, salted, hubs = _hub_tagged(edges, hub_threshold)
-        else:
-            # hub keys read off the cached state (indeg) — no separate
-            # full-edge-table probe aggregation job
-            salted, hubs = pick_hub_keys(
-                state_keys=state.filter(F.col("indeg") > hub_threshold).select(F.col("id").alias("dst"))
-            )
-            if salted:
-                edges = tag_hubs(edges, hubs)
-    if "indeg" in state.columns:
-        state = state.select("id", "outdeg", "rank")
-    if kernel != "csr":
-        # gather-aligned edge cache (superstep.prepare_gather_edges):
-        # zero shuffle exchanges per superstep when the state broadcasts.
-        # |E| = sum(outdeg) — a tiny agg over the materialized state —
-        # feeds the amortization guard for this fixed-niters run.
-        m = int(state.agg(F.sum("outdeg")).collect()[0][0] or 0)
-        prepared = prepare_gather_edges(
-            edges, n, salted, m_edges=m, expected_iters=niters - start_step
-        )
-        owned_cache = prepared is not edges
-        edges = prepared
+    # gather-aligned edge cache (superstep.prepare_gather_edges):
+    # zero shuffle exchanges per superstep when the state broadcasts.
+    # |E| = sum(outdeg) — a tiny agg over the materialized state —
+    # feeds the amortization guard for this fixed-niters run.
+    m = int(state.agg(F.sum("outdeg")).collect()[0][0] or 0)
+    prepared = prepare_gather_edges(edges, n, m_edges=m, expected_iters=niters - start_step)
+    owned_cache = prepared is not edges
+    edges = prepared
 
     for step in range(start_step + 1, niters + 1):
         t0 = time.time()
-        if kernel == "csr":
-            from fog_spark.engine.csr import csr_scatter_sum
-
-            def fog_msg(sb, d=d):
-                deg = np.maximum(sb["outdeg"].to_numpy(), 1)  # outdeg-0 rows never scatter
-                return d * sb["rank"].to_numpy() / deg + (1.0 - d)
-
-            partials = csr_scatter_sum(packed, state, nparts, fog_msg)
-            agg = partials.groupBy("dst").agg(F.sum("partial").alias("incoming"))
-        else:
-            msg = (d * F.col("rank") / F.col("outdeg") + (1.0 - d)).alias("msg")
-            st = maybe_broadcast(state, n)
-            msg_cols = [edges["dst"], msg] + ([edges[HUB_FLAG]] if salted else [])
-            msgs = edges.join(st, edges["src"] == st["id"]).select(*msg_cols)
-            if salted:
-                agg = skewed_gather(msgs, "dst", [("sum", "msg", "incoming")], n_salts)
-            else:
-                agg = msgs.groupBy("dst").agg(F.sum("msg").alias("incoming"))
+        msg = (d * F.col("rank") / F.col("outdeg") + (1.0 - d)).alias("msg")
+        st = maybe_broadcast(state, n)
+        msgs = edges.join(st, edges["src"] == st["id"]).select(edges["dst"], msg)
+        agg = msgs.groupBy("dst").agg(F.sum("msg").alias("incoming"))
         state = (
             merge_join(state, agg, state["id"] == agg["dst"], n)
             .select("id", "outdeg", (F.col("rank") + F.coalesce("incoming", F.lit(0.0))).alias("rank"))
@@ -197,12 +105,8 @@ def pagerank_fog(
         if ctx is not None:
             ctx.commit(step, active=-1, delta=None, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
 
-    if kernel == "csr":
-        packed.unpersist()
-    elif owned_cache:
+    if owned_cache:
         edges.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
     return state.select("id", "rank")
 
 
@@ -218,8 +122,6 @@ def pagerank_standard(
     tol: float = 1e-6,
     max_iters: int = 200,
     ctx=None,
-    hub_threshold: int | None = HUB_DEGREE_THRESHOLD,
-    n_salts: int = 16,
     init_ranks: DataFrame | None = None,
 ) -> tuple[DataFrame, int]:
     """Normalized PageRank to tol; returns ((id, rank), iterations_run).
@@ -237,7 +139,7 @@ def pagerank_standard(
     start at 1/n; a ``ctx`` resume snapshot takes precedence.
     """
     start_it = 0
-    state = base = None
+    state = None
     if ctx is not None:
         rp = ctx.resume_point_at_most(max_iters)
         if rp is not None:
@@ -249,11 +151,11 @@ def pagerank_standard(
             if rec.get("delta") is not None and rec["delta"] < tol:
                 return state.select("id", "rank"), start_it
     if start_it == 0:
-        # one materialized (id, outdeg, indeg) preamble frame: vertex
-        # set, scatter degrees, and hub keys in a single shuffle, and
-        # the init plan executes ONCE (the old count-then-checkpoint
-        # flow re-executed the degree aggregation for each)
-        base = materialize(_degrees_with_indeg(edges, vertices))
+        # one materialized (id, outdeg) preamble frame: vertex set and
+        # scatter degrees in a single shuffle, and the init plan
+        # executes ONCE (the old count-then-checkpoint flow re-executed
+        # the degree aggregation for each)
+        base = materialize(_outdegrees(edges, vertices))
         n = base.count()
         if n == 0:  # an empty graph is converged (and 1/n is undefined)
             return base.select("id", F.lit(0.0).alias("rank")), 0
@@ -282,20 +184,10 @@ def pagerank_standard(
     else:
         n = state.count()
 
-    salted, hubs = False, None
-    if hub_threshold is not None:
-        if base is not None:
-            salted, hubs = pick_hub_keys(
-                state_keys=base.filter(F.col("indeg") > hub_threshold).select(F.col("id").alias("dst"))
-            )
-            if salted:
-                edges = tag_hubs(edges, hubs)
-        else:  # resumed: no cached indeg frame — probe the edge table
-            edges, salted, hubs = _hub_tagged(edges, hub_threshold)
     state = state.select("id", "outdeg", "rank", "prev")
     # gather-aligned edge cache — see pagerank_fog (convergent run:
     # iteration budget unknown, assume enough supersteps to amortize)
-    prepared = prepare_gather_edges(edges, n, salted)
+    prepared = prepare_gather_edges(edges, n)
     owned_cache = prepared is not edges
     edges = prepared
 
@@ -306,14 +198,10 @@ def pagerank_standard(
     for it in range(start_it + 1, max_iters + 1):
         t0 = time.time()
         st = maybe_broadcast(state, n)
-        msg_cols = [edges["dst"], (F.col("rank") / F.col("outdeg")).alias("msg")] + (
-            [edges[HUB_FLAG]] if salted else []
+        msgs = edges.join(st, edges["src"] == st["id"]).select(
+            edges["dst"], (F.col("rank") / F.col("outdeg")).alias("msg")
         )
-        msgs = edges.join(st, edges["src"] == st["id"]).select(*msg_cols)
-        if salted:
-            agg = skewed_gather(msgs, "dst", [("sum", "msg", "contrib")], n_salts)
-        else:
-            agg = msgs.groupBy("dst").agg(F.sum("msg").alias("contrib"))
+        agg = msgs.groupBy("dst").agg(F.sum("msg").alias("contrib"))
         state = (
             merge_join(state, agg, state["id"] == agg["dst"], n)
             .select(
@@ -341,8 +229,6 @@ def pagerank_standard(
             break
     if owned_cache:
         edges.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
     return state.select("id", "rank"), it
 
 
@@ -454,8 +340,6 @@ def pagerank_personalized(
     tol: float = 1e-6,
     max_iters: int = 200,
     ctx=None,
-    hub_threshold: int | None = HUB_DEGREE_THRESHOLD,
-    n_salts: int = 16,
 ) -> tuple[DataFrame, int]:
     """Personalized PageRank: teleport mass goes to ``seeds`` (a
     DataFrame with an ``id`` column) instead of uniformly everywhere —
@@ -472,14 +356,14 @@ def pagerank_personalized(
     ranks are exactly 0 outside the seeds' reachable set. Same
     superstep engine as pagerank_standard: observed delta + dangling on
     the materialize job, size-aware broadcasts, gather-aligned edge
-    cache, salting seam. ``tol=0.0`` never converges early — with
+    cache. ``tol=0.0`` never converges early — with
     ``max_iters=k`` that is the fixed-depth form external fixed-k
     oracles replay.
     """
-    # one materialized (id, outdeg, indeg) preamble frame (see
-    # pagerank_standard): vertex set, scatter degrees, and hub keys in
-    # a single shuffle, executed once
-    base = materialize(_degrees_with_indeg(edges, vertices))
+    # one materialized (id, outdeg) preamble frame (see
+    # pagerank_standard): vertex set and scatter degrees in a single
+    # shuffle, executed once
+    base = materialize(_outdegrees(edges, vertices))
     n = base.count()
     if n == 0:
         return base.select("id", F.lit(0.0).alias("rank")), 0
@@ -510,12 +394,10 @@ def pagerank_personalized(
     )
 
     start_it = 0
-    resumed = False
     if ctx is not None:
         rp = ctx.resume_point_at_most(max_iters)
         if rp is not None:
             start_it, state = rp
-            resumed = True
             rec = next((m for m in reversed(ctx.metrics()) if m["superstep"] == start_it), {})
             if rec.get("delta") is not None and rec["delta"] < tol:
                 return state.select("id", "rank"), start_it
@@ -524,17 +406,7 @@ def pagerank_personalized(
         # checkpoint it so superstep 1 doesn't execute it twice
         state = materialize(state, ctx, 0) if ctx else state.localCheckpoint(eager=True)
 
-    salted, hubs = False, None
-    if hub_threshold is not None:
-        if resumed:
-            edges, salted, hubs = _hub_tagged(edges, hub_threshold)
-        else:
-            salted, hubs = pick_hub_keys(
-                state_keys=base.filter(F.col("indeg") > hub_threshold).select(F.col("id").alias("dst"))
-            )
-            if salted:
-                edges = tag_hubs(edges, hubs)
-    prepared = prepare_gather_edges(edges, n, salted)
+    prepared = prepare_gather_edges(edges, n)
     owned_cache = prepared is not edges
     edges = prepared
 
@@ -544,14 +416,10 @@ def pagerank_personalized(
     for it in range(start_it + 1, max_iters + 1):
         t0 = time.time()
         st = maybe_broadcast(state, n)
-        msg_cols = [edges["dst"], (F.col("rank") / F.col("outdeg")).alias("msg")] + (
-            [edges[HUB_FLAG]] if salted else []
+        msgs = edges.join(st, edges["src"] == st["id"]).select(
+            edges["dst"], (F.col("rank") / F.col("outdeg")).alias("msg")
         )
-        msgs = edges.join(st, edges["src"] == st["id"]).select(*msg_cols)
-        if salted:
-            agg = skewed_gather(msgs, "dst", [("sum", "msg", "contrib")], n_salts)
-        else:
-            agg = msgs.groupBy("dst").agg(F.sum("msg").alias("contrib"))
+        agg = msgs.groupBy("dst").agg(F.sum("msg").alias("contrib"))
         state = (
             merge_join(state, agg, state["id"] == agg["dst"], n)
             .select(
@@ -581,6 +449,4 @@ def pagerank_personalized(
             break
     if owned_cache:
         edges.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
     return state.select("id", "rank"), it

@@ -87,29 +87,30 @@ def prepare_edges(edges: DataFrame, key: str = "src", partitions: int | None = N
 def prepare_gather_edges(
     edges: DataFrame,
     n_state: int | None,
-    salted: bool = False,
     partitions: int | None = None,
     m_edges: int | None = None,
     expected_iters: int | None = None,
 ) -> DataFrame:
-    """Partition the (already tagged) edge table ONCE for a superstep
-    loop, choosing the alignment by regime:
+    """Partition the edge table ONCE for a superstep loop, choosing the
+    alignment by regime:
 
-    - **broadcast-state, unsalted** (n_state <= BROADCAST_STATE_MAX):
-      hash by the GATHER key ``dst``. The scatter join broadcasts the
-      state, so its output keeps this partitioning, and hash(dst)
-      satisfies the clustering required by groupBy(dst, ...) AND any
-      follow-up groupBy(dst) — the whole superstep runs with ZERO
-      shuffle exchanges (measured 3x per-superstep on LPA at sf0.1).
-    - **salted, big-state, or unamortizable**: return the input
-      UNCHANGED — the scatter join broadcasts the state (or shuffles it
-      to the edges), exactly the pre-alignment plan. Salted gathers
-      must NOT be dst-aligned — reusing a hash(dst) partitioning would
-      put every salt bucket of a hub back on one partition,
-      neutralizing the salt. (Callers that want src-bucketing for the
-      big-state sort-merge regime call ``prepare_edges`` themselves —
-      re-exchanging an input the caller may already have partitioned
-      would pay |E| for nothing.)
+    - **broadcast-state** (n_state <= BROADCAST_STATE_MAX): hash by the
+      GATHER key ``dst``. The scatter join broadcasts the state, so its
+      output keeps this partitioning, and hash(dst) satisfies the
+      clustering required by groupBy(dst, ...) AND any follow-up
+      groupBy(dst) — the whole superstep runs with ZERO shuffle
+      exchanges (measured 3x per-superstep on LPA at sf0.1).
+    - **big-state or unamortizable**: return the input UNCHANGED — the
+      scatter join broadcasts the state (or shuffles it to the edges),
+      exactly the pre-alignment plan. (Callers that want src-bucketing
+      for the big-state sort-merge regime call ``prepare_edges``
+      themselves — re-exchanging an input the caller may already have
+      partitioned would pay |E| for nothing.)
+
+    Hub keys need no special path: map-side partial aggregation sends
+    at most one partial per (map partition, dst) to the reducer, and AQE
+    splits skewed join partitions (see BASELINE.md, "Skew: salting and
+    the CSR kernel deleted").
 
     **Amortization guard**: the dst alignment costs one full |E|-row
     exchange up front, while each superstep it saves only the gather's
@@ -127,8 +128,7 @@ def prepare_gather_edges(
     spark = edges.sparkSession
     n = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     # n_state == 0 (empty graph): nothing to align, never cache
-    broadcastable = n_state is not None and 0 < n_state <= BROADCAST_STATE_MAX
-    if not broadcastable or salted:
+    if n_state is None or not 0 < n_state <= BROADCAST_STATE_MAX:
         return edges
     if m_edges and expected_iters is not None:
         per_step_exchange = min(m_edges, n * n_state)
@@ -147,24 +147,20 @@ def vertices_of(edges: DataFrame) -> DataFrame:
 
 
 def degrees_and_vertices(edges: DataFrame) -> DataFrame:
-    """(id, outdeg, indeg) for every vertex of the edge table — ONE
+    """(id, outdeg) for every vertex of the edge table — ONE
     union-aggregate shuffle.
 
-    Replaces three separate passes the loop preambles used to pay
-    (vertices_of's distinct, the groupBy(src) out-degree aggregation,
-    and the top_degree_keys hub-probe scan by dst): the caller reads
-    vertices, out-degrees for the scatter message, and in-degree hub
-    keys (indeg > HUB_DEGREE_THRESHOLD) off the same materialized frame.
-    Self-loops count toward both degrees (GLOBAL-mode semantics;
-    TARGET-mode callers filter self-loops before calling).
+    Replaces the two passes a loop preamble would otherwise pay
+    (vertices_of's distinct and a groupBy(src) out-degree aggregation):
+    the caller reads the vertex set and the out-degrees for the scatter
+    message off the same materialized frame. Self-loops count toward
+    the out-degree (GLOBAL-mode semantics; TARGET-mode callers filter
+    self-loops before calling).
     """
     both = edges.select(F.col("src").alias("id"), F.lit(1).alias("_o")).unionByName(
         edges.select(F.col("dst").alias("id"), F.lit(0).alias("_o"))
     )
-    return both.groupBy("id").agg(
-        F.sum("_o").alias("outdeg"),
-        (F.count(F.lit(1)) - F.sum("_o")).alias("indeg"),
-    )
+    return both.groupBy("id").agg(F.sum("_o").alias("outdeg"))
 
 
 _MATERIALIZE_TICKS = 0

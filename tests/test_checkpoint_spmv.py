@@ -1,4 +1,4 @@
-"""Checkpoint/resume semantics + SpMV + salted aggregation equivalence."""
+"""Checkpoint/resume semantics + SpMV."""
 
 import numpy as np
 import pytest
@@ -8,7 +8,6 @@ from fog_spark import oracles
 from fog_spark.algorithms import connected_components, spmv
 from fog_spark.algorithms.pagerank import pagerank_fog
 from fog_spark.engine.checkpoint import RunContext
-from fog_spark.engine.skew import salted_agg
 from fog_spark.fixtures import graph_to_spark, named_graphs
 
 GRAPHS = named_graphs()
@@ -103,29 +102,6 @@ def test_cc_checkpointed_matches_plain(spark, tmp_path):
     assert len(ctx.metrics()) >= 1
 
 
-def test_salted_agg_equivalence(spark):
-    """Two-stage salted aggregation == plain groupBy for sum/min/max/count."""
-    g = GRAPHS["g_plaw_n1000"]
-    msgs = graph_to_spark(spark, g).select("dst", F.col("weight").alias("m"))
-    plain = {
-        r["dst"]: (r["s"], r["mn"], r["mx"], r["c"])
-        for r in msgs.groupBy("dst")
-        .agg(F.sum("m").alias("s"), F.min("m").alias("mn"), F.max("m").alias("mx"), F.count("m").alias("c"))
-        .collect()
-    }
-    salted = {
-        r["dst"]: (r["s"], r["mn"], r["mx"], r["c"])
-        for r in salted_agg(
-            msgs, "dst", [("sum", "m", "s"), ("min", "m", "mn"), ("max", "m", "mx"), ("count", "m", "c")], n_salts=8
-        ).collect()
-    }
-    assert set(plain) == set(salted)
-    for k in plain:
-        assert plain[k][3] == salted[k][3]
-        assert np.isclose(plain[k][0], salted[k][0])
-        assert plain[k][1:3] == salted[k][1:3]
-
-
 def test_cc_resume_matches_clean(spark, tmp_path):
     g = GRAPHS["g_er_n100"]
     edges = graph_to_spark(spark, g)
@@ -140,6 +116,23 @@ def test_cc_resume_matches_clean(spark, tmp_path):
     resumed = {r["id"]: r["component"] for r in connected_components(edges, vertices, ctx=ctx2).collect()}
     assert ctx2.last_committed()["superstep"] > 2
     assert resumed == clean
+
+
+def test_cc_resume_capped_at_requested_depth(spark, tmp_path):
+    """A run dir left by a fixed-point cc run must answer a shallower
+    request with exactly that many rounds, not the deeper fixed point."""
+    g = GRAPHS["g_line"]
+    edges = graph_to_spark(spark, g)
+    vertices = spark.range(g.n).select("id")
+
+    def comps(**kw):
+        return {r["id"]: r["component"] for r in connected_components(edges, vertices, **kw).collect()}
+
+    fixed = comps(ctx=RunContext(spark, str(tmp_path), "ccDeep"))
+    assert set(fixed.values()) == {0}
+    shallow = comps(max_iters=1, ctx=RunContext(spark, str(tmp_path), "ccDeep"))
+    assert shallow == comps(max_iters=1)
+    assert shallow != fixed
 
 
 def test_pagerank_standard_resume(spark, tmp_path):

@@ -24,17 +24,6 @@ def test_pagerank_fog_matches_oracle(spark, name):
     assert np.allclose(got, expected, atol=1e-6)
 
 
-def test_pagerank_fog_csr_kernel_matches_df_kernel(spark):
-    g = GRAPHS["g_er_n100"]
-    vertices = spark.range(g.n).select("id")
-    edges = graph_to_spark(spark, g)
-    df_ranks = _ranks(pagerank_fog(edges, vertices, niters=5, kernel="df"), g.n)
-    csr_ranks = _ranks(pagerank_fog(edges, vertices, niters=5, kernel="csr"), g.n)
-    expected = oracles.pagerank_fog(g.edges, g.n, niters=5)
-    assert np.allclose(df_ranks, expected, atol=1e-6)
-    assert np.allclose(csr_ranks, expected, atol=1e-6)
-
-
 def test_pagerank_fog_selfloop_participates(spark):
     """GLOBAL scatter keeps self-loops (fogsrc/cpu_thread.cpp:509-534)."""
     g = GRAPHS["g_selfloop"]

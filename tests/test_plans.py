@@ -120,9 +120,9 @@ def test_gather_aligned_superstep_has_zero_shuffle_exchanges(spark):
     sym.unpersist()
 
 
-def test_gather_align_declines_unamortizable_and_salted(spark):
-    """The amortization guard and the salt guard return the input
-    UNCHANGED (no wasted |E| re-exchange, no collapsed salt buckets)."""
+def test_gather_align_declines_unamortizable(spark):
+    """The amortization guard and the big-state guard return the input
+    UNCHANGED (no wasted |E| re-exchange)."""
     from fog_spark.engine.superstep import prepare_gather_edges
 
     edges = cooccur_edges(spark, SF)
@@ -130,7 +130,6 @@ def test_gather_align_declines_unamortizable_and_salted(spark):
     assert prepare_gather_edges(
         edges, n_state=10, m_edges=10_000_000, expected_iters=3, partitions=8
     ) is edges
-    assert prepare_gather_edges(edges, n_state=10, salted=True) is edges
     assert prepare_gather_edges(edges, n_state=10**9) is edges  # big state
 
 

@@ -74,28 +74,6 @@ def test_triangles_property(spark, pairs):
     assert [got[i] for i in range(N)] == per.tolist()
 
 
-@SET
-@given(pairs=edge_lists, threshold=st.integers(1, 6), n_salts=st.integers(2, 8))
-def test_salted_algorithms_property(spark, pairs, threshold, n_salts):
-    """Salted and plain gathers must agree for ANY hub threshold and
-    salt count — including thresholds low enough that every dst is a
-    'hub' — on adversarial graphs (multi-edges, self-loops, clumps)."""
-    edges, e = _to_spark(spark, pairs)
-    vertices = spark.range(N).select("id")
-    plain_cc = {r["id"]: r["component"] for r in connected_components(edges, vertices, hub_threshold=None).collect()}
-    salted_cc = {
-        r["id"]: r["component"]
-        for r in connected_components(edges, vertices, hub_threshold=threshold, n_salts=n_salts).collect()
-    }
-    assert salted_cc == plain_cc
-    plain_pr = {r["id"]: r["rank"] for r in pagerank_fog(edges, vertices, niters=3, hub_threshold=None).collect()}
-    salted_pr = {
-        r["id"]: r["rank"]
-        for r in pagerank_fog(edges, vertices, niters=3, hub_threshold=threshold, n_salts=n_salts).collect()
-    }
-    assert np.allclose([salted_pr[i] for i in range(N)], [plain_pr[i] for i in range(N)], rtol=1e-9)
-
-
 asof_events = st.lists(
     st.tuples(st.integers(0, 3), st.integers(0, 50), st.integers(0, 99)),
     min_size=1, max_size=30,

@@ -246,15 +246,15 @@ def test_stream_pagerank_bridge_warm_start(spark, tmp_path):
     ]
     _write_edge_batch(spark, inp, b1)
     incremental_edge_log(stream_edges(spark, inp), log, ckpt).awaitTermination()
-    r1, _ = pagerank_standard(read_edge_log(spark, log), tol=1e-9, hub_threshold=None)
+    r1, _ = pagerank_standard(read_edge_log(spark, log), tol=1e-9)
     r1 = r1.localCheckpoint(eager=True)
 
     # small delta batch: one new vertex + two rewires
     _write_edge_batch(spark, inp, [(25, 0), (0, 25), (3, 7)])
     incremental_edge_log(stream_edges(spark, inp), log, ckpt).awaitTermination()
     edges2 = read_edge_log(spark, log)
-    cold, it_cold = pagerank_standard(edges2, tol=1e-9, hub_threshold=None)
-    warm, it_warm = pagerank_standard(edges2, tol=1e-9, hub_threshold=None, init_ranks=r1)
+    cold, it_cold = pagerank_standard(edges2, tol=1e-9)
+    warm, it_warm = pagerank_standard(edges2, tol=1e-9, init_ranks=r1)
 
     got_cold = {r["id"]: r["rank"] for r in cold.collect()}
     got_warm = {r["id"]: r["rank"] for r in warm.collect()}
@@ -280,7 +280,7 @@ def test_stream_cc_bridge_warm_start(spark, tmp_path):
     b1 = [(i, i + 1) for i in range(0, 9)] + [(i, i + 1) for i in range(10, 19)]
     _write_edge_batch(spark, inp, b1)
     incremental_edge_log(stream_edges(spark, inp), log, ckpt).awaitTermination()
-    c1 = connected_components(read_edge_log(spark, log), hub_threshold=None).localCheckpoint(
+    c1 = connected_components(read_edge_log(spark, log)).localCheckpoint(
         eager=True
     )
     assert {r["component"] for r in c1.collect()} == {0, 10}
@@ -290,9 +290,9 @@ def test_stream_cc_bridge_warm_start(spark, tmp_path):
     incremental_edge_log(stream_edges(spark, inp), log, ckpt).awaitTermination()
     edges2 = read_edge_log(spark, log)
     ctx_cold = RunContext(spark, str(tmp_path / "runs"), "cold", collect_lineage=False)
-    cold = connected_components(edges2, ctx=ctx_cold, hub_threshold=None)
+    cold = connected_components(edges2, ctx=ctx_cold)
     ctx_warm = RunContext(spark, str(tmp_path / "runs"), "warm", collect_lineage=False)
-    warm = connected_components(edges2, ctx=ctx_warm, hub_threshold=None, init_labels=c1)
+    warm = connected_components(edges2, ctx=ctx_warm, init_labels=c1)
 
     got_cold = {r["id"]: r["component"] for r in cold.collect()}
     got_warm = {r["id"]: r["component"] for r in warm.collect()}

@@ -1,108 +1,63 @@
-"""Hub-skew salting wired into the live gather paths + single-action supersteps.
-
-The north_star's "salted-key skew mitigation for hub vertices" must be
-IN the algorithms, not just available: these tests prove (a) the
-two-stage salted fold appears in the physical plan, (b) results are
-value-identical with and without salting on a power-law / star fixture
-(a hub absorbing ~everything), and (c) the observe()-folded active
-count saves one Spark action per superstep versus the old
-materialize-then-count pattern.
-"""
+"""Shared superstep machinery: observed single-action supersteps, and the
+default-vertex-set loop preambles on hub-heavy fixtures vs the oracles."""
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from fog_spark import oracles
 from fog_spark.algorithms.bfs import bfs_levels
 from fog_spark.algorithms.cc import connected_components
 from fog_spark.algorithms.lpa import label_propagation
 from fog_spark.algorithms.pagerank import pagerank_fog, pagerank_standard
 from fog_spark.algorithms.sssp import sssp
-from fog_spark.engine.skew import HUB_FLAG, skewed_gather, tag_hubs, top_degree_keys
 from fog_spark.engine.superstep import active_metric, materialize_observed
 from fog_spark.fixtures import graph_to_spark, named_graphs
 
-HUB_T = 10  # test-scale hub threshold: star/plaw hubs exceed it, others don't
+GRAPHS = named_graphs()
 
 
-def _pdf(df, *sort_cols):
-    return df.toPandas().sort_values(list(sort_cols)).reset_index(drop=True)
+# "<algorithm>-<fixture>" -> (run on the edges with `vertices` omitted,
+# output column, oracle on the Graph). g_plaw_n1000's hubs absorb ~90
+# in-edges; g_star_in's hub absorbs every edge.
+CASES = {
+    "cc-g_plaw_n1000": (
+        lambda e: connected_components(e), "component", lambda g: oracles.wcc(g.edges, g.n).tolist()
+    ),
+    "lpa-g_plaw_n1000": (
+        lambda e: label_propagation(e, max_iters=4),
+        "label",
+        lambda g: oracles.lpa(g.edges, g.n, max_iters=4).tolist(),
+    ),
+    "pagerank_fog-g_plaw_n1000": (
+        lambda e: pagerank_fog(e, niters=3), "rank", lambda g: oracles.pagerank_fog(g.edges, g.n, niters=3)
+    ),
+    "pagerank_standard-g_plaw_n1000": (
+        lambda e: pagerank_standard(e, tol=1e-8, max_iters=60)[0],
+        "rank",
+        lambda g: oracles.pagerank_standard(g.edges, g.n, tol=1e-8, max_iters=60)[0],
+    ),
+    "bfs-g_star_in": (lambda e: bfs_levels(e, root=0), "level", lambda g: oracles.bfs(g.edges, g.n, 0).tolist()),
+    "sssp-g_star_in": (
+        lambda e: sssp(e, source=0), "dist", lambda g: oracles.sssp_fog(g.edges, g.weights(), g.n, 0)[0]
+    ),
+    "sssp_pred-g_star_in": (
+        lambda e: sssp(e, source=0), "pred", lambda g: oracles.sssp_fog(g.edges, g.weights(), g.n, 0)[1].tolist()
+    ),
+}
 
 
-@pytest.fixture(scope="module")
-def plaw(spark):
-    e = graph_to_spark(spark, named_graphs()["g_plaw_n1000"]).persist()
-    e.count()
-    yield e
-    e.unpersist()
-
-
-def test_skewed_gather_plan_is_two_stage(spark, plaw):
-    hubs = top_degree_keys(plaw, "dst", HUB_T)
-    assert hubs.count() > 0, "power-law fixture must contain hubs above the test threshold"
-    tagged = tag_hubs(plaw, hubs)
-    agg = skewed_gather(
-        tagged.select("dst", F.lit(1.0).alias("msg"), HUB_FLAG),
-        "dst",
-        [("sum", "msg", "s")],
-    )
-    plan = agg._jdf.queryExecution().executedPlan().toString()
-    # two aggregation rounds: inner keyed by (dst, _salt), outer by dst only
-    assert "_salt" in plan
-    assert plan.count("HashAggregate") >= 4  # partial+final for each of the 2 stages
-
-
-def test_skewed_gather_matches_plain_gather(spark, plaw):
-    hubs = top_degree_keys(plaw, "dst", HUB_T)
-    tagged = tag_hubs(plaw, hubs)
-    msgs = tagged.select("dst", F.col("weight").alias("m"), HUB_FLAG)
-    salted = _pdf(
-        skewed_gather(msgs, "dst", [("sum", "m", "s"), ("min", "m", "mn"), ("count", "m", "c")]),
-        "dst",
-    )
-    plain = _pdf(
-        msgs.groupBy("dst").agg(F.sum("m").alias("s"), F.min("m").alias("mn"), F.count("m").alias("c")),
-        "dst",
-    )
-    pd.testing.assert_frame_equal(salted, plain, check_exact=False, rtol=1e-12)
-
-
-def test_cc_salted_equivalence(spark, plaw):
-    a = _pdf(connected_components(plaw, hub_threshold=HUB_T), "id")
-    b = _pdf(connected_components(plaw, hub_threshold=None), "id")
-    pd.testing.assert_frame_equal(a, b)
-
-
-def test_lpa_salted_equivalence(spark, plaw):
-    a = _pdf(label_propagation(plaw, max_iters=4, hub_threshold=HUB_T), "id")
-    b = _pdf(label_propagation(plaw, max_iters=4, hub_threshold=None), "id")
-    pd.testing.assert_frame_equal(a, b)
-
-
-def test_pagerank_fog_salted_equivalence(spark, plaw):
-    a = _pdf(pagerank_fog(plaw, niters=3, hub_threshold=HUB_T), "id")
-    b = _pdf(pagerank_fog(plaw, niters=3, hub_threshold=None), "id")
-    assert np.allclose(a["rank"], b["rank"], rtol=1e-9)
-    assert (a["id"] == b["id"]).all()
-
-
-def test_pagerank_standard_salted_equivalence(spark, plaw):
-    a, ia = pagerank_standard(plaw, tol=1e-8, max_iters=60, hub_threshold=HUB_T)
-    b, ib = pagerank_standard(plaw, tol=1e-8, max_iters=60, hub_threshold=None)
-    assert ia == ib
-    pa, pb = _pdf(a, "id"), _pdf(b, "id")
-    assert np.allclose(pa["rank"], pb["rank"], rtol=1e-9)
-
-
-def test_bfs_sssp_salted_on_star(spark):
-    star = graph_to_spark(spark, named_graphs()["g_star_in"])
-    a = _pdf(bfs_levels(star, root=0, hub_threshold=HUB_T), "id")
-    b = _pdf(bfs_levels(star, root=0, hub_threshold=None), "id")
-    pd.testing.assert_frame_equal(a, b)
-    sa = _pdf(sssp(star, source=0, hub_threshold=HUB_T), "id")
-    sb = _pdf(sssp(star, source=0, hub_threshold=None), "id")
-    pd.testing.assert_frame_equal(sa, sb)
+@pytest.mark.parametrize("case", list(CASES))
+def test_default_vertex_set_matches_oracle(spark, case):
+    run, key, oracle = CASES[case]
+    g = GRAPHS[case.split("-", 1)[1]]
+    rows = {r["id"]: r[key] for r in run(graph_to_spark(spark, g)).collect()}
+    assert set(rows) == set(range(g.n)), "default vertex set must be every edge endpoint"
+    got, want = [rows[i] for i in range(g.n)], oracle(g)
+    if isinstance(want, list):
+        assert got == want
+    else:
+        assert np.allclose(got, want, atol=1e-6)
 
 
 def test_materialize_observed_matches_filter_count(spark):
@@ -118,7 +73,7 @@ def test_observe_saves_one_action_per_superstep(spark, monkeypatch):
     from fog_spark.engine.superstep import materialize
 
     sc = spark.sparkContext
-    line = graph_to_spark(spark, named_graphs()["g_line"])
+    line = graph_to_spark(spark, GRAPHS["g_line"])
 
     def count_jobs(group, fn):
         sc.setJobGroup(group, group)
@@ -128,14 +83,14 @@ def test_observe_saves_one_action_per_superstep(spark, monkeypatch):
             sc.setJobGroup("", "")
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    observed = count_jobs("obs-run", lambda: bfs_levels(line, root=0, hub_threshold=None).count())
+    observed = count_jobs("obs-run", lambda: bfs_levels(line, root=0).count())
 
     def legacy_materialize_observed(df, metrics, ctx=None, step=None, name="state"):
         out = materialize(df, ctx, step, name)
         return out, {"active": out.filter("changed").count()}
 
     monkeypatch.setattr(bfs_mod, "materialize_observed", legacy_materialize_observed)
-    legacy = count_jobs("legacy-run", lambda: bfs_levels(line, root=0, hub_threshold=None).count())
+    legacy = count_jobs("legacy-run", lambda: bfs_levels(line, root=0).count())
     assert observed < legacy, f"observed={observed} jobs should beat legacy={legacy}"
 
 
@@ -146,13 +101,11 @@ def test_hits_observed_norms_save_jobs(spark):
     which re-executes the whole scatter join for a scalar). Absolute
     counts are not assertable under AQE (one materialization = several
     scheduler jobs), so this is an A/B on the same input."""
-    import pyspark.sql.functions as F
-
     from fog_spark.algorithms.hits import hits
     from fog_spark.engine.superstep import maybe_broadcast
 
     sc = spark.sparkContext
-    g = named_graphs()["g_er_n100"]
+    g = GRAPHS["g_er_n100"]
     edges = graph_to_spark(spark, g).localCheckpoint(eager=True)
     vertices = spark.range(g.n).select("id").localCheckpoint(eager=True)
     niters = 3

@@ -78,23 +78,19 @@ def probe_pagerank_fog(spark):
 
 def probe_pagerank_fog_steps(spark):
     """Manual unroll of pagerank_fog's phases with timers."""
-    from fog_spark.algorithms.pagerank import _degrees_with_indeg
+    from fog_spark.algorithms.pagerank import _outdegrees
     from fog_spark.engine.superstep import materialize, maybe_broadcast, prepare_gather_edges
 
     edges = _edges(spark)
     for rep in range(2):
         t = T()
-        state = materialize(_degrees_with_indeg(edges, None).withColumn("rank", F.lit(1.0)))
+        state = materialize(_outdegrees(edges, None).withColumn("rank", F.lit(1.0)))
         t.mark("init+materialize")
         n = state.count()
         t.mark("count")
-        hubs = state.filter(F.col("indeg") > 10**6)
-        salted = not hubs.isEmpty()
-        t.mark(f"hub probe (salted={salted})")
-        state = state.select("id", "outdeg", "rank")
         m = int(state.agg(F.sum("outdeg")).collect()[0][0] or 0)
         t.mark("m agg")
-        prepared = prepare_gather_edges(edges, n, False, m_edges=m, expected_iters=10)
+        prepared = prepare_gather_edges(edges, n, m_edges=m, expected_iters=10)
         t.mark("prepare_gather_edges")
         d = 0.85
         for step in range(1, 11):

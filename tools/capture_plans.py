@@ -71,18 +71,14 @@ else:
 from fog_spark.engine.superstep import materialize, maybe_broadcast, prepare_gather_edges  # noqa: E402
 import fog_spark.algorithms.pagerank as pr  # noqa: E402
 
-if hasattr(pr, "_degrees_with_indeg"):
-    init = pr._degrees_with_indeg(edges, None).withColumn("rank", F.lit(1.0))
-else:
-    from fog_spark.engine.superstep import vertices_of
-
-    init = pr._degrees(edges, vertices_of(edges)).withColumn("rank", F.lit(1.0))
+# the live loop preamble; trees before the hub probe was deleted name it
+# _degrees_with_indeg and add an indeg column the superstep drops
+preamble = getattr(pr, "_outdegrees", None) or pr._degrees_with_indeg
+init = preamble(edges, None).withColumn("rank", F.lit(1.0))
 dump("pagerank_state_init", init)
-state = materialize(init)
-if "indeg" in state.columns:
-    state = state.select("id", "outdeg", "rank")
+state = materialize(init).select("id", "outdeg", "rank")
 n = state.count()
-prepared = prepare_gather_edges(edges, n, False)
+prepared = prepare_gather_edges(edges, n)
 if prepared is not edges:
     prepared.count()
 d = 0.85
@@ -104,29 +100,20 @@ dump("pagerank_superstep", step)
 if prepared is not edges:
     prepared.unpersist()
 
-# --- cc / lpa state init (the preamble frames the fusion changed)
+# --- cc state init (mirrors connected_components' default-vertex preamble)
 from fog_spark.engine.superstep import symmetrize  # noqa: E402
 
 sym = symmetrize(edges)
-import fog_spark.algorithms.cc as ccm  # noqa: E402
-import inspect  # noqa: E402
-
-if "unionByName" in inspect.getsource(ccm.connected_components) and hasattr(pr, "_degrees_with_indeg"):
-    dv = (
-        sym.select(F.col("dst").alias("id"), F.lit(1).alias("_d"))
-        .unionByName(
-            edges.select("src", "dst").filter(F.col("src") == F.col("dst"))
-            .select(F.col("src").alias("id"), F.lit(0).alias("_d"))
-        )
-        .groupBy("id").agg(F.sum("_d").alias("deg"))
-        .select("id", F.col("id").alias("comp"), F.lit(True).alias("changed"), "deg")
+dv = (
+    sym.select(F.col("dst").alias("id"))
+    .unionByName(
+        edges.select("src", "dst").filter(F.col("src") == F.col("dst"))
+        .select(F.col("src").alias("id"))
     )
-    dump("cc_state_init", dv)
-else:
-    from fog_spark.engine.superstep import vertices_of
-
-    dump("cc_state_init", vertices_of(edges).select(
-        "id", F.col("id").alias("comp"), F.lit(True).alias("changed")))
+    .distinct()
+    .select("id", F.col("id").alias("comp"), F.lit(True).alias("changed"))
+)
+dump("cc_state_init", dv)
 
 # --- repo pipeline: derived edge table
 from fog_spark.fixtures_spark import make_repo_table_spark  # noqa: E402
