@@ -1,28 +1,35 @@
-"""Connected components by hash-min label propagation (WCC).
+"""Connected components by hash-min label propagation (WCC), and the
+MIN-frontier superstep loop it shares with bfs and sssp.
 
-Reference semantics (SURVEY §2.8, application/cc.hpp:36-133): labels
-start as own id; rounds alternate a forward pass over out-edges and a
-backward pass over in-edges with a MIN gather; improved vertices
+``min_frontier_loop`` is the TARGET-engine loop
+(fogsrc/fog_engine.cpp:159-209): only changed vertices scatter, the
+gather is MIN, improved vertices re-activate, and the run stops when
+the frontier empties. It owns resume, the step-0 cut, the |V| and
+active counts, the frontier broadcast hint, the fan-out-guarded merge,
+the active count observed on the cut itself (one Spark job per
+superstep) and the commit. cc, bfs and sssp supply only their vertex
+programs: the initial state, the scatter message and, for sssp, the
+merge.
+
+WCC reference semantics (SURVEY §2.8, application/cc.hpp:36-133):
+labels start as own id; rounds alternate a forward pass over out-edges
+and a backward pass over in-edges with a MIN gather; improved vertices
 re-activate; fixed point = min vertex id of the weakly-connected
 component. One pass per round over the SYMMETRIZED edge table converges
 to the identical labels (and is how a distributed engine should do it —
 no second reverse-CSR copy, reference convert/process_in_edge.cpp made
 one on disk).
-
-TARGET-engine frontier scheduling (fogsrc/fog_engine.cpp:159-209):
-only changed vertices scatter; terminate when the frontier empties.
-The frontier join is broadcast-hinted when it fits, and the
-per-superstep active count is observed on the materialize job itself
-(engine/superstep.materialize_observed) — one Spark job per superstep,
-not two.
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
+# The loop lives here, not in engine/: perfbench/tracing.py finds
+# supersteps by wrapping these names on this module (bfs and sssp
+# import the loop from here).
 from fog_spark.engine.superstep import (
     active_metric,
     materialize,
@@ -32,6 +39,70 @@ from fog_spark.engine.superstep import (
     symmetrize,
     with_frontier_hint,
 )
+
+
+def min_frontier_loop(
+    edges: DataFrame,
+    state: DataFrame,
+    value: str,
+    msg: Column,
+    ctx,
+    max_iters: int,
+    active0: int | None = None,
+    merge: list[Column] | None = None,
+) -> DataFrame:
+    """Run a MIN-gather frontier program to its fixed point (or
+    ``max_iters``) and return the final state.
+
+    ``state`` is the fresh initial state: ``id``, ``value``, a
+    ``changed`` flag marking the frontier, and any column ``merge``
+    keeps; ``active0`` is its frontier size (None: every vertex). A
+    ``ctx`` resume point, capped at ``max_iters``, replaces it — the
+    persisted ``changed`` flag restores the frontier. Each superstep
+    scatters ``msg`` (over edges ⨝ frontier(id, value)) along ``edges``,
+    MIN-gathers it per dst into ``cand`` and selects ``id, *merge`` over
+    state ⟕ gather. The default merge keeps least(value, cand) and
+    re-activates the vertices it lowered.
+    """
+    start = 0
+    if ctx is not None:
+        rp = ctx.resume_point_at_most(max_iters)
+        if rp is not None:
+            start, state = rp
+    if start == 0:
+        state = materialize(state, ctx, 0)
+    n = state.count()
+    if start:
+        active = state.filter("changed").count()
+    else:
+        active = n if active0 is None else active0
+    if merge is None:
+        cand = F.coalesce("cand", F.col(value))
+        merge = [F.least(value, cand).alias(value), (cand < F.col(value)).alias("changed")]
+
+    # gather-aligned edge cache: zero shuffle exchanges per superstep in
+    # the broadcast-state regime (superstep.prepare_gather_edges)
+    prepared = prepare_gather_edges(edges, n)
+    for step in range(start + 1, max_iters + 1):
+        if active == 0:
+            break
+        t0 = time.time()
+        frontier = with_frontier_hint(state.filter("changed").select("id", value), active)
+        msgs = prepared.join(frontier, prepared["src"] == frontier["id"]).select(
+            prepared["dst"], msg.alias("cand")
+        )
+        agg = msgs.groupBy("dst").agg(F.min("cand").alias("cand"))
+        # fan-out guard: the agg can have far more rows than the
+        # frontier (hub out-neighborhoods) but never more than |V|
+        state = merge_join(state, agg, state["id"] == agg["dst"], min(active * 64, n)).select("id", *merge)
+        state, om = materialize_observed(state, [active_metric()], ctx, step)
+        active = int(om["active"] or 0)
+        if ctx is not None:
+            ctx.commit(step, active=active, delta=None, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
+
+    if prepared is not edges:
+        prepared.unpersist()
+    return state
 
 
 def connected_components(
@@ -93,46 +164,6 @@ def connected_components(
         )
     else:
         state = dv.select("id", F.col("id").alias("comp"), F.lit(True).alias("changed"))
-    start_step = 0
-    if ctx is not None:
-        # capped at the requested depth: a run dir left by a deeper run
-        # must not hand back a deeper iterate than max_iters
-        rp = ctx.resume_point_at_most(max_iters)
-        if rp is not None:
-            start_step, state = rp  # changed flag persisted -> frontier restored
-    if start_step == 0:
-        state = materialize(state, ctx, 0)
-    n_vertices = state.count()
-    active = state.filter("changed").count() if start_step else n_vertices
-
-    # gather-aligned edge cache: zero shuffle exchanges per superstep in
-    # the broadcast-state regime (superstep.prepare_gather_edges)
-    prepared = prepare_gather_edges(sym, n_vertices)
-    owned_cache = prepared is not sym
-    sym = prepared
-
-    for step in range(start_step + 1, max_iters + 1):
-        if active == 0:
-            break
-        t0 = time.time()
-        frontier = with_frontier_hint(state.filter("changed").select("id", "comp"), active)
-        msgs = sym.join(frontier, sym["src"] == frontier["id"]).select(sym["dst"], F.col("comp"))
-        agg = msgs.groupBy("dst").agg(F.min("comp").alias("new_comp"))
-        state = (
-            # fan-out guard: the agg can have far more rows than the
-            # frontier (hub out-neighborhoods) but never more than |V|
-            merge_join(state, agg, state["id"] == agg["dst"], min(active * 64, n_vertices))
-            .select(
-                "id",
-                F.least("comp", F.coalesce("new_comp", F.col("comp"))).alias("comp"),
-                (F.coalesce("new_comp", F.col("comp")) < F.col("comp")).alias("changed"),
-            )
-        )
-        state, om = materialize_observed(state, [active_metric()], ctx, step)
-        active = int(om["active"] or 0)
-        if ctx is not None:
-            ctx.commit(step, active=active, delta=None, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-
-    if owned_cache:
-        sym.unpersist()
-    return state.select("id", F.col("comp").alias("component"))
+    return min_frontier_loop(sym, state, "comp", F.col("comp"), ctx, max_iters).select(
+        "id", F.col("comp").alias("component")
+    )

@@ -1,4 +1,11 @@
-"""PageRank — FOG mode, standard, weighted and personalized.
+"""PageRank — one power-iteration loop, four vertex programs.
+
+``_power_iterate`` is the superstep loop every mode runs: edge
+alignment, scatter → ``F.sum`` gather → merge, the per-superstep cut,
+the commit and the stop rule. ``_resume`` picks up a ``RunContext`` run.
+Each public function supplies only its vertex program: the initial
+state, the scatter message, the new-rank expression and, for the
+convergent modes, the dangling predicate and the ``tol`` stop rule.
 
 - **FOG mode** (the correctness oracle): the reference's exact —
   non-standard — recurrence, traced in SURVEY §2.8 from
@@ -16,6 +23,11 @@
   with uniform dangling-mass redistribution, iterated until
   max_v |rank_k − rank_{k−1}| < tol (north_rule: 1e-6).
 
+- **Weighted mode**: the standard update with msg = rank·w/Σw instead of
+  rank/outdeg.
+
+- **Personalized mode**: teleport and dangling mass go to a seed set.
+
 Every mode runs the same pure-DataFrame superstep — scatter join +
 partial-hash-agg shuffle, whole-stage-codegen'd, zero Python in the
 loop. A pandas-UDF kernel would move the state across the JVM<->Python
@@ -25,9 +37,12 @@ Arrow boundary every superstep (measured ~10x slower, BASELINE.md).
 from __future__ import annotations
 
 import time
+from typing import Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
+# The loop lives here, not in engine/: perfbench/tracing.py finds
+# supersteps by wrapping these names on this module.
 from fog_spark.engine.superstep import (
     degrees_and_vertices,
     materialize,
@@ -55,6 +70,97 @@ def _outdegrees(edges: DataFrame, vertices: DataFrame | None) -> DataFrame:
     )
 
 
+def _resume(ctx, max_iters: int, tol: float | None = None) -> tuple[int, DataFrame | None, bool]:
+    """(superstep, state, converged) to continue a ``ctx`` run from;
+    (0, None, False) for a fresh run. Convergence is judged by the
+    metric record OF the resumed step: last_committed() may describe a
+    NEWER step whose snapshot was lost (resume_point walked past it)."""
+    rp = ctx.resume_point_at_most(max_iters) if ctx is not None else None
+    if rp is None:
+        return 0, None, False
+    step, state = rp
+    if tol is None:
+        return step, state, False
+    rec = next((m for m in reversed(ctx.metrics()) if m["superstep"] == step), {})
+    return step, state, rec.get("delta") is not None and rec["delta"] < tol
+
+
+def _power_iterate(
+    edges: DataFrame,
+    state: DataFrame,
+    n: int,
+    start: int,
+    max_iters: int,
+    ctx,
+    msg: Column,
+    rank: Callable[[float], Column],
+    carry: tuple[str, ...],
+    dangles: Column | None = None,
+    tol: float = 0.0,
+    m_edges: int | None = None,
+) -> tuple[DataFrame, int]:
+    """Supersteps start+1..max_iters from the cut ``state`` (n rows).
+
+    Each superstep scatters ``msg`` along ``edges`` (src → dst), sums it
+    per dst into ``incoming``, and keeps ``id``, the ``carry`` columns
+    and ``rank(dangling)`` over state ⟕ gather as the next state.
+
+    A dangling predicate ``dangles`` makes the run convergent: the old
+    rank is kept as ``prev``, max|Δ| and the next superstep's dangling
+    mass ride the cut as observed metrics (one job per superstep), and
+    the loop stops once max|Δ| < tol. Without one (FOG mode) each
+    superstep is a plain cut and the run goes to max_iters; ``m_edges``
+    then lets prepare_gather_edges decline an alignment the remaining
+    supersteps cannot amortize. Returns ((id, rank), last superstep run).
+    """
+    # gather-aligned edge cache: zero shuffle exchanges per superstep
+    # when the state broadcasts (superstep.prepare_gather_edges)
+    prepared = prepare_gather_edges(edges, n, m_edges=m_edges, expected_iters=max_iters - start)
+    prev = () if dangles is None else (F.col("rank").alias("prev"),)
+    dangling = 0.0
+    if dangles is not None:
+        dangling = state.filter(dangles).agg(F.sum("rank")).collect()[0][0] or 0.0
+
+    it = start
+    for it in range(start + 1, max_iters + 1):
+        t0 = time.time()
+        st = maybe_broadcast(state, n)
+        msgs = prepared.join(st, prepared["src"] == st["id"]).select(prepared["dst"], msg.alias("msg"))
+        agg = msgs.groupBy("dst").agg(F.sum("msg").alias("incoming"))
+        state = merge_join(state, agg, state["id"] == agg["dst"], n).select(
+            "id", *carry, *prev, rank(dangling).alias("rank")
+        )
+        delta = None
+        if dangles is None:
+            state = materialize(state, ctx, it)
+        else:
+            state, om = materialize_observed(
+                state,
+                [
+                    F.max(F.abs(F.col("rank") - F.col("prev"))).alias("delta"),
+                    F.sum(F.when(dangles, F.col("rank")).otherwise(F.lit(0.0))).alias("dangling"),
+                ],
+                ctx,
+                it,
+            )
+            # om values are None on an empty vertex set — an empty graph
+            # is converged (matches cc's observed-metric null handling)
+            delta, dangling = float(om["delta"] or 0.0), float(om["dangling"] or 0.0)
+        if ctx is not None:
+            ctx.commit(it, active=n, delta=delta, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
+        if delta is not None and delta < tol:
+            break
+    if prepared is not edges:
+        prepared.unpersist()
+    return state.select("id", "rank"), it
+
+
+def _uniform_rank(d: float, n: int) -> Callable[[float], Column]:
+    """Standard/weighted update: uniform teleport plus a uniform share of
+    the dangling mass."""
+    return lambda dangling: (1.0 - d) / n + d * (F.coalesce("incoming", F.lit(0.0)) + dangling / n)
+
+
 # ---------------------------------------------------------------------------
 # FOG mode
 # ---------------------------------------------------------------------------
@@ -68,46 +174,20 @@ def pagerank_fog(
     ctx=None,
 ) -> DataFrame:
     """FOG-mode accumulating PageRank. Returns (id, rank)."""
-    state = _outdegrees(edges, vertices).withColumn("rank", F.lit(1.0))
-
-    start_step = 0
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(niters)
-        if rp is not None:
-            start_step, state = rp
-
-    if start_step == 0:
-        # resumed state is already parquet-backed — re-writing it would
-        # round-trip (and briefly delete) the only committed snapshot
-        state = materialize(state, ctx, 0)
+    start, state, _ = _resume(ctx, niters)
+    if state is None:
+        state = materialize(_outdegrees(edges, vertices).withColumn("rank", F.lit(1.0)), ctx, 0)
     n = state.count()  # known once; drives broadcast decisions every superstep
-
-    # gather-aligned edge cache (superstep.prepare_gather_edges):
-    # zero shuffle exchanges per superstep when the state broadcasts.
-    # |E| = sum(outdeg) — a tiny agg over the materialized state —
-    # feeds the amortization guard for this fixed-niters run.
+    # |E| = sum(outdeg) — a tiny agg over the materialized state — feeds
+    # the edge-alignment amortization guard for this fixed-niters run
     m = int(state.agg(F.sum("outdeg")).collect()[0][0] or 0)
-    prepared = prepare_gather_edges(edges, n, m_edges=m, expected_iters=niters - start_step)
-    owned_cache = prepared is not edges
-    edges = prepared
-
-    for step in range(start_step + 1, niters + 1):
-        t0 = time.time()
-        msg = (d * F.col("rank") / F.col("outdeg") + (1.0 - d)).alias("msg")
-        st = maybe_broadcast(state, n)
-        msgs = edges.join(st, edges["src"] == st["id"]).select(edges["dst"], msg)
-        agg = msgs.groupBy("dst").agg(F.sum("msg").alias("incoming"))
-        state = (
-            merge_join(state, agg, state["id"] == agg["dst"], n)
-            .select("id", "outdeg", (F.col("rank") + F.coalesce("incoming", F.lit(0.0))).alias("rank"))
-        )
-        state = materialize(state, ctx, step)
-        if ctx is not None:
-            ctx.commit(step, active=-1, delta=None, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-
-    if owned_cache:
-        edges.unpersist()
-    return state.select("id", "rank")
+    return _power_iterate(
+        edges, state, n, start, niters, ctx,
+        msg=d * F.col("rank") / F.col("outdeg") + (1.0 - d),
+        rank=lambda _: F.col("rank") + F.coalesce("incoming", F.lit(0.0)),
+        carry=("outdeg",),
+        m_edges=m,
+    )[0]
 
 
 # ---------------------------------------------------------------------------
@@ -138,19 +218,10 @@ def pagerank_standard(
     supersteps. Vertices absent from ``init_ranks`` (newly arrived)
     start at 1/n; a ``ctx`` resume snapshot takes precedence.
     """
-    start_it = 0
-    state = None
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(max_iters)
-        if rp is not None:
-            start_it, state = rp
-            # convergence must be judged by the metric record OF the
-            # resumed step: last_committed() may describe a NEWER step
-            # whose snapshot was lost (resume_point walked past it)
-            rec = next((m for m in reversed(ctx.metrics()) if m["superstep"] == start_it), {})
-            if rec.get("delta") is not None and rec["delta"] < tol:
-                return state.select("id", "rank"), start_it
-    if start_it == 0:
+    start, state, done = _resume(ctx, max_iters, tol)
+    if done:
+        return state.select("id", "rank"), start
+    if state is None:
         # one materialized (id, outdeg) preamble frame: vertex set and
         # scatter degrees in a single shuffle, and the init plan
         # executes ONCE (the old count-then-checkpoint flow re-executed
@@ -173,63 +244,20 @@ def pagerank_standard(
             # normalized warm start is the fast path the docstring promises.
             tot = state.agg(F.sum("rank")).collect()[0][0] or 1.0
             state = state.withColumn("rank", F.col("rank") / tot)
-        if ctx is not None:
+        # without a ctx or a warm join, the thin projection over the cut
+        # base IS the stable step-0 leaf — a second cut would only copy it
+        if ctx is not None or init_ranks is not None:
             state = materialize(state, ctx, 0)
-        elif init_ranks is not None:
-            # the warm join is not a thin projection over the cached
-            # base — checkpoint so superstep 1 doesn't execute it twice
-            state = state.localCheckpoint(eager=True)
-        # otherwise the thin projection over the cached base IS the
-        # stable step-0 leaf — a second localCheckpoint would only copy it
     else:
         n = state.count()
-
-    state = state.select("id", "outdeg", "rank", "prev")
-    # gather-aligned edge cache — see pagerank_fog (convergent run:
-    # iteration budget unknown, assume enough supersteps to amortize)
-    prepared = prepare_gather_edges(edges, n)
-    owned_cache = prepared is not edges
-    edges = prepared
-
-    # scalar pass: dangling mass of the current rank vector
-    dangling = state.filter(F.col("outdeg") == 0).agg(F.sum("rank")).collect()[0][0] or 0.0
-
-    it = start_it
-    for it in range(start_it + 1, max_iters + 1):
-        t0 = time.time()
-        st = maybe_broadcast(state, n)
-        msgs = edges.join(st, edges["src"] == st["id"]).select(
-            edges["dst"], (F.col("rank") / F.col("outdeg")).alias("msg")
-        )
-        agg = msgs.groupBy("dst").agg(F.sum("msg").alias("contrib"))
-        state = (
-            merge_join(state, agg, state["id"] == agg["dst"], n)
-            .select(
-                "id",
-                "outdeg",
-                F.col("rank").alias("prev"),
-                ((1.0 - d) / n + d * (F.coalesce("contrib", F.lit(0.0)) + dangling / n)).alias("rank"),
-            )
-        )
-        state, om = materialize_observed(
-            state,
-            [
-                F.max(F.abs(F.col("rank") - F.col("prev"))).alias("delta"),
-                F.sum(F.when(F.col("outdeg") == 0, F.col("rank")).otherwise(F.lit(0.0))).alias("dangling"),
-            ],
-            ctx,
-            it,
-        )
-        # om values are None on an empty vertex set — an empty graph is
-        # converged (matches bfs/cc/sssp's observed-metric null handling)
-        delta, dangling = float(om["delta"] or 0.0), float(om["dangling"] or 0.0)
-        if ctx is not None:
-            ctx.commit(it, active=n, delta=delta, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-        if delta < tol:
-            break
-    if owned_cache:
-        edges.unpersist()
-    return state.select("id", "rank"), it
+    return _power_iterate(
+        edges, state, n, start, max_iters, ctx,
+        msg=F.col("rank") / F.col("outdeg"),
+        rank=_uniform_rank(d, n),
+        carry=("outdeg",),
+        dangles=F.col("outdeg") == 0,
+        tol=tol,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -253,78 +281,47 @@ def pagerank_weighted(
     ignores that signal. Returns ((id, rank), iterations_run).
 
     The transition probability ``p = w / wsum(src)`` is attached to the
-    edge table ONCE before the loop (one keyed join), so every
-    superstep is the same scatter-join + sum-gather as the uniform
-    engine — msg = rank * p instead of rank / outdeg. Dangling =
-    vertices with no (positive-weight) out-edges, redistributed
-    uniformly; delta and next-round dangling ride the materialize job
-    as observed metrics (one job per superstep). ``tol=0.0`` +
-    ``max_iters=k`` is the fixed-depth oracle form.
+    edge table ONCE before the loop (one keyed join), so the shared loop
+    runs the standard update with msg = rank * p instead of
+    rank / outdeg. Dangling = vertices with no (positive-weight)
+    out-edges, redistributed uniformly; delta and next-round dangling
+    ride the materialize job as observed metrics (one job per
+    superstep). ``tol=0.0`` + ``max_iters=k`` is the fixed-depth oracle
+    form.
     """
-    vertices = vertices if vertices is not None else vertices_of(edges)
     e = edges.select("src", "dst", F.col(weight_col).alias("w")).filter(F.col("w") > 0)
     wsum = e.groupBy("src").agg(F.sum("w").alias("wsum"))
+    # one concrete RDD for all supersteps, also where the loop leaves
+    # the edges unaligned (big-state regime)
     pe = (
         e.join(wsum, "src")
         .select("src", "dst", (F.col("w") / F.col("wsum")).alias("p"))
-        .localCheckpoint(eager=False)  # one concrete RDD for all supersteps
+        .localCheckpoint(eager=False)
     )
-    state = (
-        vertices.join(wsum, vertices["id"] == wsum["src"], "left")
-        .select("id", F.col("wsum").isNotNull().alias("has_out"))
-        .withColumn("rank", F.lit(0.0))
-        .withColumn("prev", F.lit(0.0))
+    start, state, done = _resume(ctx, max_iters, tol)
+    if done:
+        return state.select("id", "rank"), start
+    if state is None:
+        vertices = vertices if vertices is not None else vertices_of(edges)
+        state = vertices.join(wsum, vertices["id"] == wsum["src"], "left").select(
+            "id", F.col("wsum").isNotNull().alias("has_out")
+        )
+        n = state.count()
+        if n == 0:
+            return state.select("id", F.lit(0.0).alias("rank")), 0
+        state = materialize(
+            state.select("id", "has_out", F.lit(1.0 / n).alias("rank"), F.lit(0.0).alias("prev")), ctx, 0
+        )
+    else:
+        n = state.count()
+    return _power_iterate(
+        pe, state, n, start, max_iters, ctx,
+        msg=F.col("rank") * F.col("p"),
+        rank=_uniform_rank(d, n),
+        carry=("has_out",),
+        dangles=~F.col("has_out"),
+        tol=tol,
     )
-    n = state.count()
-    if n == 0:
-        return state.select("id", "rank"), 0
-    state = state.withColumn("rank", F.lit(1.0 / n))
-
-    start_it = 0
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(max_iters)
-        if rp is not None:
-            start_it, state = rp
-            rec = next((m for m in reversed(ctx.metrics()) if m["superstep"] == start_it), {})
-            if rec.get("delta") is not None and rec["delta"] < tol:
-                return state.select("id", "rank"), start_it
-    if start_it == 0:
-        state = materialize(state, ctx, 0) if ctx else state.localCheckpoint(eager=True)
-
-    dangling = state.filter(~F.col("has_out")).agg(F.sum("rank")).collect()[0][0] or 0.0
-
-    it = start_it
-    for it in range(start_it + 1, max_iters + 1):
-        t0 = time.time()
-        st = maybe_broadcast(state, n)
-        msgs = pe.join(st, pe["src"] == st["id"]).select(
-            pe["dst"], (F.col("rank") * F.col("p")).alias("msg")
-        )
-        agg = msgs.groupBy("dst").agg(F.sum("msg").alias("contrib"))
-        state = (
-            merge_join(state, agg, state["id"] == agg["dst"], n)
-            .select(
-                "id",
-                "has_out",
-                F.col("rank").alias("prev"),
-                ((1.0 - d) / n + d * (F.coalesce("contrib", F.lit(0.0)) + dangling / n)).alias("rank"),
-            )
-        )
-        state, om = materialize_observed(
-            state,
-            [
-                F.max(F.abs(F.col("rank") - F.col("prev"))).alias("delta"),
-                F.sum(F.when(~F.col("has_out"), F.col("rank")).otherwise(F.lit(0.0))).alias("dangling"),
-            ],
-            ctx,
-            it,
-        )
-        delta, dangling = float(om["delta"] or 0.0), float(om["dangling"] or 0.0)
-        if ctx is not None:
-            ctx.commit(it, active=n, delta=delta, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-        if delta < tol:
-            break
-    return state.select("id", "rank"), it
 
 
 # ---------------------------------------------------------------------------
@@ -354,99 +351,53 @@ def pagerank_personalized(
     Dangling mass is redistributed to the TELEPORT vector (not
     uniformly), the standard PPR formulation, so Σ rank stays 1 and
     ranks are exactly 0 outside the seeds' reachable set. Same
-    superstep engine as pagerank_standard: observed delta + dangling on
+    superstep loop as pagerank_standard: observed delta + dangling on
     the materialize job, size-aware broadcasts, gather-aligned edge
     cache. ``tol=0.0`` never converges early — with
     ``max_iters=k`` that is the fixed-depth form external fixed-k
     oracles replay.
     """
-    # one materialized (id, outdeg) preamble frame (see
-    # pagerank_standard): vertex set and scatter degrees in a single
-    # shuffle, executed once
-    base = materialize(_outdegrees(edges, vertices))
-    n = base.count()
-    if n == 0:
-        return base.select("id", F.lit(0.0).alias("rank")), 0
-    # intersect the seeds with the vertex set BEFORE sizing 1/|S|:
-    # an unknown seed id would otherwise keep a share of teleport mass
-    # that the state join then drops, deflating every rank and breaking
-    # the sum-to-1 invariant this docstring promises
-    seed_set = (
-        seeds.select(F.col("id").alias("sid")).distinct()
-        .join(base.select(F.col("id").alias("sid")), "sid", "left_semi")
-    )
-    n_seeds = seed_set.count()
-    if n_seeds == 0:
-        raise ValueError(
-            "pagerank_personalized needs a non-empty seed set intersecting the graph's vertices"
+    start, state, done = _resume(ctx, max_iters, tol)
+    if done:
+        return state.select("id", "rank"), start
+    if state is None:
+        # one materialized (id, outdeg) preamble frame (see
+        # pagerank_standard): vertex set and scatter degrees in a single
+        # shuffle, executed once
+        base = materialize(_outdegrees(edges, vertices))
+        n = base.count()
+        if n == 0:
+            return base.select("id", F.lit(0.0).alias("rank")), 0
+        # intersect the seeds with the vertex set BEFORE sizing 1/|S|:
+        # an unknown seed id would otherwise keep a share of teleport mass
+        # that the state join then drops, deflating every rank and breaking
+        # the sum-to-1 invariant this docstring promises
+        seed_set = (
+            seeds.select(F.col("id").alias("sid")).distinct()
+            .join(base.select(F.col("id").alias("sid")), "sid", "left_semi")
         )
-    state = (
-        base.join(seed_set, base["id"] == seed_set["sid"], "left")
-        .select(
-            "id",
-            "outdeg",
-            F.when(F.col("sid").isNotNull(), F.lit(1.0 / n_seeds))
-            .otherwise(F.lit(0.0))
-            .alias("tele"),
-        )
-        .withColumn("rank", F.col("tele"))
-        .withColumn("prev", F.lit(0.0))
-    )
-
-    start_it = 0
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(max_iters)
-        if rp is not None:
-            start_it, state = rp
-            rec = next((m for m in reversed(ctx.metrics()) if m["superstep"] == start_it), {})
-            if rec.get("delta") is not None and rec["delta"] < tol:
-                return state.select("id", "rank"), start_it
-    if start_it == 0:
-        # the seed join is not a thin projection over the cached base —
-        # checkpoint it so superstep 1 doesn't execute it twice
-        state = materialize(state, ctx, 0) if ctx else state.localCheckpoint(eager=True)
-
-    prepared = prepare_gather_edges(edges, n)
-    owned_cache = prepared is not edges
-    edges = prepared
-
-    dangling = state.filter(F.col("outdeg") == 0).agg(F.sum("rank")).collect()[0][0] or 0.0
-
-    it = start_it
-    for it in range(start_it + 1, max_iters + 1):
-        t0 = time.time()
-        st = maybe_broadcast(state, n)
-        msgs = edges.join(st, edges["src"] == st["id"]).select(
-            edges["dst"], (F.col("rank") / F.col("outdeg")).alias("msg")
-        )
-        agg = msgs.groupBy("dst").agg(F.sum("msg").alias("contrib"))
-        state = (
-            merge_join(state, agg, state["id"] == agg["dst"], n)
-            .select(
-                "id",
-                "outdeg",
-                "tele",
-                F.col("rank").alias("prev"),
-                (
-                    (1.0 - d + d * dangling) * F.col("tele")
-                    + d * F.coalesce("contrib", F.lit(0.0))
-                ).alias("rank"),
+        n_seeds = seed_set.count()
+        if n_seeds == 0:
+            raise ValueError(
+                "pagerank_personalized needs a non-empty seed set intersecting the graph's vertices"
             )
-        )
-        state, om = materialize_observed(
-            state,
-            [
-                F.max(F.abs(F.col("rank") - F.col("prev"))).alias("delta"),
-                F.sum(F.when(F.col("outdeg") == 0, F.col("rank")).otherwise(F.lit(0.0))).alias("dangling"),
-            ],
+        tele = F.when(F.col("sid").isNotNull(), F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
+        # the seed join is not a thin projection over the cut base —
+        # cut it so superstep 1 doesn't execute it twice
+        state = materialize(
+            base.join(seed_set, base["id"] == seed_set["sid"], "left").select(
+                "id", "outdeg", tele.alias("tele"), tele.alias("rank"), F.lit(0.0).alias("prev")
+            ),
             ctx,
-            it,
+            0,
         )
-        delta, dangling = float(om["delta"] or 0.0), float(om["dangling"] or 0.0)
-        if ctx is not None:
-            ctx.commit(it, active=n, delta=delta, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-        if delta < tol:
-            break
-    if owned_cache:
-        edges.unpersist()
-    return state.select("id", "rank"), it
+    else:
+        n = state.count()
+    return _power_iterate(
+        edges, state, n, start, max_iters, ctx,
+        msg=F.col("rank") / F.col("outdeg"),
+        rank=lambda dangling: (1.0 - d + d * dangling) * F.col("tele") + d * F.coalesce("incoming", F.lit(0.0)),
+        carry=("outdeg", "tele"),
+        dangles=F.col("outdeg") == 0,
+        tol=tol,
+    )

@@ -1,4 +1,5 @@
-"""Single-source shortest paths — frontier Bellman-Ford (TARGET pattern).
+"""Single-source shortest paths — frontier Bellman-Ford, a vertex
+program over cc.min_frontier_loop (TARGET pattern).
 
 Reference semantics (application/sssp.hpp:38-106, SURVEY §2.8):
 dist(source)=0 / else +inf, pred=-1; relax dist(u)+w(u,v) along
@@ -15,19 +16,10 @@ deterministic choice, as FIXTURES.md's goldens do).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.engine.superstep import (
-    active_metric,
-    materialize,
-    materialize_observed,
-    merge_join,
-    prepare_gather_edges,
-    vertices_of,
-    with_frontier_hint,
-)
+from fog_spark.algorithms.cc import min_frontier_loop
+from fog_spark.engine.superstep import vertices_of
 
 EPS = 1e-3
 
@@ -51,53 +43,19 @@ def sssp(
         F.lit(-1).cast("long").alias("pred"),
         (F.col("id") == source).alias("changed"),
     )
-    start_step = 0
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(max_iters)
-        if rp is not None:
-            start_step, state = rp
-    if start_step == 0:
-        state = materialize(state, ctx, 0)
-    n_vertices = state.count()
-    active = state.filter("changed").count() if start_step else 1
-
-    # gather-aligned edge cache (superstep.prepare_gather_edges): zero
-    # shuffle exchanges per superstep in the broadcast-state regime
-    prepared = prepare_gather_edges(fwd, n_vertices)
-    owned_cache = prepared is not fwd
-    fwd = prepared
-
-    for step in range(start_step + 1, max_iters + 1):
-        if active == 0:
-            break
-        t0 = time.time()
-        frontier = with_frontier_hint(state.filter("changed").select("id", "dist"), active)
-        msgs = fwd.join(frontier, fwd["src"] == frontier["id"]).select(
-            fwd["dst"],
-            F.struct(
-                (F.col("dist") + F.col("weight")).alias("dist"),
-                frontier["id"].alias("pred"),
-            ).alias("cand"),
-        )
-        agg = msgs.groupBy("dst").agg(F.min("cand").alias("cand"))
-        absorb = (F.col("cand.dist") < F.col("dist")) & (
-            F.abs(F.col("cand.dist") - F.col("dist")) > EPS
-        )
-        state = (
-            # fan-out guard: the agg is bounded by |V|, not frontier * 64
-            merge_join(state, agg, state["id"] == agg["dst"], min(active * 64, n_vertices))
-            .select(
-                "id",
-                F.when(absorb, F.col("cand.dist")).otherwise(F.col("dist")).alias("dist"),
-                F.when(absorb, F.col("cand.pred")).otherwise(F.col("pred")).alias("pred"),
-                F.coalesce(absorb, F.lit(False)).alias("changed"),
-            )
-        )
-        state, om = materialize_observed(state, [active_metric()], ctx, step)
-        active = int(om["active"] or 0)
-        if ctx is not None:
-            ctx.commit(step, active=active, delta=None, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-
-    if owned_cache:
-        fwd.unpersist()
+    absorb = (F.col("cand.dist") < F.col("dist")) & (F.abs(F.col("cand.dist") - F.col("dist")) > EPS)
+    state = min_frontier_loop(
+        fwd,
+        state,
+        "dist",
+        F.struct((F.col("dist") + F.col("weight")).alias("dist"), F.col("id").alias("pred")),
+        ctx,
+        max_iters,
+        active0=1,
+        merge=[
+            F.when(absorb, F.col("cand.dist")).otherwise(F.col("dist")).alias("dist"),
+            F.when(absorb, F.col("cand.pred")).otherwise(F.col("pred")).alias("pred"),
+            F.coalesce(absorb, F.lit(False)).alias("changed"),
+        ],
+    )
     return state.select("id", "dist", "pred")

@@ -135,28 +135,34 @@ def test_cc_resume_capped_at_requested_depth(spark, tmp_path):
     assert shallow != fixed
 
 
-def test_pagerank_standard_resume(spark, tmp_path):
-    import numpy as np
-    from fog_spark.algorithms.pagerank import pagerank_standard
+@pytest.mark.parametrize("mode", ["standard", "personalized", "weighted"])
+def test_pagerank_standard_resume(spark, tmp_path, mode):
+    from fog_spark.algorithms.pagerank import pagerank_personalized, pagerank_standard, pagerank_weighted
 
     g = GRAPHS["g_er_n100"]
     edges = graph_to_spark(spark, g)
     vertices = spark.range(g.n).select("id")
+    seeds = spark.createDataFrame([(0,), (7,)], "id long")
+    run = {
+        "standard": lambda **kw: pagerank_standard(edges, vertices, **kw),
+        "personalized": lambda **kw: pagerank_personalized(edges, seeds, vertices, **kw),
+        "weighted": lambda **kw: pagerank_weighted(edges, vertices, **kw),
+    }[mode]
     ctx0 = RunContext(spark, str(tmp_path), "stdClean")
-    clean_df, clean_iters = pagerank_standard(edges, vertices, tol=1e-6, ctx=ctx0)
+    clean_df, clean_iters = run(tol=1e-6, ctx=ctx0)
     clean = {r["id"]: r["rank"] for r in clean_df.collect()}
 
     ctx1 = RunContext(spark, str(tmp_path), "stdResume")
-    pagerank_standard(edges, vertices, tol=1e-6, max_iters=2, ctx=ctx1)  # crash mid-run
+    run(tol=1e-6, max_iters=2, ctx=ctx1)  # crash mid-run
     ctx2 = RunContext(spark, str(tmp_path), "stdResume")
-    res_df, total_iters = pagerank_standard(edges, vertices, tol=1e-6, ctx=ctx2)
+    res_df, total_iters = run(tol=1e-6, ctx=ctx2)
     resumed = {r["id"]: r["rank"] for r in res_df.collect()}
     assert total_iters == clean_iters
     assert resumed == clean  # same per-superstep plans -> bit-identical
 
     # resuming a CONVERGED run is a no-op returning the final state
     ctx3 = RunContext(spark, str(tmp_path), "stdResume")
-    again_df, again_iters = pagerank_standard(edges, vertices, tol=1e-6, ctx=ctx3)
+    again_df, again_iters = run(tol=1e-6, ctx=ctx3)
     assert again_iters == total_iters
     assert {r["id"]: r["rank"] for r in again_df.collect()} == clean
 

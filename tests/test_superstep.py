@@ -1,5 +1,6 @@
-"""Shared superstep machinery: observed single-action supersteps, and the
-default-vertex-set loop preambles on hub-heavy fixtures vs the oracles."""
+"""Shared superstep machinery: observed single-action supersteps, the
+default-vertex-set loop preambles on hub-heavy fixtures vs the oracles,
+and the graph edge cases every loop algorithm must handle."""
 
 import numpy as np
 import pytest
@@ -9,10 +10,15 @@ from fog_spark import oracles
 from fog_spark.algorithms.bfs import bfs_levels
 from fog_spark.algorithms.cc import connected_components
 from fog_spark.algorithms.lpa import label_propagation
-from fog_spark.algorithms.pagerank import pagerank_fog, pagerank_standard
+from fog_spark.algorithms.pagerank import (
+    pagerank_fog,
+    pagerank_personalized,
+    pagerank_standard,
+    pagerank_weighted,
+)
 from fog_spark.algorithms.sssp import sssp
 from fog_spark.engine.superstep import active_metric, materialize_observed
-from fog_spark.fixtures import graph_to_spark, named_graphs
+from fog_spark.fixtures import Graph, graph_to_spark, named_graphs
 
 GRAPHS = named_graphs()
 
@@ -60,6 +66,73 @@ def test_default_vertex_set_matches_oracle(spark, case):
         assert np.allclose(got, want, atol=1e-6)
 
 
+# edge case -> (graph, pass ids 0..n-1 as `vertices`). Ids are 0..n-1
+# either way, so the oracles' vertex set is the algorithms' vertex set.
+EDGE_CASES = {
+    "duplicate_edges": (Graph("dup", np.array([[0, 1], [0, 1], [1, 2], [2, 0], [2, 3]]), 4), False),
+    "selfloop_only_vertex": (Graph("loop", np.array([[0, 1], [1, 2], [2, 0], [3, 3]]), 4), False),
+    "isolated_vertex": (Graph("iso", np.array([[0, 1], [1, 2], [2, 0]]), 4), True),
+    "empty_graph": (Graph("empty", np.zeros((0, 2), dtype=np.int64), 0), False),
+}
+
+# loop algorithm -> (run(spark, edges, vertices) -> (rows, iterations or
+# None), {output column: oracle(graph) -> (per-id values, iterations)})
+LOOPS = {
+    "pagerank_fog": (
+        lambda s, e, v: (pagerank_fog(e, v), None),
+        {"rank": lambda g: (oracles.pagerank_fog(g.edges, g.n), None)},
+    ),
+    "pagerank_standard": (
+        lambda s, e, v: pagerank_standard(e, v),
+        {"rank": lambda g: oracles.pagerank_standard(g.edges, g.n)},
+    ),
+    "pagerank_personalized": (
+        lambda s, e, v: pagerank_personalized(e, s.createDataFrame([(0,)], "id long"), v),
+        {"rank": lambda g: oracles.pagerank_personalized(g.edges, g.n, [0])},
+    ),
+    "pagerank_weighted": (
+        lambda s, e, v: pagerank_weighted(e, v),
+        {"rank": lambda g: oracles.pagerank_weighted(g.edges, g.weights(), g.n)},
+    ),
+    "cc": (
+        lambda s, e, v: (connected_components(e, v), None),
+        {"component": lambda g: (oracles.wcc(g.edges, g.n), None)},
+    ),
+    "bfs": (lambda s, e, v: (bfs_levels(e, 0, v), None), {"level": lambda g: (oracles.bfs(g.edges, g.n, 0), None)}),
+    "sssp": (
+        lambda s, e, v: (sssp(e, 0, v), None),
+        {
+            "dist": lambda g: (oracles.sssp_fog(g.edges, g.weights(), g.n, 0)[0], None),
+            "pred": lambda g: (oracles.sssp_fog(g.edges, g.weights(), g.n, 0)[1], None),
+        },
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(EDGE_CASES))
+@pytest.mark.parametrize("algo", list(LOOPS))
+def test_loop_edge_cases(spark, algo, case):
+    g, pass_vertices = EDGE_CASES[case]
+    run, columns = LOOPS[algo]
+    edges = spark.createDataFrame(g.to_pandas(), "src long, dst long, weight double")
+    vertices = spark.range(g.n).select("id") if pass_vertices else None
+    out, iters = run(spark, edges, vertices)
+    rows = out.collect()
+    if g.n == 0:
+        assert rows == []
+        assert iters in (None, 0)
+        return
+    assert sorted(r["id"] for r in rows) == list(range(g.n))
+    for col, oracle in columns.items():
+        want, want_iters = oracle(g)
+        got = [r[col] for r in sorted(rows, key=lambda r: r["id"])]
+        if col == "rank":
+            assert np.allclose(got, want, rtol=1e-9, atol=1e-12)
+        else:
+            assert got == np.asarray(want).tolist()
+        assert iters == want_iters
+
+
 def test_materialize_observed_matches_filter_count(spark):
     df = spark.range(500).select("id", (F.col("id") % 7 == 0).alias("changed"))
     out, om = materialize_observed(df, [active_metric()])
@@ -69,7 +142,7 @@ def test_materialize_observed_matches_filter_count(spark):
 def test_observe_saves_one_action_per_superstep(spark, monkeypatch):
     """The observed superstep must launch strictly fewer Spark jobs than
     the legacy materialize-then-count pattern on the same input."""
-    import fog_spark.algorithms.bfs as bfs_mod
+    import fog_spark.algorithms.cc as loop_mod  # owns the MIN-frontier loop bfs runs on
     from fog_spark.engine.superstep import materialize
 
     sc = spark.sparkContext
@@ -89,7 +162,7 @@ def test_observe_saves_one_action_per_superstep(spark, monkeypatch):
         out = materialize(df, ctx, step, name)
         return out, {"active": out.filter("changed").count()}
 
-    monkeypatch.setattr(bfs_mod, "materialize_observed", legacy_materialize_observed)
+    monkeypatch.setattr(loop_mod, "materialize_observed", legacy_materialize_observed)
     legacy = count_jobs("legacy-run", lambda: bfs_levels(line, root=0).count())
     assert observed < legacy, f"observed={observed} jobs should beat legacy={legacy}"
 

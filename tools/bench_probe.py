@@ -76,41 +76,6 @@ def probe_pagerank_fog(spark):
         t.dump(f"fog10 rep{rep}")
 
 
-def probe_pagerank_fog_steps(spark):
-    """Manual unroll of pagerank_fog's phases with timers."""
-    from fog_spark.algorithms.pagerank import _outdegrees
-    from fog_spark.engine.superstep import materialize, maybe_broadcast, prepare_gather_edges
-
-    edges = _edges(spark)
-    for rep in range(2):
-        t = T()
-        state = materialize(_outdegrees(edges, None).withColumn("rank", F.lit(1.0)))
-        t.mark("init+materialize")
-        n = state.count()
-        t.mark("count")
-        m = int(state.agg(F.sum("outdeg")).collect()[0][0] or 0)
-        t.mark("m agg")
-        prepared = prepare_gather_edges(edges, n, m_edges=m, expected_iters=10)
-        t.mark("prepare_gather_edges")
-        d = 0.85
-        for step in range(1, 11):
-            msg = (d * F.col("rank") / F.col("outdeg") + (1.0 - d)).alias("msg")
-            st = maybe_broadcast(state, n)
-            msgs = prepared.join(st, prepared["src"] == st["id"]).select(prepared["dst"], msg)
-            agg = msgs.groupBy("dst").agg(F.sum("msg").alias("incoming"))
-            state = (
-                state.join(maybe_broadcast(agg, n), state["id"] == agg["dst"], "left")
-                .select("id", "outdeg", (F.col("rank") + F.coalesce("incoming", F.lit(0.0))).alias("rank"))
-            )
-            state = materialize(state)
-            t.mark(f"superstep {step}")
-        state.count()
-        t.mark("final count")
-        if prepared is not edges:
-            prepared.unpersist()
-        t.dump(f"fog10-unrolled rep{rep}")
-
-
 def probe_triangles(spark):
     from fog_spark.algorithms import triangles as tr
 
@@ -233,7 +198,6 @@ def probe_minhash(spark):
 
 PROBES = {
     "pagerank_fog": probe_pagerank_fog,
-    "pagerank_fog_steps": probe_pagerank_fog_steps,
     "pagerank_std": probe_pagerank_std,
     "cc": probe_cc,
     "lpa": probe_lpa,
