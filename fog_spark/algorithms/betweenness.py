@@ -141,8 +141,9 @@ def betweenness_sampled(
                 .alias("delta"),
             )
         )
-        # ctx step numbering continues past the forward phase so a
-        # resumed run replays only the remaining backward levels
+        # ctx step numbering continues past the forward phase so the
+        # backward snapshots and records never overwrite the forward
+        # ones (this function does not resume)
         bstep = depth + (depth - lev)
         deltas = materialize(deltas, ctx, bstep)
         if ctx is not None:

@@ -1,10 +1,16 @@
-"""BFS levels — a vertex program over cc.min_frontier_loop (TARGET engine).
+"""BFS levels and multi-root reachability — vertex programs over
+cc.min_frontier_loop (TARGET engine).
 
 Reference semantics (application/bfs.hpp:38-100): level(root)=0, all
 others the u32 sentinel 4294967295; scatter level+1 along out-edges
 (self-loops skipped, fogsrc/cpu_thread.cpp:236-240); gather = MIN;
 re-activate improved vertices; stop on empty frontier. Default root 0
 (headers/options_utils.h:45-46).
+
+``reachable_set`` is BFS minus the levels: every seed starts at 0 and
+scatters its value unchanged, so a vertex drops to 0 once any seed
+reaches it. scc and bowtie run it; it lives here because bowtie
+imports scc.
 """
 
 from __future__ import annotations
@@ -37,3 +43,22 @@ def bfs_levels(
     )
     state = min_frontier_loop(fwd, state, "level", F.col("level") + 1, ctx, max_iters, active0=1)
     return state.select("id", "level")
+
+
+def reachable_set(
+    edges: DataFrame,
+    seeds: DataFrame,
+    vertices: DataFrame,
+    max_iters: int = 10_000,
+) -> DataFrame:
+    """(id) of every vertex in ``vertices`` reachable from the ``seeds``
+    ids along directed ``edges``, seeds included."""
+    seed_ids = seeds.select("id").distinct().withColumn("seed", F.lit(True))
+    seeded = F.coalesce("seed", F.lit(False))
+    state = vertices.select("id").join(seed_ids, "id", "left").select(
+        "id",
+        F.when(seeded, F.lit(0)).otherwise(F.lit(UNREACHED)).cast("long").alias("r"),
+        seeded.alias("changed"),
+    )
+    state = min_frontier_loop(edges.select("src", "dst"), state, "r", F.col("r"), None, max_iters)
+    return state.filter(F.col("r") == 0).select("id")

@@ -14,74 +14,28 @@ the composition, Spark-first:
 1. ``strongly_connected_components`` -> per-vertex component labels;
    the CORE is the largest component (ties: smallest label), a single
    1-row driver aggregate.
-2. Four boolean-flag reachability fixed points (visited-OR gather —
-   BFS minus the levels): forward/backward from CORE, forward from
-   IN, backward from OUT. A path IN -> CORE -> v puts v in OUT by
-   construction, so reachability over the FULL graph classifies the
-   remainder exactly as "via paths avoiding the core" — no subgraph
-   restriction needed.
+2. Four reachability fixed points (``bfs.reachable_set``, a vertex
+   program over cc.min_frontier_loop — BFS minus the levels):
+   forward/backward from CORE, forward from IN, backward from OUT.
+   A path IN -> CORE -> v puts v in OUT by construction, so
+   reachability over the FULL graph classifies the remainder exactly
+   as "via paths avoiding the core" — no subgraph restriction needed.
 3. One five-flag left-join cascade assigns regions.
 
 Every step is a frontier superstep (one Spark job each, observed
-active counts) over a shared persisted edge cache; nothing here is
-quadratic and no driver transfer exceeds one row.
+active counts) over the loop's gather-aligned edge cache; nothing here
+is quadratic and no driver transfer exceeds one row.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from fog_spark.algorithms.bfs import reachable_set
 from fog_spark.algorithms.scc import strongly_connected_components
-from fog_spark.engine.superstep import (
-    active_metric,
-    materialize,
-    materialize_observed,
-    vertices_of,
-    with_frontier_hint,
-)
+from fog_spark.engine.superstep import materialize, vertices_of
 
 REGIONS = ("CORE", "IN", "OUT", "TUBE", "TENDRIL", "DISC")
-
-
-def reachable_set(
-    edges: DataFrame,
-    seeds: DataFrame,
-    vertices: DataFrame,
-    max_iters: int = 10_000,
-) -> DataFrame:
-    """ids reachable from the seed set along directed edges, seeds
-    included — a visited-flag frontier fixed point (TARGET engine
-    pattern, one observed job per superstep).
-
-    ``edges`` must already be lineage-cut/persisted by the caller:
-    this runs up to diameter supersteps and re-reads the edge frame in
-    every one of them.
-    """
-    seed_ids = seeds.select("id").distinct().withColumn("s", F.lit(True))
-    state = vertices.join(seed_ids, "id", "left").select(
-        "id",
-        F.coalesce("s", F.lit(False)).alias("vis"),
-        F.coalesce("s", F.lit(False)).alias("changed"),
-    )
-    state, om = materialize_observed(state, [active_metric()])
-    active = int(om["active"] or 0)
-    for _ in range(max_iters):
-        if active == 0:
-            break
-        frontier = with_frontier_hint(state.filter("changed").select("id"), active)
-        msgs = (
-            edges.join(frontier, edges["src"] == frontier["id"])
-            .select(edges["dst"].alias("mid"))
-            .distinct()
-        )
-        state = state.join(msgs, state["id"] == msgs["mid"], "left").select(
-            "id",
-            (F.col("vis") | F.col("mid").isNotNull()).alias("vis"),
-            (~F.col("vis") & F.col("mid").isNotNull()).alias("changed"),
-        )
-        state, om = materialize_observed(state, [active_metric()])
-        active = int(om["active"] or 0)
-    return state.filter("vis").select("id")
 
 
 def _flag(ids: DataFrame, name: str) -> DataFrame:
@@ -107,6 +61,8 @@ def bowtie_decomposition(
         .limit(1)
         .collect()
     )
+    if not core_row:  # empty vertex set: no core, no regions
+        return vertices.select("id", F.lit(None).cast("string").alias("region"))
     core_lbl = core_row[0]["component"]
     core = materialize(scc.filter(F.col("component") == F.lit(core_lbl)).select("id"))
 

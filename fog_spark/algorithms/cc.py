@@ -1,5 +1,6 @@
 """Connected components by hash-min label propagation (WCC), and the
-MIN-frontier superstep loop it shares with bfs and sssp.
+MIN-frontier superstep loop it shares with bfs, sssp, scc, bowtie and
+dag.
 
 ``min_frontier_loop`` is the TARGET-engine loop
 (fogsrc/fog_engine.cpp:159-209): only changed vertices scatter, the
@@ -7,9 +8,10 @@ gather is MIN, improved vertices re-activate, and the run stops when
 the frontier empties. It owns resume, the step-0 cut, the |V| and
 active counts, the frontier broadcast hint, the fan-out-guarded merge,
 the active count observed on the cut itself (one Spark job per
-superstep) and the commit. cc, bfs and sssp supply only their vertex
-programs: the initial state, the scatter message and, for sssp, the
-merge.
+superstep) and the commit. cc, bfs (and its multi-root
+``reachable_set``), sssp, scc's forward pass and dag's longest-path
+levels supply only their vertex programs: the initial state, the
+scatter message and, for sssp, the merge.
 
 WCC reference semantics (SURVEY §2.8, application/cc.hpp:36-133):
 labels start as own id; rounds alternate a forward pass over out-edges
@@ -28,8 +30,8 @@ import time
 from pyspark.sql import Column, DataFrame, functions as F
 
 # The loop lives here, not in engine/: perfbench/tracing.py finds
-# supersteps by wrapping these names on this module (bfs and sssp
-# import the loop from here).
+# supersteps by wrapping these names on this module (the other
+# MIN-frontier programs import the loop from here).
 from fog_spark.engine.superstep import (
     active_metric,
     materialize,

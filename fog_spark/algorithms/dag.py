@@ -12,28 +12,24 @@ longest path —
 
 Level k is the k-th parallel build wave; max(level) is the critical
 path. Not an app in FOG (fogsrc/main.cpp:51-135 lists its programs);
-it composes the engine's SCC with a MAX-relaxation superstep loop (the
-structural twin of BFS's MIN gather, A3 in SURVEY §2.5).
+it composes the engine's SCC with a longest-path relaxation, run as a
+vertex program over cc.min_frontier_loop on neg = -level (MAX is MIN
+negated: BFS's gather, A3 in SURVEY §2.5).
 
 Scale shape: condensation is two keyed joins + one distinct, all keyed
-by vertex/component id. Each level round is one gather join + a
-groupBy-max + a left-outer merge over |C| component rows; convergence
-(no level grew) rides the materialize job as an observed metric — one
-Spark job per round. Round count = critical-path length of the
-condensation, not |V|. The loop raises if rounds exceed |C| (a cycle
-in `components`, i.e. a non-SCC labeling was passed).
+by vertex/component id. Each level round is one frontier superstep over
+the |C| component rows, one Spark job with the active count observed.
+Round count = critical-path length of the condensation, not |V|. A
+frontier still live after |C| supersteps means a cycle in
+`components` (a non-SCC labeling was passed), which raises.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.engine.superstep import (
-    active_metric,
-    materialize,
-    materialize_observed,
-    maybe_broadcast,
-)
+from fog_spark.algorithms.cc import min_frontier_loop
+from fog_spark.engine.superstep import materialize
 
 
 def condensation(edges: DataFrame, components: DataFrame) -> DataFrame:
@@ -65,56 +61,29 @@ def topo_levels(
 
     ``components`` defaults to the engine's convergent SCC labeling;
     pass a precomputed (id, component) frame to reuse one. Runs the
-    MAX-relaxation to its fixed point (level growth is monotone and
+    relaxation to its fixed point (level growth is monotone and
     bounded by the critical path, so termination is guaranteed on a
     true condensation; a cyclic labeling is detected and raised).
+    ``ctx`` commits every superstep and resumes a run dir.
     """
     if components is None:
         from fog_spark.algorithms.scc import strongly_connected_components
 
         components = strongly_connected_components(edges).select("id", "component")
     comp = materialize(components)
-    cedges = materialize(condensation(edges, comp)).persist()
-
-    state = comp.select(F.col("component").alias("c")).distinct().select(
-        "c", F.lit(0).cast("long").alias("level")
+    cedges = materialize(condensation(edges, comp))
+    # longest path = MIN over neg = -level: a source sends neg - 1 to
+    # its successors
+    state = comp.select(F.col("component").alias("id")).distinct().select(
+        "id", F.lit(0).cast("long").alias("neg"), F.lit(True).alias("changed")
     )
-    n_comp = state.count()  # one scan; also sizes the broadcast hint
-    state = materialize(state)
-
-    rounds = 0
-    while True:
-        rounds += 1
-        if rounds > n_comp + 1:
-            raise ValueError(
-                "topo_levels did not converge within |C| rounds — "
-                "`components` is not an SCC labeling (condensation has a cycle)"
-            )
-        upd = (
-            cedges.join(
-                maybe_broadcast(state.select(F.col("c").alias("src"), "level"), n_comp),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("c"))
-            .agg((F.max("level") + 1).alias("m"))
+    n_comp = state.count()
+    state = min_frontier_loop(cedges, state, "neg", F.col("neg") - 1, ctx, n_comp)
+    # a true condensation settles within |C| supersteps
+    if not state.filter("changed").isEmpty():
+        raise ValueError(
+            "topo_levels did not converge within |C| rounds — "
+            "`components` is not an SCC labeling (condensation has a cycle)"
         )
-        nxt = (
-            state.join(upd, "c", "left")
-            .select(
-                "c",
-                F.greatest("level", F.coalesce("m", F.col("level"))).alias("level"),
-                (F.coalesce("m", F.lit(0)) > F.col("level")).alias("changed"),
-            )
-        )
-        nxt, metrics = materialize_observed(
-            nxt.select("c", "level", "changed"), [active_metric()], ctx, rounds
-        )
-        state = nxt.select("c", "level")
-        if metrics["active"] == 0:
-            break
-
-    out = comp.join(
-        state.select(F.col("c").alias("component"), "level"), "component"
-    ).select("id", "component", "level")
-    cedges.unpersist()
-    return out
+    levels = state.select(F.col("id").alias("component"), (-F.col("neg")).alias("level"))
+    return comp.join(levels, "component").select("id", "component", "level")

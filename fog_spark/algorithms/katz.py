@@ -8,9 +8,10 @@ the PageRank family (algorithms/pagerank.py) replaces with degree
 normalization. Convergence needs alpha < 1/lambda_max; callers pick a
 conservative alpha (default 0.1) or a fixed depth.
 
-Scale shape is exactly PageRank's: one scatter join + one (dst, sum)
-gather + one materialize per round, metrics riding the materialize as
-observed aggregates — no extra driver jobs, no normalization scalar.
+Scale shape is exactly PageRank's — it is a vertex program over
+pagerank._power_iterate: one scatter join + one (dst, sum) gather + one
+cut per round, no normalization scalar. The state (and a ``ctx``
+snapshot) carries x as ``rank``.
 
 Not in FOG (its apps stop at PageRank/SpMV, fogsrc/main.cpp:51-135);
 Katz completes the centrality family next to HITS/SALSA/betweenness.
@@ -18,16 +19,10 @@ Katz completes the centrality family next to HITS/SALSA/betweenness.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.engine.superstep import (
-    materialize,
-    materialize_observed,
-    maybe_broadcast,
-    vertices_of,
-)
+from fog_spark.algorithms.pagerank import _power_iterate, _resume
+from fog_spark.engine.superstep import materialize, vertices_of
 
 
 def katz(
@@ -41,36 +36,15 @@ def katz(
     (duplicate edges are collapsed; self-loops kept, as in the
     reference's GLOBAL-mode semantics, SURVEY §2.2 F2)."""
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
-    verts = vertices_of(e).localCheckpoint(eager=False)
-    n = verts.count()
-
-    state = verts.select("id", F.lit(0.0).alias("katz"))
-    start = 0
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(niters)
-        if rp is not None:
-            start, state = rp
-    if start == 0:
-        state = materialize(state, ctx, 0)
-
-    for it in range(start + 1, niters + 1):
-        t0 = time.time()
-        st = maybe_broadcast(state, n)
-        msg = e.join(st, e["src"] == st["id"]).select(
-            e["dst"].alias("mid"), F.col("katz").alias("m")
-        )
-        agg = msg.groupBy("mid").agg(F.sum("m").alias("s"))
-        # x_{k+1} = alpha * (sum of in-neighbor x_k) + beta
-        nxt = (
-            state.select("id")
-            .join(maybe_broadcast(agg, n), state["id"] == F.col("mid"), "left")
-            .select(
-                "id",
-                (F.lit(alpha) * F.coalesce("s", F.lit(0.0)) + F.lit(beta)).alias("katz"),
-            )
-        )
-        state, om = materialize_observed(nxt, [F.sum("katz").alias("mass")], ctx, it)
-        if ctx is not None:
-            ctx.commit(it, active=n, delta=float(om["mass"] or 0.0),
-                       wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-    return state.select("id", "katz")
+    start, state, _ = _resume(ctx, niters)
+    if state is None:
+        state = materialize(vertices_of(e).select("id", F.lit(0.0).alias("rank")), ctx, 0)
+    n = state.count()
+    # x_{k+1} = alpha * (sum of in-neighbor x_k) + beta
+    x, _ = _power_iterate(
+        e, state, n, start, niters, ctx,
+        msg=F.col("rank"),
+        rank=lambda _: alpha * F.coalesce("incoming", F.lit(0.0)) + beta,
+        carry=(),
+    )
+    return x.select("id", F.col("rank").alias("katz"))

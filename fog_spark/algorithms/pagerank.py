@@ -6,6 +6,7 @@ the commit and the stop rule. ``_resume`` picks up a ``RunContext`` run.
 Each public function supplies only its vertex program: the initial
 state, the scatter message, the new-rank expression and, for the
 convergent modes, the dangling predicate and the ``tol`` stop rule.
+``katz.katz`` runs on the same loop.
 
 - **FOG mode** (the correctness oracle): the reference's exact —
   non-standard — recurrence, traced in SURVEY §2.8 from

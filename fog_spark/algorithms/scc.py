@@ -11,16 +11,18 @@ outer round (on the still-unassigned subgraph):
      singleton SCCs (iterate until none — a strict superset of FOG's
      one-shot init trim, same fixed point).
   2. FORWARD: hash-min labels along out-edges to fixed point;
-     fwd(v) = min id that reaches v.
+     fwd(v) = min id that reaches v — a vertex program over
+     cc.min_frontier_loop (every vertex starts at its own id).
   3. BACKWARD: vertices whose own id equals their forward label are
      roots; confirmation propagates along REVERSED edges, but only
      across endpoints sharing the same forward label (scc.hpp:157-167's
-     "absorb iff update.root == prev_root" match-detect).
+     "absorb iff update.root == prev_root" match-detect) — a
+     bfs.reachable_set from the roots over those edges.
      Confirmed vertices form SCC(root); assign scc = fwd label.
   4. Remove assigned vertices; repeat.
 
 Labels are the min vertex id of each SCC — exact-match against the
-Tarjan oracle. Each outer round peels at least one SCC, and all inner
+Tarjan oracle. Each outer round peels at least one SCC, and both inner
 loops are frontier supersteps bounded by graph diameter.
 """
 
@@ -28,13 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.engine.superstep import (
-    active_metric,
-    materialize,
-    materialize_observed,
-    vertices_of,
-    with_frontier_hint,
-)
+from fog_spark.algorithms.bfs import reachable_set
+from fog_spark.algorithms.cc import min_frontier_loop
+from fog_spark.engine.superstep import materialize, materialize_observed, vertices_of
 
 
 def _mat_count(df: DataFrame) -> tuple[DataFrame, int]:
@@ -46,36 +44,12 @@ def _mat_count(df: DataFrame) -> tuple[DataFrame, int]:
     return out, int(om["n"] or 0)
 
 
-def _hash_min_fixed_point(edges: DataFrame, vertices: DataFrame, max_iters: int = 500) -> DataFrame:
-    """fwd(v) = min vertex id reaching v along directed edges (incl. itself)."""
-    state = vertices.select("id", F.col("id").alias("lbl"), F.lit(True).alias("changed"))
-    state, active = _mat_count(state)
-    for _ in range(max_iters):
-        if active == 0:
-            break
-        frontier = with_frontier_hint(state.filter("changed").select("id", "lbl"), active)
-        agg = (
-            edges.join(frontier, edges["src"] == frontier["id"])
-            .groupBy("dst")
-            .agg(F.min("lbl").alias("cand"))
-        )
-        state = state.join(agg, state["id"] == agg["dst"], "left").select(
-            "id",
-            F.least("lbl", F.coalesce("cand", F.col("lbl"))).alias("lbl"),
-            (F.coalesce("cand", F.col("lbl")) < F.col("lbl")).alias("changed"),
-        )
-        state, om = materialize_observed(state, [active_metric()])
-        active = int(om["active"] or 0)
-    return state.select("id", "lbl")
-
-
 def strongly_connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_outer: int = 100,
 ) -> DataFrame:
     """Returns (id, component) with component = min id of the SCC. Exact."""
-    spark = edges.sparkSession
     vertices = vertices if vertices is not None else vertices_of(edges)
     e = edges.filter(F.col("src") != F.col("dst")).select("src", "dst")
 
@@ -111,43 +85,22 @@ def strongly_connected_components(
         if n_rem == 0:
             break
 
-        # 2. forward hash-min to fixed point on the trimmed subgraph
-        fwd = _hash_min_fixed_point(sub, remaining)
+        # 2. forward: fwd(v) = min id reaching v (incl. itself)
+        lbl = remaining.select("id", F.col("id").alias("lbl"), F.lit(True).alias("changed"))
+        fwd = min_frontier_loop(sub, lbl, "lbl", F.col("lbl"), None, 500)
 
-        # 3. backward confirmation within equal-label islands
+        # 3. backward: reach from the roots along reversed edges whose
+        # endpoints share a forward label
         rev = sub.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         lbl_src = fwd.select(F.col("id").alias("src"), F.col("lbl").alias("ls"))
         lbl_dst = fwd.select(F.col("id").alias("dst"), F.col("lbl").alias("ld"))
         rev_same = materialize(
             rev.join(lbl_src, "src").join(lbl_dst, "dst").filter("ls = ld").select("src", "dst")
         )
-        conf = fwd.select(
-            "id", "lbl",
-            (F.col("id") == F.col("lbl")).alias("confirmed"),
-            (F.col("id") == F.col("lbl")).alias("is_new"),
+        conf = reachable_set(rev_same, fwd.filter(F.col("id") == F.col("lbl")), remaining)
+        done = materialize(
+            fwd.join(conf, "id", "left_semi").select("id", F.col("lbl").alias("component"))
         )
-        conf, om = materialize_observed(conf, [active_metric("is_new")])
-        frontier_n = int(om["active"] or 0)
-        while frontier_n > 0:
-            # ONE materialized job per wave: the next frontier (is_new)
-            # and its size ride the same frame/observation as the
-            # confirmed update, instead of a second count job
-            fr = with_frontier_hint(
-                conf.filter("is_new").select(F.col("id").alias("src")), frontier_n
-            )
-            reached = rev_same.join(fr, "src", "left_semi").select(F.col("dst").alias("id")).distinct()
-            conf = conf.join(
-                reached.withColumn("c2", F.lit(True)), "id", "left"
-            ).select(
-                "id", "lbl",
-                (F.col("confirmed") | F.coalesce("c2", F.lit(False))).alias("confirmed"),
-                (~F.col("confirmed") & F.coalesce("c2", F.lit(False))).alias("is_new"),
-            )
-            conf, om = materialize_observed(conf, [active_metric("is_new")])
-            frontier_n = int(om["active"] or 0)
-
-        done = conf.filter("confirmed").select("id", F.col("lbl").alias("component"))
-        done = materialize(done)
         assigned_parts.append(done)
         remaining, n_rem = _mat_count(remaining.join(done, "id", "left_anti"))
 

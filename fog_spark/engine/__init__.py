@@ -1,6 +1,5 @@
 from fog_spark.engine.superstep import (  # noqa: F401
     materialize,
-    prepare_edges,
     vertices_of,
 )
 from fog_spark.engine.checkpoint import RunContext  # noqa: F401

@@ -15,9 +15,10 @@ Physical notes (the part FOG does by hand that Spark gives us):
   combine, cpu_thread.cpp:295-306). Spark's partial hash aggregation is
   a strict improvement we get for free — the shuffle carries one partial
   per (map partition, dst), not one row per edge.
-- Pre-shuffling the edge table once by join key and caching it
-  (``prepare_edges``) keeps the big side of the scatter join exchange-free
-  across all supersteps: only the small state/frontier side moves.
+- Pre-shuffling the edge table once by the gather key and caching it
+  (``prepare_gather_edges``) keeps the big side of the superstep
+  exchange-free across all supersteps: only the small state/frontier
+  side moves.
 - Iterative plans MUST cut lineage every superstep (``materialize``) or
   the logical plan doubles per iteration and the driver melts.
 """
@@ -70,20 +71,6 @@ def merge_join(state: DataFrame, agg: DataFrame, cond, est_rows: int | None) -> 
     return state.join(agg.hint("shuffle_hash"), cond, "left")
 
 
-def prepare_edges(edges: DataFrame, key: str = "src", partitions: int | None = None) -> DataFrame:
-    """Hash-partition the edge table by the scatter join key and cache it.
-
-    At cluster scale this is the moral equivalent of bucketing the edges
-    table: every superstep's state⨝edges sort-merge join then reuses the
-    cached partitioning and only exchanges the (much smaller) state side.
-    """
-    spark = edges.sparkSession
-    n = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    out = edges.repartition(n, key).persist()
-    out.count()  # materialize the cache eagerly
-    return out
-
-
 def prepare_gather_edges(
     edges: DataFrame,
     n_state: int | None,
@@ -102,10 +89,8 @@ def prepare_gather_edges(
       exchanges (measured 3x per-superstep on LPA at sf0.1).
     - **big-state or unamortizable**: return the input UNCHANGED — the
       scatter join broadcasts the state (or shuffles it to the edges),
-      exactly the pre-alignment plan. (Callers that want src-bucketing
-      for the big-state sort-merge regime call ``prepare_edges``
-      themselves — re-exchanging an input the caller may already have
-      partitioned would pay |E| for nothing.)
+      exactly the pre-alignment plan. (Re-exchanging an input the
+      caller may already have partitioned would pay |E| for nothing.)
 
     Hub keys need no special path: map-side partial aggregation sends
     at most one partial per (map partition, dst) to the reducer, and AQE

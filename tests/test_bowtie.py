@@ -57,3 +57,8 @@ def test_reachable_set_basic(spark):
     seeds = spark.createDataFrame([(0,)], ["id"])
     got = {r["id"] for r in reachable_set(edges, seeds, verts).collect()}
     assert got == {0, 1, 2}
+
+
+def test_bowtie_empty_graph(spark):
+    empty = spark.createDataFrame([], "src long, dst long, weight double")
+    assert bowtie_decomposition(empty).collect() == []

@@ -89,3 +89,24 @@ def test_cyclic_labeling_raises(spark):
     )
     with pytest.raises(ValueError, match="cycle"):
         topo_levels(e, components=bogus)
+
+
+def test_topo_levels_commits_and_resumes(spark, tmp_path):
+    """A ctx run commits one metric record per superstep (the level
+    waves plus the final quiet one), and a second call on the same run
+    dir resumes from the last record to the same levels."""
+    from fog_spark.engine.checkpoint import RunContext
+
+    g = GRAPHS["g_plaw_n1000"]
+    e = graph_to_spark(spark, g)
+    ctx = RunContext(spark, str(tmp_path), "dag")
+    first = {r["id"]: (r["component"], r["level"]) for r in topo_levels(e, ctx=ctx).collect()}
+    assert first == np_topo_levels(g.edges, g.n)
+    max_level = max(level for _, level in first.values())
+    steps = [m["superstep"] for m in ctx.metrics()]
+    assert steps == list(range(1, max_level + 2))
+
+    ctx2 = RunContext(spark, str(tmp_path), "dag")
+    again = {r["id"]: (r["component"], r["level"]) for r in topo_levels(e, ctx=ctx2).collect()}
+    assert again == first
+    assert [m["superstep"] for m in ctx2.metrics()] == steps

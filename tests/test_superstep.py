@@ -16,6 +16,7 @@ from fog_spark.algorithms.pagerank import (
     pagerank_standard,
     pagerank_weighted,
 )
+from fog_spark.algorithms.scc import strongly_connected_components
 from fog_spark.algorithms.sssp import sssp
 from fog_spark.engine.superstep import active_metric, materialize_observed
 from fog_spark.fixtures import Graph, graph_to_spark, named_graphs
@@ -99,6 +100,10 @@ LOOPS = {
         {"component": lambda g: (oracles.wcc(g.edges, g.n), None)},
     ),
     "bfs": (lambda s, e, v: (bfs_levels(e, 0, v), None), {"level": lambda g: (oracles.bfs(g.edges, g.n, 0), None)}),
+    "scc": (
+        lambda s, e, v: (strongly_connected_components(e, v), None),
+        {"component": lambda g: (oracles.scc(g.edges, g.n), None)},
+    ),
     "sssp": (
         lambda s, e, v: (sssp(e, 0, v), None),
         {
