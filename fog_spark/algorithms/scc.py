@@ -44,6 +44,31 @@ def _mat_count(df: DataFrame) -> tuple[DataFrame, int]:
     return out, int(om["n"] or 0)
 
 
+def forward_backward(
+    edges: DataFrame,
+    vertices: DataFrame,
+    fwd_iters: int,
+    bwd_iters: int = 10_000,
+) -> tuple[DataFrame, DataFrame]:
+    """Steps 2 and 3 of one outer round on ``edges`` (no self-loops)
+    over ``vertices``, each capped at its own superstep count. Returns
+    (fwd(id, lbl), conf(id)): fwd(v) = min id reaching v (incl. itself),
+    conf = the vertices confirmed into SCC(fwd label)."""
+    lbl = vertices.select("id", F.col("id").alias("lbl"), F.lit(True).alias("changed"))
+    fwd = min_frontier_loop(edges, lbl, "lbl", F.col("lbl"), None, fwd_iters)
+
+    # reach from the roots along reversed edges whose endpoints share a
+    # forward label
+    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    lbl_src = fwd.select(F.col("id").alias("src"), F.col("lbl").alias("ls"))
+    lbl_dst = fwd.select(F.col("id").alias("dst"), F.col("lbl").alias("ld"))
+    rev_same = materialize(
+        rev.join(lbl_src, "src").join(lbl_dst, "dst").filter("ls = ld").select("src", "dst")
+    )
+    conf = reachable_set(rev_same, fwd.filter(F.col("id") == F.col("lbl")), vertices, bwd_iters)
+    return fwd.select("id", "lbl"), conf
+
+
 def strongly_connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -85,19 +110,8 @@ def strongly_connected_components(
         if n_rem == 0:
             break
 
-        # 2. forward: fwd(v) = min id reaching v (incl. itself)
-        lbl = remaining.select("id", F.col("id").alias("lbl"), F.lit(True).alias("changed"))
-        fwd = min_frontier_loop(sub, lbl, "lbl", F.col("lbl"), None, 500)
-
-        # 3. backward: reach from the roots along reversed edges whose
-        # endpoints share a forward label
-        rev = sub.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        lbl_src = fwd.select(F.col("id").alias("src"), F.col("lbl").alias("ls"))
-        lbl_dst = fwd.select(F.col("id").alias("dst"), F.col("lbl").alias("ld"))
-        rev_same = materialize(
-            rev.join(lbl_src, "src").join(lbl_dst, "dst").filter("ls = ld").select("src", "dst")
-        )
-        conf = reachable_set(rev_same, fwd.filter(F.col("id") == F.col("lbl")), remaining)
+        # 2. + 3. forward labels, backward confirmation
+        fwd, conf = forward_backward(sub, remaining, 500)
         done = materialize(
             fwd.join(conf, "id", "left_semi").select("id", F.col("lbl").alias("component"))
         )

@@ -9,11 +9,14 @@ semantics:
 
 The driver hashes values order-insensitively after sorting columns by
 name, so both sides alias every column identically and round every
-float at the same decimal place. Iterative algorithms are expressed as
-FIXED-round unrolled recursions (k rounds in the Spark loop == k
-chained CTEs in SQL) so the comparison never depends on convergence
+float at the same decimal place. Iterative algorithms run the engine's
+own superstep loop capped at k supersteps, against k chained CTEs of
+dense rounds in SQL, so the comparison never depends on convergence
 behavior; convergence-to-fixed-point is covered by the pytest oracle
-suite instead.
+suite instead. The two agree exactly: a frontier loop scatters only
+the vertices the last superstep changed, and an unchanged vertex has
+already delivered its value, so k frontier supersteps reach the state
+of k dense rounds.
 
 The link graph used by the graph queries is the part co-occurrence
 graph: parts appearing in the same order are connected (both
@@ -27,8 +30,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-
-from fog_spark.engine.superstep import materialize
 
 # ---------------------------------------------------------------------------
 # shared inputs
@@ -137,21 +138,13 @@ PR_ROUNDS = 3
 
 
 def q_pagerank_fog_k3(spark, sf_dir):
-    """FOG-mode accumulating PageRank, 3 fixed rounds (SURVEY §2.8)."""
+    """FOG-mode accumulating PageRank, 3 supersteps (SURVEY §2.8)."""
+    from fog_spark.algorithms.pagerank import pagerank_fog
+
     edges = cooccur_edges(spark, sf_dir).persist()
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("outdeg"))
-    state = deg.withColumn("rank", F.lit(1.0))
-    for _ in range(PR_ROUNDS):
-        msgs = edges.join(state, edges["src"] == state["id"]).select(
-            edges["dst"], (0.85 * F.col("rank") / F.col("outdeg") + 0.15).alias("m")
-        )
-        agg = msgs.groupBy("dst").agg(F.sum("m").alias("s"))
-        state = state.join(agg, state["id"] == agg["dst"], "left").select(
-            "id", "outdeg", (F.col("rank") + F.coalesce("s", F.lit(0.0))).alias("rank")
-        )
-        state = materialize(state)
+    ranks = pagerank_fog(edges, niters=PR_ROUNDS)
     edges.unpersist()
-    return state.select("id", F.round("rank", 5).alias("rank_r"))
+    return ranks.select("id", F.round("rank", 5).alias("rank_r"))
 
 
 def _sql_pagerank(k: int) -> str:
@@ -173,23 +166,15 @@ CC_ROUNDS = 12
 
 
 def q_cc_hashmin(spark, sf_dir):
-    """Hash-min connected components, 12 fixed rounds (converged at this
+    """Hash-min connected components, 12 supersteps (converged at this
     scale — tests assert the fixed point; the SQL mirror runs the same
     12 rounds so the comparison is convergence-independent)."""
+    from fog_spark.algorithms.cc import connected_components
+
     edges = cooccur_edges(spark, sf_dir).select("src", "dst").persist()
-    state = edges.select(F.col("src").alias("id")).distinct().withColumn("comp", F.col("id"))
-    for _ in range(CC_ROUNDS):
-        agg = (
-            edges.join(state, edges["src"] == state["id"])
-            .groupBy("dst")
-            .agg(F.min("comp").alias("mc"))
-        )
-        state = state.join(agg, state["id"] == agg["dst"], "left").select(
-            "id", F.least("comp", F.coalesce("mc", F.col("comp"))).alias("comp")
-        )
-        state = materialize(state)
+    comps = connected_components(edges, max_iters=CC_ROUNDS)
     edges.unpersist()
-    return state.select("id", F.col("comp").alias("component"))
+    return comps
 
 
 def _sql_cc(k: int) -> str:
@@ -207,27 +192,14 @@ LPA_ROUNDS = 2
 
 
 def q_lpa_k2(spark, sf_dir):
-    """Synchronous label propagation, 2 fixed rounds; mode gather with
+    """Synchronous label propagation, 2 supersteps; mode gather with
     smallest-label tie-break (SURVEY §2.8 LPA semantics)."""
+    from fog_spark.algorithms.lpa import label_propagation
+
     edges = cooccur_edges(spark, sf_dir).select("src", "dst").persist()
-    state = edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    for _ in range(LPA_ROUNDS):
-        counts = (
-            edges.join(state, edges["src"] == state["id"])
-            .groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        best = (
-            counts.groupBy("dst")
-            .agg(F.min(F.struct((-F.col("cnt")).alias("n"), F.col("label").alias("l"))).alias("b"))
-            .select("dst", F.col("b.l").alias("nl"))
-        )
-        state = state.join(best, state["id"] == best["dst"], "left").select(
-            "id", F.coalesce("nl", F.col("label")).alias("label")
-        )
-        state = materialize(state)
+    labels = label_propagation(edges, max_iters=LPA_ROUNDS)
     edges.unpersist()
-    return state.select("id", "label")
+    return labels
 
 
 def _lpa_ctes(k: int) -> list[str]:
@@ -355,27 +327,14 @@ BFS_SENTINEL = 4294967295  # application/bfs.hpp:48
 
 
 def q_bfs_k4(spark, sf_dir):
-    """BFS from the min vertex id, 4 fixed rounds, u32 sentinel."""
+    """BFS from the min vertex id, 4 supersteps, u32 sentinel."""
+    from fog_spark.algorithms.bfs import bfs_levels
+
     edges = cooccur_edges(spark, sf_dir).select("src", "dst").persist()
-    verts = edges.select(F.col("src").alias("id")).distinct()
-    root = verts.agg(F.min("id")).collect()[0][0]
-    state = verts.select(
-        "id",
-        F.when(F.col("id") == root, F.lit(0)).otherwise(F.lit(BFS_SENTINEL)).cast("long").alias("level"),
-    )
-    for _ in range(BFS_ROUNDS):
-        agg = (
-            edges.join(state, edges["src"] == state["id"])
-            .where(F.col("level") < BFS_SENTINEL)
-            .groupBy("dst")
-            .agg(F.min(F.col("level") + 1).alias("cand"))
-        )
-        state = state.join(agg, state["id"] == agg["dst"], "left").select(
-            "id", F.least("level", F.coalesce("cand", F.col("level"))).alias("level")
-        )
-        state = materialize(state)
+    root = edges.agg(F.min("src")).collect()[0][0]
+    levels = bfs_levels(edges, root=root, max_iters=BFS_ROUNDS)
     edges.unpersist()
-    return state.select("id", "level")
+    return levels
 
 
 def _sql_bfs(k: int) -> str:
@@ -399,27 +358,20 @@ SSSP_SENTINEL = 1.0e18
 
 
 def q_sssp_k4(spark, sf_dir):
-    """Bellman-Ford distances from min vertex, 4 fixed rounds, weighted."""
+    """Bellman-Ford distances from min vertex, 4 supersteps, weighted.
+
+    The engine's ε-guard rejects only float noise here: weights are
+    multiples of 0.1, so any real improvement exceeds EPS = 1e-3, and
+    the rounding removes the noise. Unreached (inf) reads as the
+    oracle's sentinel."""
+    from fog_spark.algorithms.sssp import sssp
+
     edges = cooccur_edges(spark, sf_dir).persist()
-    verts = edges.select(F.col("src").alias("id")).distinct()
-    root = verts.agg(F.min("id")).collect()[0][0]
-    state = verts.select(
-        "id",
-        F.when(F.col("id") == root, F.lit(0.0)).otherwise(F.lit(SSSP_SENTINEL)).alias("dist"),
-    )
-    for _ in range(SSSP_ROUNDS):
-        agg = (
-            edges.join(state, edges["src"] == state["id"])
-            .where(F.col("dist") < 1.0e17)
-            .groupBy("dst")
-            .agg(F.min(F.col("dist") + F.col("weight")).alias("cand"))
-        )
-        state = state.join(agg, state["id"] == agg["dst"], "left").select(
-            "id", F.least("dist", F.coalesce("cand", F.col("dist"))).alias("dist")
-        )
-        state = materialize(state)
+    root = edges.agg(F.min("src")).collect()[0][0]
+    out = sssp(edges, source=root, max_iters=SSSP_ROUNDS)
     edges.unpersist()
-    return state.select("id", F.round("dist", 4).alias("dist_r"))
+    dist = F.when(F.col("dist") == float("inf"), F.lit(SSSP_SENTINEL)).otherwise(F.col("dist"))
+    return out.select("id", F.round(dist, 4).alias("dist_r"))
 
 
 def _sql_sssp(k: int) -> str:
@@ -1200,7 +1152,8 @@ SCC_BWD_ROUNDS = 6
 
 
 def q_scc_fwbw_k6(spark, sf_dir):
-    """SCC by one FW-BW coloring round, fixed supersteps (SURVEY §2.8 A6/A7,
+    """SCC by one FW-BW coloring round — the library SCC's own round,
+    scc.forward_backward — capped at 6 + 6 supersteps (SURVEY §2.8 A6/A7,
     reference application/scc.hpp:22-207 semantics):
 
     - FORWARD (k=6): hash-min label along out-edges — fwd(v) = min id
@@ -1214,45 +1167,14 @@ def q_scc_fwbw_k6(spark, sf_dir):
       round; full fixed-point peeling is pytest-oracled vs Tarjan in
       tests/test_scc.py on the library implementation).
     """
-    edges = directed_edges(spark, sf_dir).persist()
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    state = verts.select("id", F.col("id").alias("lbl"))
-    for _ in range(SCC_FWD_ROUNDS):
-        agg = (
-            edges.join(state, edges["src"] == state["id"])
-            .groupBy("dst")
-            .agg(F.min("lbl").alias("m"))
-        )
-        state = state.join(agg, state["id"] == agg["dst"], "left").select(
-            "id", F.least("lbl", F.coalesce("m", F.col("lbl"))).alias("lbl")
-        )
-        state = materialize(state)
+    from fog_spark.algorithms.scc import forward_backward
+    from fog_spark.engine.superstep import vertices_of
 
-    ls = state.select(F.col("id").alias("src"), F.col("lbl").alias("ls"))
-    ld = state.select(F.col("id").alias("dst"), F.col("lbl").alias("ld"))
-    rev_same = (
-        edges.join(ls, "src").join(ld, "dst")
-        .where(F.col("ls") == F.col("ld"))
-        .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    rev_same = materialize(rev_same)
-    conf = state.select("id", "lbl", (F.col("id") == F.col("lbl")).alias("conf"))
-    for _ in range(SCC_BWD_ROUNDS):
-        reach = (
-            rev_same.join(conf.where("conf"), rev_same["src"] == F.col("id"))
-            .select(rev_same["dst"].alias("rid"))
-            .distinct()
-        )
-        conf = conf.join(reach, conf["id"] == F.col("rid"), "left").select(
-            "id", "lbl", (F.col("conf") | F.col("rid").isNotNull()).alias("conf")
-        )
-        conf = materialize(conf)
+    edges = directed_edges(spark, sf_dir).persist()
+    fwd, conf = forward_backward(edges, vertices_of(edges), SCC_FWD_ROUNDS, SCC_BWD_ROUNDS)
     edges.unpersist()
-    return conf.select(
+    confirmed = fwd.join(conf.withColumn("conf", F.lit(True)), "id", "left")
+    return confirmed.select(
         "id", F.when(F.col("conf"), F.col("lbl")).otherwise(F.col("id")).alias("scc_id")
     )
 
@@ -1589,9 +1511,9 @@ def q_cc_converged(spark, sf_dir):
     """The LIBRARY connected_components run to its fixed point — the
     frontier-scheduled TARGET loop (F4 changed-only rescheduling + I2
     run-until-frontier-empty, fogsrc/fog_engine.cpp:159-209) made
-    driver-visible. Unlike cc_hashmin (a fixed-round unroll re-written
-    in this module), this exercises the real algorithm: hub detection,
-    observed active counts, broadcast hints, per-superstep lineage cuts.
+    driver-visible. Unlike cc_hashmin (the same loop capped at 12
+    supersteps), this runs until the frontier empties: observed active
+    counts, broadcast hints, per-superstep lineage cuts.
     The oracle computes the same fixed point via a recursive CTE
     (min id over the symmetric transitive closure)."""
     from fog_spark.algorithms.cc import connected_components
@@ -4829,24 +4751,16 @@ def q_repo_pagerank_top(spark, sf_dir):
     repository (ranked on round(rank,5), path tie-break). Everything
     the north_rule names, end to end, hash-checked against the SQL
     replay."""
+    from fog_spark.algorithms.pagerank import pagerank_fog
     from fog_spark.graph.derive import derive_graph
 
     g = derive_graph(repo_table(spark, sf_dir))
     edges = g.edges.select("src", "dst").persist()
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("outdeg"))
-    state = deg.withColumn("rank", F.lit(1.0))
-    for _ in range(PR_ROUNDS):
-        msgs = edges.join(state, edges["src"] == state["id"]).select(
-            edges["dst"], (0.85 * F.col("rank") / F.col("outdeg") + 0.15).alias("m")
-        )
-        agg = msgs.groupBy("dst").agg(F.sum("m").alias("s"))
-        state = state.join(agg, state["id"] == agg["dst"], "left").select(
-            "id", "outdeg", (F.col("rank") + F.coalesce("s", F.lit(0.0))).alias("rank")
-        )
-        state = materialize(state)
+    # only files with an out-edge are ranked (the oracle's rdeg)
+    ranks = pagerank_fog(edges, edges.select(F.col("src").alias("id")).distinct(), niters=PR_ROUNDS)
     edges.unpersist()
     fx = g.files.select(F.col("id").alias("fid"), "repo", "path")
-    ranked = state.join(fx, state["id"] == fx["fid"]).select(
+    ranked = ranks.join(fx, ranks["id"] == fx["fid"]).select(
         "repo", "path", F.round("rank", 5).alias("rank_r")
     )
     w = Window.partitionBy("repo").orderBy(F.desc("rank_r"), F.asc("path"))

@@ -1,6 +1,7 @@
 """Shared superstep machinery: observed single-action supersteps, the
-default-vertex-set loop preambles on hub-heavy fixtures vs the oracles,
-and the graph edge cases every loop algorithm must handle."""
+private Spark APIs the cut depends on, the default-vertex-set loop
+preambles on hub-heavy fixtures vs the oracles, and the graph edge
+cases every loop algorithm must handle."""
 
 import numpy as np
 import pytest
@@ -136,6 +137,41 @@ def test_loop_edge_cases(spark, algo, case):
         else:
             assert got == np.asarray(want).tolist()
         assert iters == want_iters
+
+
+def test_fresh_leaf_pins_private_plan_apis(spark):
+    """_fresh_leaf rebuilds a cut through queryExecution().toRdd() and
+    internalCreateDataFrame: the same rows on a LogicalRDD leaf whose
+    size estimate is the default, not the one the cut copied."""
+    from fog_spark.engine.superstep import _fresh_leaf
+
+    cut = spark.range(10).select("id", (F.col("id") * 2).alias("x")).localCheckpoint(eager=True)
+    leaf = _fresh_leaf(cut)
+    assert sorted(leaf.collect()) == sorted(cut.collect())
+    assert leaf._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
+
+    def size(df):
+        return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+    default = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    assert size(leaf) == default
+    assert size(cut) != default
+
+
+def test_cleanup_tick_reaches_jvm_gc(spark, monkeypatch):
+    """_GC_EVERY ticks reach _jvm.System.gc(), which collects."""
+    from fog_spark.engine import superstep
+
+    beans = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+
+    def collections():
+        return sum(b.getCollectionCount() for b in beans)
+
+    monkeypatch.setattr(superstep, "_MATERIALIZE_TICKS", 0)
+    before = collections()
+    for _ in range(superstep._GC_EVERY):
+        superstep._cleanup_tick(spark)
+    assert collections() > before
 
 
 def test_materialize_observed_matches_filter_count(spark):
