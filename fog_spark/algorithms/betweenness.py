@@ -37,8 +37,6 @@ here; the backward phase only ever uses the ratio σ(v)/σ(w) ≤ 1.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.engine.superstep import materialize, materialize_observed, with_frontier_hint
@@ -48,7 +46,6 @@ def betweenness_sampled(
     edges: DataFrame,
     roots,
     max_depth: int | None = None,
-    ctx=None,
     assume_simple: bool = False,
 ) -> DataFrame:
     """(id, root, dist, delta): Brandes dependency δ of every vertex
@@ -70,7 +67,7 @@ def betweenness_sampled(
     state = roots.select(
         F.col("root").alias("id"), "root", F.lit(0).alias("dist"), F.lit(1.0).alias("sigma")
     )
-    state = materialize(state, ctx, 0)
+    state = materialize(state)
     active = state.count()
 
     # -- forward: levelled BFS accumulating shortest-path counts -----
@@ -79,7 +76,6 @@ def betweenness_sampled(
     for step in range(1, cap + 1):
         if active == 0:
             break
-        t0 = time.time()
         frontier = with_frontier_hint(
             state.filter(F.col("dist") == step - 1).select("id", "root", "sigma"), active
         )
@@ -95,22 +91,16 @@ def betweenness_sampled(
         state, om = materialize_observed(
             state.unionByName(new),
             [F.sum((F.col("dist") == step).cast("long")).alias("active")],
-            ctx,
-            step,
         )
         active = int(om["active"] or 0)
         if active > 0:
             depth = step
-        if ctx is not None:
-            ctx.commit(step, active=active, delta=None, wall_s=time.time() - t0,
-                       lineage=ctx.lineage_of(state))
 
     # -- backward: dependency accumulation, deepest level first ------
     deltas = state.withColumn("delta", F.lit(0.0))
     for lev in range(depth - 1, -1, -1):  # down to the roots: textbook
         # Brandes also accumulates the root's own delta (excluded from
         # bc by the dist > 0 filter, but part of the per-pair contract)
-        t0 = time.time()
         # w- and v-sides both derive from `deltas`: re-alias EVERY key on
         # both sides (fresh exprIds) or Spark silently drops the
         # root-equality as a tautology (see tests/test_plans.py lore)
@@ -141,12 +131,5 @@ def betweenness_sampled(
                 .alias("delta"),
             )
         )
-        # ctx step numbering continues past the forward phase so the
-        # backward snapshots and records never overwrite the forward
-        # ones (this function does not resume)
-        bstep = depth + (depth - lev)
-        deltas = materialize(deltas, ctx, bstep)
-        if ctx is not None:
-            ctx.commit(bstep, active=0, delta=None, wall_s=time.time() - t0,
-                       lineage=ctx.lineage_of(deltas), level=lev)
+        deltas = materialize(deltas)
     return deltas.select("id", "root", "dist", "delta")

@@ -27,8 +27,6 @@ classic scheduling/symmetry-breaking companion to MIS.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.algorithms.mis import _priority
@@ -54,7 +52,6 @@ def greedy_coloring(
     edges: DataFrame,
     salt: int = 5,
     max_rounds: int | None = None,
-    ctx=None,
 ) -> DataFrame:
     """(id, color, round) over the symmetrized simple graph.
 
@@ -78,7 +75,6 @@ def greedy_coloring(
     prev_nv = None
     while True:
         t += 1
-        t0 = time.time()
         nmin = (
             sym.join(alive.select(F.col("id").alias("src"), F.col("pri").alias("np")), "src")
             .join(alive.select(F.col("id").alias("dst")), "dst", "left_semi")
@@ -115,9 +111,7 @@ def greedy_coloring(
         nxt_colors = wcol.select("id", "color") if colors is None else (
             colors.unionByName(wcol.select("id", "color"))
         )
-        nxt_colors, om = materialize_observed(
-            nxt_colors, [F.count(F.lit(1)).alias("nc")], ctx, t, name="colors"
-        )
+        nxt_colors, om = materialize_observed(nxt_colors, [F.count(F.lit(1)).alias("nc")])
         nc = int(om["nc"] or 0)
         done.append(
             nxt_colors.join(winners, "id", "left_semi")
@@ -125,9 +119,6 @@ def greedy_coloring(
         )
         alive = alive.join(winners, "id", "left_anti").localCheckpoint(eager=False)
         colors = nxt_colors
-        if ctx is not None:
-            ctx.commit(t, active=nc, delta=0.0, wall_s=time.time() - t0,
-                       lineage=ctx.lineage_of(nxt_colors))
         # progress + termination bookkeeping rides the colored count:
         # colored strictly grows every round while anything is alive
         if nc == prev_nv:

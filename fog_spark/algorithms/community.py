@@ -81,9 +81,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def louvain_local_move(
-    edges: DataFrame, rounds: int = 1, ctx=None
-) -> DataFrame:
+def louvain_local_move(edges: DataFrame, rounds: int = 1) -> DataFrame:
     """(id, label) after ``rounds`` synchronous local-move rounds from a
     singleton start (every vertex its own community).
 
@@ -106,12 +104,11 @@ def louvain_local_move(
     return louvain_local_move_weighted(
         edges.select("src", "dst", F.lit(1).cast("long").alias("w")),
         rounds=rounds,
-        ctx=ctx,
     )
 
 
 def louvain_local_move_weighted(
-    edges: DataFrame, rounds: int = 1, ctx=None, alternate: bool = False
+    edges: DataFrame, rounds: int = 1, alternate: bool = False
 ) -> DataFrame:
     """The move loop over a WEIGHTED symmetric multigraph (src, dst, w
     long), self-loops allowed — the form a contracted super-graph takes
@@ -186,7 +183,7 @@ def louvain_local_move_weighted(
             .agg(F.min(F.struct((-F.col("gain2")).alias("g"), F.col("c").alias("c"))).alias("b"))
             .select("id", F.col("b.c").alias("label"))
         )
-        state = materialize(state, ctx, r)
+        state = materialize(state)
     return state.select("id", "label")
 
 
@@ -210,7 +207,7 @@ def contract_graph(edges: DataFrame, labels: DataFrame) -> DataFrame:
 
 
 def louvain_levels(
-    edges: DataFrame, move_rounds: int = 2, levels: int = 2, ctx=None
+    edges: DataFrame, move_rounds: int = 2, levels: int = 2
 ) -> DataFrame:
     """Full Louvain: local-move rounds, contract, repeat ``levels``
     times; (id, label) maps every ORIGINAL vertex to its top-level
@@ -227,9 +224,7 @@ def louvain_levels(
     cur = edges.select("src", "dst", F.lit(1).cast("long").alias("w"))
     total = None
     for lvl in range(1, levels + 1):
-        lab = louvain_local_move_weighted(
-            cur, rounds=move_rounds, ctx=ctx, alternate=True
-        )
+        lab = louvain_local_move_weighted(cur, rounds=move_rounds, alternate=True)
         if total is None:
             total = lab
         else:

@@ -64,13 +64,20 @@ def topo_levels(
     relaxation to its fixed point (level growth is monotone and
     bounded by the critical path, so termination is guaranteed on a
     true condensation; a cyclic labeling is detected and raised).
-    ``ctx`` commits every superstep and resumes a run dir.
+    ``ctx`` commits every superstep and resumes a run dir. A default
+    SCC labeling is snapshotted there once (``components/step=0``), so
+    a rerun reads it back instead of recomputing SCC; a run dir
+    without that snapshot recomputes it.
     """
-    if components is None:
-        from fog_spark.algorithms.scc import strongly_connected_components
+    if components is not None:
+        comp = materialize(components)
+    else:
+        comp = ctx.state_at(0, name="components") if ctx is not None else None
+        if comp is None:
+            from fog_spark.algorithms.scc import strongly_connected_components
 
-        components = strongly_connected_components(edges).select("id", "component")
-    comp = materialize(components)
+            scc = strongly_connected_components(edges).select("id", "component")
+            comp = materialize(scc, ctx, 0, name="components")
     cedges = materialize(condensation(edges, comp))
     # longest path = MIN over neg = -level: a source sends neg - 1 to
     # its successors

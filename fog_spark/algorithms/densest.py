@@ -22,7 +22,6 @@ generalizes from a fixed threshold to a density-adaptive one.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass
 from fractions import Fraction
 
@@ -47,7 +46,6 @@ def densest_subgraph(
     eps_num: int = 3,
     eps_den: int = 10,
     max_rounds: int | None = None,
-    ctx=None,
 ) -> DensestResult:
     """Peel the symmetrized simple graph with ε = eps_num/eps_den.
 
@@ -76,7 +74,6 @@ def densest_subgraph(
     prev_nv = None
     while True:
         t += 1
-        t0 = time.time()
         ealive = (
             sym.join(alive.select(F.col("id").alias("src")), "src", "left_semi")
             .join(alive.select(F.col("id").alias("dst")), "dst", "left_semi")
@@ -90,8 +87,6 @@ def densest_subgraph(
         st, om = materialize_observed(
             st,
             [F.sum("deg").alias("s2"), F.count(F.lit(1)).alias("nv")],
-            ctx,
-            t,
         )
         s2, nv = int(om["s2"] or 0), int(om["nv"] or 0)
         if nv == 0:
@@ -115,9 +110,6 @@ def densest_subgraph(
             st.filter(lhs <= rhs).select("id", F.lit(t).alias("removed_round"))
         )
         alive = st.filter(lhs > rhs).select("id")
-        if ctx is not None:
-            ctx.commit(t, active=nv, delta=float(dens), wall_s=time.time() - t0,
-                       lineage=ctx.lineage_of(st))
         if max_rounds is not None and t >= max_rounds:
             removed.append(alive.select("id", F.lit(t + 1).alias("removed_round")))
             break

@@ -25,8 +25,6 @@ standard pairing/coarsening primitive next to MIS and coloring.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.engine.superstep import materialize_observed, symmetrize
@@ -48,7 +46,6 @@ def greedy_matching(
     edges: DataFrame,
     salt: int = 5,
     max_rounds: int | None = None,
-    ctx=None,
 ) -> DataFrame:
     """(a, b, round) matched pairs (a < b) over the simple undirected
     graph. ``round`` is the round the pair matched; with ``max_rounds``
@@ -68,7 +65,6 @@ def greedy_matching(
     prev_ne = None
     while True:
         t += 1
-        t0 = time.time()
         # min incident edge priority per endpoint
         vmin = (
             alive.select(F.col("a").alias("id"), "pri")
@@ -96,12 +92,9 @@ def greedy_matching(
             .join(matched_ids.withColumnRenamed("id", "b"), "b", "left_anti")
             .select("a", "b", "pri")
         )
-        nxt, om = materialize_observed(nxt, [F.count(F.lit(1)).alias("ne")], ctx, t)
+        nxt, om = materialize_observed(nxt, [F.count(F.lit(1)).alias("ne")])
         ne = int(om["ne"] or 0)
         done.append(winners.select("a", "b", F.lit(t).alias("round")))
-        if ctx is not None:
-            ctx.commit(t, active=ne, delta=0.0, wall_s=time.time() - t0,
-                       lineage=ctx.lineage_of(nxt))
         if ne == 0:
             break
         if ne == prev_ne:
@@ -121,7 +114,6 @@ def vertex_cover(
     edges: DataFrame,
     salt: int = 5,
     max_rounds: int | None = None,
-    ctx=None,
 ) -> DataFrame:
     """(id): 2-approximate minimum vertex cover — the endpoint set of a
     maximal matching (Gavril / Yannakakis; Vazirani, Approximation
@@ -134,7 +126,7 @@ def vertex_cover(
     SQL-replayable form). Adds one distinct over 2|M| rows on top of
     the matching rounds.
     """
-    m = greedy_matching(edges, salt=salt, max_rounds=max_rounds, ctx=ctx)
+    m = greedy_matching(edges, salt=salt, max_rounds=max_rounds)
     return (
         m.select(F.col("a").alias("id"))
         .unionByName(m.select(F.col("b").alias("id")))

@@ -28,8 +28,6 @@ extension axis.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.engine.superstep import (
@@ -53,7 +51,6 @@ def maximal_independent_set(
     edges: DataFrame,
     salt: int = 5,
     max_rounds: int | None = None,
-    ctx=None,
 ) -> DataFrame:
     """(id, in_mis, round) over the symmetrized simple graph.
 
@@ -78,7 +75,6 @@ def maximal_independent_set(
     prev_nv = None
     while True:
         t += 1
-        t0 = time.time()
         st = maybe_broadcast(alive, n) if n is not None else alive
         # min alive-neighbor priority per alive vertex (edges restricted
         # to alive on both endpoints by the two inner joins)
@@ -113,8 +109,6 @@ def maximal_independent_set(
         marked, om = materialize_observed(
             flagged.join(doomed, "id", "left"),
             [F.sum((~F.col("win") & F.col("dmd").isNull()).cast("long")).alias("nv")],
-            ctx,
-            t,
         )
         nv = int(om["nv"] or 0)
         done.append(
@@ -125,9 +119,6 @@ def maximal_independent_set(
             .select("id", F.lit(0).alias("in_mis"), F.lit(t).alias("round"))
         )
         nxt = marked.filter(~F.col("win") & F.col("dmd").isNull()).select("id", "pri")
-        if ctx is not None:
-            ctx.commit(t, active=nv, delta=0.0, wall_s=time.time() - t0,
-                       lineage=ctx.lineage_of(nxt))
         if nv == 0:
             break
         if nv == prev_nv:

@@ -6,7 +6,8 @@ FOG runs as two programs: ``convert`` (text graph -> binary CSR) and
 Here one CLI covers both: point it at an edgelist/adjlist text file, a
 parquet edge table, or a source-repository table (the convert step is
 the scan/derivation itself), pick an algorithm, and optionally a
-checkpoint run-dir for mid-run resume.
+checkpoint run-dir, from which the superstep apps that checkpoint
+resume mid-run.
 
 Examples::
 
@@ -151,7 +152,7 @@ def _run_app(args, edges: DataFrame, vertices: DataFrame | None, ctx) -> DataFra
     if args.app == "mis":
         from fog_spark.algorithms.mis import maximal_independent_set
 
-        return maximal_independent_set(edges, salt=args.seed, ctx=ctx)
+        return maximal_independent_set(edges, salt=args.seed)
     if args.app == "katz":
         from fog_spark.algorithms.katz import katz
 
@@ -169,14 +170,14 @@ def _run_app(args, edges: DataFrame, vertices: DataFrame | None, ctx) -> DataFra
     if args.app == "louvain":
         from fog_spark.algorithms.community import louvain_local_move
 
-        return louvain_local_move(edges, rounds=args.niters, ctx=ctx)
+        return louvain_local_move(edges, rounds=args.niters)
     if args.app == "betweenness":
         from fog_spark.algorithms.betweenness import betweenness_sampled
 
         if not args.seeds:
             raise ValueError("--app betweenness requires --seeds id[,id...] (the pivots)")
         roots = [int(s) for s in args.seeds.split(",")]
-        d = betweenness_sampled(edges, roots, max_depth=args.max_depth, ctx=ctx)
+        d = betweenness_sampled(edges, roots, max_depth=args.max_depth)
         n = vertices.count() if vertices is not None else None
         if n is None:
             from fog_spark.engine.superstep import vertices_of
@@ -354,7 +355,13 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--ts-col", default="ts", help="asof: timestamp column on both sides")
     p.add_argument("--tolerance", type=float, default=None, help="asof: max staleness seconds")
     p.add_argument("--out", "-o", default=None, help="output parquet dir (default: print top 100)")
-    p.add_argument("--run-dir", default=None, help="checkpoint dir: enables mid-run resume")
+    p.add_argument(
+        "--run-dir", default=None,
+        help="checkpoint dir: pagerank, cc, bfs, sssp, lpa, kcore, hits, msbfs, "
+             "coreness, katz, ktruss, msf and ppr commit every superstep there "
+             "and resume from it; apps that do not checkpoint (scc, triangles, "
+             "walks, mis, betweenness, louvain, ...) ignore it",
+    )
     p.add_argument("--run-id", default="run0")
     p.add_argument(
         "--keep-last", type=int, default=None, metavar="K",

@@ -77,14 +77,15 @@ class RunContext:
     # -- metrics / lineage --------------------------------------------------
 
     def lineage_of(self, df: DataFrame) -> dict[str, int]:
-        """partition id -> row count of the just-committed state.
+        """partition id -> row count of the state write_state last
+        committed.
 
-        Zero-job path: when the frame is the state write_state just
-        committed, the counts come from the write itself (the format's
-        ``partition_lineage`` reads the parquet footers / table
-        metadata driver-side). Fallback — a frame that is NOT the last
-        write, or a format without metadata access — is the original
-        full-state scan, one extra Spark job per superstep."""
+        Whenever a write exists, its counts come from the write itself
+        (the format's ``partition_lineage`` reads the parquet footers /
+        table metadata driver-side, zero Spark jobs) and ``df`` is not
+        looked at: every caller passes the frame write_state just
+        returned. Only before any write, or with a format that has no
+        metadata access, is ``df`` scanned — one extra Spark job."""
         if not self.collect_lineage:
             return {}
         if self._last_write is not None:

@@ -8,9 +8,8 @@ disappears entirely (the edge DataFrame + hash partitioning IS the
 storage format).
 
 Scale notes:
-- extraction runs JVM-side via regexp_extract_all (whole-stage codegen;
-  a pandas-UDF variant exists for parity testing and for grammars regex
-  can't express);
+- extraction runs JVM-side via regexp_extract_all (whole-stage codegen),
+  one per-row CASE over lang, with no Python worker in the plan;
 - reference resolution is an equi-join against the file index on
   (repo, dst_path) — broadcastable per-repo, shuffle join globally;
 - dense vertex ids avoid both a global window sort and nondeterministic
@@ -26,8 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F
 
 IMPORT_RE_PY = r"(?m)^(?:import\s+(\w+)|from\s+(\w+)\s+import)"
 INCLUDE_RE_C = r"(?m)^#include\s+\"([^\"]+)\""
@@ -38,7 +36,7 @@ def with_content_sha(repos: DataFrame) -> DataFrame:
 
 
 def _extract_refs_builtin(repos: DataFrame) -> DataFrame:
-    """(repo, path, dst_path) via JVM regexp — the fast path.
+    """(repo, path, dst_path) via JVM regexp.
 
     ONE scan: the py and c/cpp branches used to be two filtered scans
     unioned, which evaluated the (dominant) content column twice when
@@ -68,57 +66,6 @@ def _extract_refs_builtin(repos: DataFrame) -> DataFrame:
         .otherwise(F.array().cast("array<string>"))
     )
     return repos.select("repo", "path", F.explode(refs).alias("dst_path"))
-
-
-_REFS_SCHEMA = T.StructType(
-    [
-        T.StructField("repo", T.StringType()),
-        T.StructField("path", T.StringType()),
-        T.StructField("dst_path", T.StringType()),
-    ]
-)
-
-
-def _extract_refs_pandas(repos: DataFrame) -> DataFrame:
-    """Arrow-vectorized pandas-UDF extraction (no per-row Python loops;
-    pandas .str ops are vectorized over the whole Arrow batch). Kept for
-    parity tests and for languages whose reference grammar outgrows a
-    single regex."""
-    import re
-
-    py_re = re.compile(r"^(?:import\s+(\w+)|from\s+(\w+)\s+import)", re.M)
-    c_re = re.compile(r"^#include\s+\"([^\"]+)\"", re.M)
-
-    def extract(batches):
-        for pdf in batches:
-            out = []
-            is_py = pdf["lang"] == "python"
-            is_c = pdf["lang"].isin(["c", "cpp"])  # match _extract_refs_builtin's lang filter
-            for mask, rex, fmt in ((is_py, py_re, "src/{}.py"), (is_c, c_re, "src/{}")):
-                sub = pdf[mask]
-                if sub.empty:
-                    continue
-                found = sub["content"].str.findall(rex)
-                lens = found.map(len)
-                nz = lens > 0
-                if not nz.any():
-                    continue
-                exploded = found[nz].explode()
-                mods = exploded.map(lambda m: next(g for g in (m if isinstance(m, tuple) else (m,)) if g))
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "repo": sub["repo"][nz].repeat(lens[nz]).values,
-                            "path": sub["path"][nz].repeat(lens[nz]).values,
-                            "dst_path": mods.map(fmt.format).values,
-                        }
-                    )
-                )
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"repo": [], "path": [], "dst_path": []}
-            )
-
-    return repos.select("repo", "path", "lang", "content").mapInPandas(extract, schema=_REFS_SCHEMA)
 
 
 def assign_dense_ids(files: DataFrame, partitions: int | None = None) -> DataFrame:
@@ -161,9 +108,9 @@ class DerivedGraph:
     vertices: DataFrame  # (id)
 
 
-def derive_graph(repos: DataFrame, extractor: str = "builtin") -> DerivedGraph:
+def derive_graph(repos: DataFrame) -> DerivedGraph:
     """Full convert-replacement: repos table -> (files, edges, vertices)."""
-    refs = _extract_refs_builtin(repos) if extractor == "builtin" else _extract_refs_pandas(repos)
+    refs = _extract_refs_builtin(repos)
     files = assign_dense_ids(repos)
     # rename-before-join: files descends from the same plan as refs, so
     # unaliased column references would collapse to trivially-true

@@ -91,10 +91,12 @@ def test_cyclic_labeling_raises(spark):
         topo_levels(e, components=bogus)
 
 
-def test_topo_levels_commits_and_resumes(spark, tmp_path):
+def test_topo_levels_commits_and_resumes(spark, tmp_path, monkeypatch):
     """A ctx run commits one metric record per superstep (the level
     waves plus the final quiet one), and a second call on the same run
-    dir resumes from the last record to the same levels."""
+    dir resumes from the last record to the same levels, reading the
+    SCC map back from its snapshot instead of recomputing it."""
+    from fog_spark.algorithms import scc
     from fog_spark.engine.checkpoint import RunContext
 
     g = GRAPHS["g_plaw_n1000"]
@@ -106,6 +108,10 @@ def test_topo_levels_commits_and_resumes(spark, tmp_path):
     steps = [m["superstep"] for m in ctx.metrics()]
     assert steps == list(range(1, max_level + 2))
 
+    def no_scc(*a, **kw):
+        raise AssertionError("SCC recomputed on a run dir that holds its snapshot")
+
+    monkeypatch.setattr(scc, "strongly_connected_components", no_scc)
     ctx2 = RunContext(spark, str(tmp_path), "dag")
     again = {r["id"]: (r["component"], r["level"]) for r in topo_levels(e, ctx=ctx2).collect()}
     assert again == first

@@ -9,8 +9,6 @@ from fog_spark.graph.derive import (
     assign_dense_ids,
     derive_graph,
     with_content_sha,
-    _extract_refs_builtin,
-    _extract_refs_pandas,
 )
 
 
@@ -22,22 +20,18 @@ def _edge_paths(spark, g):
     )
 
 
-@pytest.mark.parametrize("regime", ["uniform", "power-law"])
-@pytest.mark.parametrize("extractor", ["builtin", "pandas"])
-def test_derived_edges_match_ground_truth(spark, regime, extractor):
-    repos_pd, truth = make_repo_table(2, 16, regime=regime)
-    g = derive_graph(spark.createDataFrame(repos_pd), extractor=extractor)
+# ids name the JVM builtin (regexp) extractor that derive_graph runs
+@pytest.mark.parametrize(
+    "n_repos,n_files,regime",
+    [(2, 16, "power-law"), (2, 16, "uniform"), (3, 24, "power-law")],
+    ids=["builtin-power-law", "builtin-uniform", "builtin-power-law-3x24"],
+)
+def test_derived_edges_match_ground_truth(spark, n_repos, n_files, regime):
+    repos_pd, truth = make_repo_table(n_repos, n_files, regime=regime)
+    g = derive_graph(spark.createDataFrame(repos_pd))
     got = {(r["r"], r["src_path"], r["dst_path"]) for r in _edge_paths(spark, g).collect()}
     want = {tuple(t) for t in truth.itertuples(index=False)}
     assert got == want  # no cross-repo leakage (regression: self-join ambiguity)
-
-
-def test_extractors_agree(spark):
-    repos_pd, _ = make_repo_table(3, 24, regime="power-law")
-    repos = spark.createDataFrame(repos_pd)
-    a = {tuple(r) for r in _extract_refs_builtin(repos).collect()}
-    b = {tuple(r) for r in _extract_refs_pandas(repos).collect()}
-    assert a == b
 
 
 def test_sha_invariant_and_dense_ids(spark):
