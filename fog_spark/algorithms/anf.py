@@ -94,6 +94,25 @@ def estimate_from_sketch(k: int):
     return n.cast("long").alias("n_seen"), est.alias("estimate")
 
 
+def _seed(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(fwd, state_0): the simple self-loop-free edge table (cut once,
+    read every round) and each vertex's radius-0 sketch B(v, 0) = {v}."""
+    fwd = (
+        edges.filter(F.col("src") != F.col("dst"))
+        .select("src", "dst")
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    return fwd, vertices_of(fwd).select("id", F.array(_kmv_hash(F.col("id"))).alias("hvs"))
+
+
+def _grow(fwd: DataFrame, state: DataFrame, k: int) -> DataFrame:
+    """One round: (id, hvs) sketches of B(v, r) from those of B(·, r-1)
+    — one gather join plus the bounded bottom-k merge."""
+    contrib = fwd.join(state, fwd["dst"] == state["id"]).select(fwd["src"].alias("id"), "hvs")
+    return _bounded_bottom_k_merge(state.unionByName(contrib), k)
+
+
 def neighborhood_sketches(
     edges: DataFrame,
     radius: int,
@@ -108,16 +127,7 @@ def neighborhood_sketches(
     algorithm — the sketch array IS the state, so a resumed run
     continues growing balls from the committed round.
     """
-    fwd = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    state = vertices_of(fwd).select(
-        "id", F.array(_kmv_hash(F.col("id"))).alias("hvs")
-    )
-
+    fwd, state = _seed(edges)
     start = 0
     if ctx is not None:
         rp = ctx.resume_point_at_most(radius)
@@ -128,14 +138,10 @@ def neighborhood_sketches(
 
     for r in range(start + 1, radius + 1):
         t0 = time.time()
-        contrib = fwd.join(state, fwd["dst"] == state["id"]).select(
-            fwd["src"].alias("id"), "hvs"
-        )
-        merged = _bounded_bottom_k_merge(state.unionByName(contrib), k)
         # total sketch mass rides the materialize job: the ANF curve
         # N(r) ~ Σ_v |sketch| saturates exactly when the balls do
         state, om = materialize_observed(
-            merged, [F.sum(F.size("hvs")).alias("mass")], ctx, r
+            _grow(fwd, state, k), [F.sum(F.size("hvs")).alias("mass")], ctx, r
         )
         if ctx is not None:
             ctx.commit(r, active=int(om["mass"] or 0), delta=None,
@@ -175,23 +181,11 @@ def anf_curve(edges: DataFrame, radius: int, k: int = 16) -> DataFrame:
     rows — the per-round scans are the cost, identical to running the
     sketch loop itself.
     """
-    fwd = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    state = vertices_of(fwd).select(
-        "id", F.array(_kmv_hash(F.col("id"))).alias("hvs")
-    )
+    fwd, state = _seed(edges)
     state = materialize(state, None, 0)
     states = [(0, state)]
     for r in range(1, radius + 1):
-        contrib = fwd.join(state, fwd["dst"] == state["id"]).select(
-            fwd["src"].alias("id"), "hvs"
-        )
-        merged = _bounded_bottom_k_merge(state.unionByName(contrib), k)
-        state = materialize(merged, None, r)
+        state = materialize(_grow(fwd, state, k), None, r)
         states.append((r, state))
 
     _, est = estimate_from_sketch(k)

@@ -13,29 +13,36 @@ value >= h). c_t decreases monotonically to the exact coreness: H of a
 neighbor multiset never exceeds |N(v)| = c_0, and H is monotone in its
 inputs, so pointwise decrease propagates by induction.
 
-Superstep shape: one scatter of current values over the symmetrized
-edges, then the h-index as max(least(value, rank)) over a per-vertex
-descending rank — a single shuffle plus one window per round, the
-changed-vertex count observed on the materialize job. The rank window
-partitions by the gather vertex, so it shards exactly like every other
-gather here; fixed-round form (``rounds=m``) is what the unrolled SQL
-oracle replays, full convergence is pytest-oracled against the
+A vertex program on the GLOBAL-mode loop (``pagerank._power_iterate``):
+the state carries c as ``rank``, every vertex scatters it over the
+symmetrized edges, and the gather is the h-index as
+max(least(value, row_number)) over each vertex's neighbor values in
+descending order — a window partitioned by the gather vertex, so it
+shards exactly like every other gather here. The loop owns the gather-aligned edge cache,
+the broadcast state, the merge, resume and the commit. The
+fixed-round form (``rounds=m``) is what the unrolled SQL oracle
+replays; ``rounds=None`` stops at the first round that changes no
+value (``tol=1`` on integer values) and is pytest-oracled against the
 Batagelj-Zaversnik peel.
 """
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, Window, functions as F
 
-from fog_spark.engine.superstep import (
-    active_metric,
-    materialize,
-    materialize_observed,
-    symmetrize,
-    vertices_of,
-)
+from fog_spark.algorithms.pagerank import _power_iterate, _resume
+from fog_spark.engine.superstep import materialize, symmetrize, vertices_of
+
+
+def _h_index(msgs: DataFrame) -> DataFrame:
+    """(dst, incoming): the largest h such that at least h neighbor
+    values are >= h."""
+    rn = F.row_number().over(Window.partitionBy("dst").orderBy(F.col("msg").desc()))
+    return (
+        msgs.withColumn("rn", rn)
+        .groupBy("dst")
+        .agg(F.max(F.least(F.col("msg"), F.col("rn"))).cast("long").alias("incoming"))
+    )
 
 
 def coreness(
@@ -49,51 +56,30 @@ def coreness(
     exactly m h-index refinements (fixed-depth oracle form — values are
     then an upper bound, exact once converged); ``rounds=None`` runs to
     the fixed point (exact coreness). ctx-resumable per round."""
-    vertices = vertices if vertices is not None else vertices_of(edges)
+    cap, tol = (max_iters, 1) if rounds is None else (rounds, None)
+    start, state, done = _resume(ctx, cap, tol)
+    if done:
+        return state.select("id", F.col("rank").alias("coreness"))
     sym = symmetrize(edges).distinct().persist()
-    deg = sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("c"))
-    state = (
-        vertices.join(deg, "id", "left")
-        .select("id", F.coalesce("c", F.lit(0)).cast("long").alias("c"),
-                F.lit(True).alias("changed"))
-    )
-    start = 0
-    if ctx is not None:
-        rp = ctx.resume_point() if rounds is None else ctx.resume_point_at_most(rounds)
-        if rp is not None:
-            start, state = rp
-    if start == 0:
-        state = materialize(state, ctx, 0)
-
-    cap = rounds if rounds is not None else max_iters
     try:
-        for step in range(start + 1, cap + 1):
-            t0 = time.time()
-            st = state.select(F.col("id").alias("sid"), F.col("c").alias("sc"))
-            msgs = sym.join(st, sym["src"] == F.col("sid")).select(
-                sym["dst"].alias("id"), F.col("sc")
+        if state is None:
+            vertices = vertices if vertices is not None else vertices_of(edges)
+            deg = sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("c"))
+            state = materialize(
+                vertices.join(deg, "id", "left").select(
+                    "id", F.coalesce("c", F.lit(0)).cast("long").alias("rank")
+                ),
+                ctx,
+                0,
             )
-            rn = F.row_number().over(Window.partitionBy("id").orderBy(F.col("sc").desc()))
-            h = (
-                msgs.withColumn("rn", rn)
-                .groupBy("id")
-                .agg(F.max(F.least(F.col("sc"), F.col("rn"))).cast("long").alias("h"))
-            )
-            state = (
-                state.join(h.withColumnRenamed("id", "hid"), state["id"] == F.col("hid"), "left")
-                .select(
-                    "id",
-                    F.coalesce("h", F.lit(0)).alias("c"),
-                    (F.coalesce("h", F.lit(0)) != F.col("c")).alias("changed"),
-                )
-            )
-            state, om = materialize_observed(state, [active_metric()], ctx, step)
-            active = int(om["active"] or 0)
-            if ctx is not None:
-                ctx.commit(step, active=active, delta=None, wall_s=time.time() - t0,
-                           lineage=ctx.lineage_of(state))
-            if rounds is None and active == 0:
-                break
-        return state.select("id", F.col("c").alias("coreness"))
+        c, _ = _power_iterate(
+            sym, state, state.count(), start, cap, ctx,
+            msg=F.col("rank"),
+            rank=lambda _: F.coalesce("incoming", F.lit(0)),
+            carry=(),
+            tol=tol,
+            gather=_h_index,
+        )
+        return c.select("id", F.col("rank").alias("coreness"))
     finally:
         sym.unpersist()

@@ -1,12 +1,16 @@
 """PageRank — one power-iteration loop, four vertex programs.
 
-``_power_iterate`` is the superstep loop every mode runs: edge
-alignment, scatter → ``F.sum`` gather → merge, the per-superstep cut,
-the commit and the stop rule. ``_resume`` picks up a ``RunContext`` run.
-Each public function supplies only its vertex program: the initial
-state, the scatter message, the new-rank expression and, for the
-convergent modes, the dangling predicate and the ``tol`` stop rule.
-``katz.katz`` runs on the same loop.
+``_power_iterate`` is the GLOBAL-mode superstep loop (every vertex
+scatters every superstep, fogsrc/fog_engine.cpp:116-158): edge
+alignment, scatter → gather → merge, the per-superstep cut, the commit
+and the stop rule. ``_resume`` picks up a ``RunContext`` run. Each
+public function supplies only its vertex program: the initial state,
+the scatter message, the new-rank expression and, for the convergent
+modes, the dangling predicate and the ``tol`` stop rule. ``katz.katz``,
+``lpa.label_propagation`` and ``coreness.coreness`` run on the same
+loop; the last two bring their own gather fold (mode, h-index) in place
+of the ``F.sum`` default. ``hits`` and ``salsa`` keep their own loop:
+they alternate two gathers per iteration.
 
 - **FOG mode** (the correctness oracle): the reference's exact —
   non-standard — recurrence, traced in SURVEY §2.8 from
@@ -41,6 +45,7 @@ import time
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import IntegralType
 
 # The loop lives here, not in engine/: perfbench/tracing.py finds
 # supersteps by wrapping these names on this module.
@@ -86,6 +91,11 @@ def _resume(ctx, max_iters: int, tol: float | None = None) -> tuple[int, DataFra
     return step, state, rec.get("delta") is not None and rec["delta"] < tol
 
 
+def _sum_gather(msgs: DataFrame) -> DataFrame:
+    """The default gather fold: (dst, incoming = Σ msg)."""
+    return msgs.groupBy("dst").agg(F.sum("msg").alias("incoming"))
+
+
 def _power_iterate(
     edges: DataFrame,
     state: DataFrame,
@@ -97,56 +107,62 @@ def _power_iterate(
     rank: Callable[[float], Column],
     carry: tuple[str, ...],
     dangles: Column | None = None,
-    tol: float = 0.0,
+    tol: float | None = None,
     m_edges: int | None = None,
+    gather: Callable[[DataFrame], DataFrame] = _sum_gather,
 ) -> tuple[DataFrame, int]:
     """Supersteps start+1..max_iters from the cut ``state`` (n rows).
 
-    Each superstep scatters ``msg`` along ``edges`` (src → dst), sums it
-    per dst into ``incoming``, and keeps ``id``, the ``carry`` columns
-    and ``rank(dangling)`` over state ⟕ gather as the next state.
+    Each superstep scatters ``msg`` along ``edges`` (src → dst), folds
+    the (dst, msg) messages into (dst, incoming) with ``gather`` (a sum
+    by default), and keeps ``id``, the ``carry`` columns and
+    ``rank(dangling)`` over state ⟕ gather as the next state.
 
-    A dangling predicate ``dangles`` makes the run convergent: the old
-    rank is kept as ``prev``, max|Δ| and the next superstep's dangling
-    mass ride the cut as observed metrics (one job per superstep), and
-    the loop stops once max|Δ| < tol. Without one (FOG mode) each
-    superstep is a plain cut and the run goes to max_iters; ``m_edges``
-    then lets prepare_gather_edges decline an alignment the remaining
-    supersteps cannot amortize. Returns ((id, rank), last superstep run).
+    A number ``tol`` makes the run convergent: the old rank is kept as
+    ``prev``, max|Δ| rides the cut as an observed metric (one job per
+    superstep), and the loop stops once max|Δ| < tol. A dangling
+    predicate ``dangles`` adds the next superstep's dangling mass to
+    the observed metrics. With ``tol=None`` each superstep is a plain
+    cut and the run goes to max_iters; ``m_edges`` then lets
+    prepare_gather_edges decline an alignment the remaining supersteps
+    cannot amortize. Returns ((id, rank), last superstep run).
     """
     # gather-aligned edge cache: zero shuffle exchanges per superstep
     # when the state broadcasts (superstep.prepare_gather_edges)
     prepared = prepare_gather_edges(edges, n, m_edges=m_edges, expected_iters=max_iters - start)
-    prev = () if dangles is None else (F.col("rank").alias("prev"),)
+    prev, observed = (), []
+    if tol is not None:
+        prev = (F.col("rank").alias("prev"),)
+        r, p = F.col("rank"), F.col("prev")
+        if isinstance(state.schema["rank"].dataType, IntegralType):
+            # exact for integer ranks (labels): a long subtraction overflows
+            # on far-apart labels, and a double loses unit steps above 2^53
+            r, p = r.cast("decimal(20,0)"), p.cast("decimal(20,0)")
+        observed.append(F.max(F.abs(r - p)).alias("delta"))
     dangling = 0.0
     if dangles is not None:
         dangling = state.filter(dangles).agg(F.sum("rank")).collect()[0][0] or 0.0
+        observed.append(F.sum(F.when(dangles, F.col("rank")).otherwise(F.lit(0.0))).alias("dangling"))
 
     it = start
     for it in range(start + 1, max_iters + 1):
         t0 = time.time()
         st = maybe_broadcast(state, n)
         msgs = prepared.join(st, prepared["src"] == st["id"]).select(prepared["dst"], msg.alias("msg"))
-        agg = msgs.groupBy("dst").agg(F.sum("msg").alias("incoming"))
+        agg = gather(msgs)
         state = merge_join(state, agg, state["id"] == agg["dst"], n).select(
             "id", *carry, *prev, rank(dangling).alias("rank")
         )
         delta = None
-        if dangles is None:
+        if not observed:
             state = materialize(state, ctx, it)
         else:
-            state, om = materialize_observed(
-                state,
-                [
-                    F.max(F.abs(F.col("rank") - F.col("prev"))).alias("delta"),
-                    F.sum(F.when(dangles, F.col("rank")).otherwise(F.lit(0.0))).alias("dangling"),
-                ],
-                ctx,
-                it,
-            )
+            state, om = materialize_observed(state, observed, ctx, it)
             # om values are None on an empty vertex set — an empty graph
             # is converged (matches cc's observed-metric null handling)
-            delta, dangling = float(om["delta"] or 0.0), float(om["dangling"] or 0.0)
+            if tol is not None:
+                delta = float(om["delta"] or 0.0)
+            dangling = float(om.get("dangling") or 0.0)
         if ctx is not None:
             ctx.commit(it, active=n, delta=delta, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
         if delta is not None and delta < tol:

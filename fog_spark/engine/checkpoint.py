@@ -51,7 +51,6 @@ class RunContext:
         self.collect_lineage = collect_lineage
         self.keep_last = keep_last
         self.fmt = table_format if table_format is not None else ParquetDirFormat(spark, self.root)
-        self.fmt.ensure_record_table(_METRICS)
         self._last_write: tuple[str, int] | None = None
 
     # -- state ------------------------------------------------------------

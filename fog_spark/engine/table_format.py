@@ -125,9 +125,6 @@ class ParquetDirFormat:
     def _rpath(self, name: str, step: int) -> str:
         return f"{self.root}/{name}/step={step:05d}.json"
 
-    def ensure_record_table(self, name: str) -> None:
-        fs.mkdirs(self.spark, f"{self.root}/{name}")
-
     def write_record(self, name: str, step: int, text: str) -> None:
         path = self._rpath(name, step)
         tmp = f"{self.root}/{name}/.tmp-{step:05d}.json"
@@ -244,9 +241,6 @@ class IcebergFormat:
         )
 
     # -- records ------------------------------------------------------------
-
-    def ensure_record_table(self, name: str) -> None:
-        pass  # created lazily on first write_record
 
     def write_record(self, name: str, step: int, text: str) -> None:
         row = self.spark.createDataFrame([(int(step), text)], "step int, payload string")

@@ -48,6 +48,21 @@ def test_cli_cc_with_resume_dir(spark, tmp_path):
     assert RunContext(spark, str(tmp_path / "ckpt"), "run0").resume_point() is not None
 
 
+def test_cli_run_dir_is_written_only_by_checkpointing_apps(spark, tmp_path):
+    """--run-dir with an app that never checkpoints leaves no metrics
+    dir that would pass for a checkpointed run; cc still writes its
+    metric records."""
+    g = named_graphs()["g_two_comp"]
+    path = _write_edgelist(tmp_path, g)
+    for app in ("mis", "cc"):
+        run_dir = tmp_path / f"ck-{app}"
+        rc = main(["--graph", path, "--app", app, "--out", str(tmp_path / app),
+                   "--run-dir", str(run_dir)], spark=spark)
+        assert rc == 0
+    assert not (tmp_path / "ck-mis" / "run0" / "metrics").exists()
+    assert list((tmp_path / "ck-cc" / "run0" / "metrics").glob("step=*.json"))
+
+
 def test_cli_keep_last_vacuums(spark, tmp_path):
     g = named_graphs()["g_er_n100"]
     rc = main(

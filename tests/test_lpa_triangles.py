@@ -1,5 +1,6 @@
 """LPA and triangle counting vs oracles."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,6 +24,44 @@ def test_lpa_matches_oracle(spark, name):
     vertices = spark.range(g.n).select("id")
     got = _col(label_propagation(graph_to_spark(spark, g), vertices, max_iters=20), "label", g.n)
     assert got == expected.tolist()
+
+
+def test_lpa_converged_rerun_writes_nothing(spark, tmp_path):
+    """A rerun on a run dir that reached its fixed point reads the
+    labels back: the same labels, and no metric record is rewritten."""
+    from fog_spark.engine.checkpoint import RunContext
+
+    g = GRAPHS["g_two_comp"]
+    edges = graph_to_spark(spark, g)
+    ctx = RunContext(spark, str(tmp_path), "lpa", collect_lineage=False)
+    first = _col(label_propagation(edges, ctx=ctx), "label", g.n)
+    written = [(m["superstep"], m["ts"]) for m in ctx.metrics()]
+    assert ctx.metrics()[-1]["delta"] == 0  # stopped at the fixed point
+
+    rerun = RunContext(spark, str(tmp_path), "lpa", collect_lineage=False)
+    assert _col(label_propagation(edges, ctx=rerun), "label", g.n) == first
+    assert [(m["superstep"], m["ts"]) for m in rerun.metrics()] == written
+
+
+@pytest.mark.parametrize(
+    "ids,pairs",
+    [
+        # 10^19 apart (hashed ids): a long subtraction would overflow
+        ([-5 * 10**18, 1, 5 * 10**18, 5 * 10**18 + 7], [(0, 2), (2, 3), (3, 0), (0, 1)]),
+        # 1 apart above 2^53 (snowflake-style ids): a double sees no change
+        ([2**62 + i for i in range(4)], [(0, 1), (1, 2), (2, 3)]),
+    ],
+    ids=["far_apart", "adjacent_above_2e53"],
+)
+def test_lpa_64bit_labels(spark, ids, pairs):
+    """The max|Δ| stop metric is exact on any 64-bit labels: no
+    overflow, and a change by 1 is not lost. Relabelling ids in sorted
+    order keeps every count and smallest-label tie, so the oracle runs
+    on ranks 0..3."""
+    edges = spark.createDataFrame([(ids[a], ids[b]) for a, b in pairs], "src long, dst long")
+    want = oracles.lpa(np.array(pairs), len(ids), max_iters=5)
+    got = {r["id"]: r["label"] for r in label_propagation(edges, max_iters=5).collect()}
+    assert got == {ids[i]: ids[int(want[i])] for i in range(len(ids))}
 
 
 def test_lpa_fixed_point_validity(spark):

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from fog_spark import oracles
 from fog_spark.algorithms.bfs import bfs_levels
 from fog_spark.algorithms.cc import connected_components
+from fog_spark.algorithms.coreness import coreness
 from fog_spark.algorithms.lpa import label_propagation
 from fog_spark.algorithms.pagerank import (
     pagerank_fog,
@@ -21,6 +22,7 @@ from fog_spark.algorithms.scc import strongly_connected_components
 from fog_spark.algorithms.sssp import sssp
 from fog_spark.engine.superstep import active_metric, materialize_observed
 from fog_spark.fixtures import Graph, graph_to_spark, named_graphs
+from tests.test_coreness import py_coreness
 
 GRAPHS = named_graphs()
 
@@ -111,6 +113,15 @@ LOOPS = {
             "dist": lambda g: (oracles.sssp_fog(g.edges, g.weights(), g.n, 0)[0], None),
             "pred": lambda g: (oracles.sssp_fog(g.edges, g.weights(), g.n, 0)[1], None),
         },
+    ),
+    "lpa": (
+        lambda s, e, v: (label_propagation(e, v), None),
+        {"label": lambda g: (oracles.lpa(g.edges, g.n), None)},
+    ),
+    # py_coreness omits vertices with no neighbors: their coreness is 0
+    "coreness": (
+        lambda s, e, v: (coreness(e, v), None),
+        {"coreness": lambda g: ([py_coreness(g.edges).get(i, 0) for i in range(g.n)], None)},
     ),
 }
 

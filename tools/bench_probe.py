@@ -6,13 +6,14 @@ sinks where a query's own action would hide compute, and job labels so
 any UI/eventlog inspection maps back to phases.
 
 Usage: python tools/bench_probe.py <probe> [...]
-  pagerank_fog   per-superstep walls for pagerank_fog(edges, niters=10)
-  pagerank_std   pagerank_standard(edges, tol=1e-6) phase walls
-  cc             connected_components phase walls
-  lpa            label_propagation phase walls
-  triangles      A/B: broadcast-closure path vs merge/shuffle_hash path
-  derive         A/B: self-join cooccur_edges vs groupBy+explode variant
-  repo           repo pipeline phase walls
+  triangles         A/B: broadcast-closure path vs merge/shuffle_hash path
+  triangles_phases  orient+cache vs wedge+closure walls of triangle counting
+  repo              repo pipeline phase walls (fixture, extract, ids, derive, pagerank)
+  minhash           minhash_lsh_candidates walls
+
+Whole-call walls of the superstep algorithms (pagerank, cc, lpa) come
+from perfbench (``perfbench/run.py --trace 1``), which splits them per
+layer from the Spark event log.
 
 Not part of the driver contract; bench.py stays the only headline
 artifact. Numbers are cited in OPTIMIZATION_r06.md.
@@ -25,8 +26,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import functions as F
 
 from fog_spark.queries import cooccur_edges, load
 from fog_spark.session import get_spark
@@ -63,19 +62,6 @@ def _edges(spark):
     return e
 
 
-def probe_pagerank_fog(spark):
-    from fog_spark.algorithms.pagerank import pagerank_fog
-
-    edges = _edges(spark)
-    for rep in range(3):
-        t = T()
-        spark.sparkContext.setJobDescription(f"fog10 rep{rep}")
-        ranks = pagerank_fog(edges, niters=10)
-        ranks.count()
-        t.mark("pagerank_fog(niters=10).count")
-        t.dump(f"fog10 rep{rep}")
-
-
 def probe_triangles(spark):
     from fog_spark.algorithms import triangles as tr
 
@@ -105,26 +91,6 @@ def probe_triangles_phases(spark):
         t.dump(f"triangles-phases rep{rep}")
 
 
-def probe_derive(spark):
-    li = load(spark, SF_DIR, "lineitem").select("l_orderkey", "l_partkey")
-    for rep in range(3):
-        t = T()
-        e1 = cooccur_edges(spark, SF_DIR)
-        noop(e1)
-        t.mark("self-join variant (noop)")
-
-        grouped = li.groupBy("l_orderkey").agg(F.collect_list("l_partkey").alias("ps"))
-        pairs = grouped.select(
-            F.explode("ps").alias("src"), F.col("ps").alias("ps")
-        ).select("src", F.explode("ps").alias("dst")).where(F.col("src") != F.col("dst"))
-        e2 = pairs.select(
-            "src", "dst", (((F.col("src") * 31 + F.col("dst")) % 90 + 10) / 10.0).alias("weight")
-        ).distinct()
-        noop(e2)
-        t.mark("collect_list variant (noop)")
-        t.dump(f"derive rep{rep}")
-
-
 def probe_repo(spark):
     from fog_spark.algorithms.pagerank import pagerank_fog
     from fog_spark.fixtures_spark import make_repo_table_spark
@@ -151,40 +117,6 @@ def probe_repo(spark):
         t.dump(f"repo rep{rep}")
 
 
-def probe_cc(spark):
-    from fog_spark.algorithms.cc import connected_components
-
-    edges = _edges(spark)
-    for rep in range(3):
-        t = T()
-        connected_components(edges).select(F.countDistinct("component")).collect()
-        t.mark("cc total")
-        t.dump(f"cc rep{rep}")
-
-
-def probe_lpa(spark):
-    from fog_spark.algorithms.lpa import label_propagation
-
-    edges = _edges(spark)
-    for rep in range(3):
-        t = T()
-        label_propagation(edges, max_iters=10).count()
-        t.mark("lpa total")
-        t.dump(f"lpa rep{rep}")
-
-
-def probe_pagerank_std(spark):
-    from fog_spark.algorithms.pagerank import pagerank_standard
-
-    edges = _edges(spark)
-    for rep in range(3):
-        t = T()
-        ranks, iters = pagerank_standard(edges, tol=1e-6, max_iters=60)
-        ranks.count()
-        t.mark(f"pagerank_standard ({iters} iters)")
-        t.dump(f"pr-std rep{rep}")
-
-
 def probe_minhash(spark):
     from fog_spark.datapipe.dedup import minhash_lsh_candidates
 
@@ -197,13 +129,8 @@ def probe_minhash(spark):
 
 
 PROBES = {
-    "pagerank_fog": probe_pagerank_fog,
-    "pagerank_std": probe_pagerank_std,
-    "cc": probe_cc,
-    "lpa": probe_lpa,
     "triangles": probe_triangles,
     "triangles_phases": probe_triangles_phases,
-    "derive": probe_derive,
     "repo": probe_repo,
     "minhash": probe_minhash,
 }
