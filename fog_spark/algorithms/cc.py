@@ -38,6 +38,7 @@ from fog_spark.engine.superstep import (
     materialize_observed,
     merge_join,
     prepare_gather_edges,
+    release,
     symmetrize,
     with_frontier_hint,
 )
@@ -64,7 +65,8 @@ def min_frontier_loop(
     scatters ``msg`` (over edges ⨝ frontier(id, value)) along ``edges``,
     MIN-gathers it per dst into ``cand`` and selects ``id, *merge`` over
     state ⟕ gather. The default merge keeps least(value, cand) and
-    re-activates the vertices it lowered.
+    re-activates the vertices it lowered. Each cut is released as soon
+    as the next one exists.
     """
     start = 0
     if ctx is not None:
@@ -96,8 +98,10 @@ def min_frontier_loop(
         agg = msgs.groupBy("dst").agg(F.min("cand").alias("cand"))
         # fan-out guard: the agg can have far more rows than the
         # frontier (hub out-neighborhoods) but never more than |V|
-        state = merge_join(state, agg, state["id"] == agg["dst"], min(active * 64, n)).select("id", *merge)
-        state, om = materialize_observed(state, [active_metric()], ctx, step)
+        nxt = merge_join(state, agg, state["id"] == agg["dst"], min(active * 64, n)).select("id", *merge)
+        nxt, om = materialize_observed(nxt, [active_metric()], ctx, step)
+        release(state)  # the step-0 cut or a resume read is the loop's own, too
+        state = nxt
         active = int(om["active"] or 0)
         if ctx is not None:
             ctx.commit(step, active=active, delta=None, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))

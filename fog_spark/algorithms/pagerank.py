@@ -56,6 +56,7 @@ from fog_spark.engine.superstep import (
     maybe_broadcast,
     merge_join,
     prepare_gather_edges,
+    release,
     vertices_of,
 )
 
@@ -125,7 +126,8 @@ def _power_iterate(
     the observed metrics. With ``tol=None`` each superstep is a plain
     cut and the run goes to max_iters; ``m_edges`` then lets
     prepare_gather_edges decline an alignment the remaining supersteps
-    cannot amortize. Returns ((id, rank), last superstep run).
+    cannot amortize. Each cut the loop made is released as soon as the
+    next one exists. Returns ((id, rank), last superstep run).
     """
     # gather-aligned edge cache: zero shuffle exchanges per superstep
     # when the state broadcasts (superstep.prepare_gather_edges)
@@ -150,19 +152,22 @@ def _power_iterate(
         st = maybe_broadcast(state, n)
         msgs = prepared.join(st, prepared["src"] == st["id"]).select(prepared["dst"], msg.alias("msg"))
         agg = gather(msgs)
-        state = merge_join(state, agg, state["id"] == agg["dst"], n).select(
+        nxt = merge_join(state, agg, state["id"] == agg["dst"], n).select(
             "id", *carry, *prev, rank(dangling).alias("rank")
         )
         delta = None
         if not observed:
-            state = materialize(state, ctx, it)
+            nxt = materialize(nxt, ctx, it)
         else:
-            state, om = materialize_observed(state, observed, ctx, it)
+            nxt, om = materialize_observed(nxt, observed, ctx, it)
             # om values are None on an empty vertex set — an empty graph
             # is converged (matches cc's observed-metric null handling)
             if tol is not None:
                 delta = float(om["delta"] or 0.0)
             dangling = float(om.get("dangling") or 0.0)
+        if it > start + 1:  # before that, state is the caller's frame
+            release(state)
+        state = nxt
         if ctx is not None:
             ctx.commit(it, active=n, delta=delta, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
         if delta is not None and delta < tol:

@@ -51,14 +51,18 @@ def salsa(
 
     ind = e.groupBy("dst").agg(F.count(F.lit(1)).alias("ind"))
     od = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    # normalizations ride the edges once — the loop never recomputes them
+    # normalizations ride the edges once — the loop never recomputes them.
+    # The degree side is broadcast by hint: planned by AQE instead, the
+    # joined edges came out in a different order from run to run, and
+    # with them the float sums of every superstep, so a resumed run could
+    # differ from a clean one in the last bits
     eb = (
-        e.join(ind, "dst")
+        e.join(maybe_broadcast(ind, n), "dst")
         .select("src", "dst", (F.lit(1.0) / F.col("ind")).alias("wb"))
         .localCheckpoint(eager=False)
     )
     ef = (
-        e.join(od, "src")
+        e.join(maybe_broadcast(od, n), "src")
         .select("src", "dst", (F.lit(1.0) / F.col("od")).alias("wf"))
         .localCheckpoint(eager=False)
     )

@@ -21,6 +21,11 @@ Physical notes (the part FOG does by hand that Spark gives us):
   side moves.
 - Iterative plans MUST cut lineage every superstep (``materialize``) or
   the logical plan doubles per iteration and the driver melts.
+- A local cut's blocks stay persisted until someone frees them. The
+  shared loops free each cut as soon as the next one exists
+  (``release``); the ContextCleaner's periodic GC (session.get_spark)
+  frees what other loops leave, along with old shuffle files and
+  broadcasts. No superstep blocks on a GC.
 """
 
 from __future__ import annotations
@@ -148,29 +153,6 @@ def degrees_and_vertices(edges: DataFrame) -> DataFrame:
     return both.groupBy("id").agg(F.sum("_o").alias("outdeg"))
 
 
-_MATERIALIZE_TICKS = 0
-_GC_EVERY = 5
-
-
-def _cleanup_tick(spark) -> None:
-    """Nudge the GC-driven ContextCleaner every few supersteps.
-
-    Spark frees shuffle files, broadcast blocks, and checkpoint RDDs only
-    when the JVM garbage-collects their driver-side handles. Iterative
-    jobs on a large, mostly-empty driver heap never trigger a natural GC,
-    so the debris accumulates and superstep latency degrades severely
-    (measured: 10s -> 114s per 10 supersteps after ~30 uncollected
-    steps). One System.gc() per few supersteps keeps latency flat.
-    """
-    global _MATERIALIZE_TICKS
-    _MATERIALIZE_TICKS += 1
-    if _MATERIALIZE_TICKS % _GC_EVERY == 0:
-        import gc
-
-        gc.collect()  # drop py4j refs first so the JVM handles are dead
-        spark.sparkContext._jvm.System.gc()
-
-
 def _fresh_leaf(df: DataFrame) -> DataFrame:
     """Rebuild an already-materialized frame as a new LogicalRDD leaf
     with DEFAULT statistics.
@@ -203,14 +185,36 @@ def materialize(df: DataFrame, ctx=None, step: int | None = None, name: str = "s
     """Cut lineage. With a RunContext: durable parquet checkpoint (resume
     point, replaces FOG's .attr write-back fog_engine.cpp:245-261);
     without: eager localCheckpoint (fast, non-durable) rebased onto a
-    fresh default-stats leaf (see _fresh_leaf).
+    fresh default-stats leaf (see _fresh_leaf), which keeps a handle to
+    the checkpoint RDD holding its blocks for ``release``.
     """
     if ctx is not None and step is not None:
-        out = ctx.write_state(df, step, name=name)
-    else:
-        out = _fresh_leaf(df.localCheckpoint(eager=True))
-    _cleanup_tick(df.sparkSession)
+        return ctx.write_state(df, step, name=name)
+    cp = df.localCheckpoint(eager=True)
+    out = _fresh_leaf(cp)
+    out._cut_rdd = cp._jdf.queryExecution().analyzed().rdd()
     return out
+
+
+def release(cut: DataFrame) -> None:
+    """Free a local cut's checkpoint blocks now: the analogue of FOG's
+    ping-pong buffers, where each superstep reuses the memory of the
+    phase before it (SURVEY I3, fogsrc/fog_engine.cpp:124,137-139).
+
+    A superstep loop calls this on the cut it just replaced: the next
+    cut is eager, so nothing reads the old one's blocks again. Never
+    call it on a cut anything still reads (the caller's input, the frame
+    a loop returns, or a cut under any frame built on either): every
+    frame over it loses its rows. A durable cut (parquet re-read) or any
+    frame ``materialize`` did not return carries no handle, and nothing
+    happens. Cuts no loop releases are left to the ContextCleaner's
+    periodic GC (``spark.cleaner.periodicGC.interval``,
+    session.get_spark)."""
+    rdd = getattr(cut, "_cut_rdd", None)
+    if rdd is not None:
+        # RDD.unpersist(False) minus its WARN, every superstep, that a
+        # local checkpoint's rows cannot be recomputed once freed
+        rdd.context().unpersistRDD(rdd.id(), False)
 
 
 def materialize_observed(

@@ -52,7 +52,9 @@ class ParquetDirFormat:
         """Commit protocol: write to a temp dir, atomically rename into
         place. A pre-existing dir for the same step (re-run after
         resume) is renamed aside first and deleted only after the new
-        snapshot is live, so no crash window destroys the only copy."""
+        snapshot is live, so no crash window destroys the only copy.
+        The re-read takes ``df``'s schema rather than inferring one
+        (read_partition, which has no schema at hand, still infers)."""
         path = self._pdir(name, step)
         tmp = path + ".tmp"
         aside = path + ".old"
@@ -68,7 +70,8 @@ class ParquetDirFormat:
             raise IOError(f"checkpoint commit rename failed: {tmp} -> {path}")
         if had_old:
             fs.delete(self.spark, aside)
-        return self.spark.read.parquet(path)
+        # the schema just written: no footer-reading inference job
+        return self.spark.read.schema(df.schema).parquet(path)
 
     def read_partition(self, name: str, step: int) -> DataFrame:
         return self.spark.read.parquet(self._pdir(name, step))

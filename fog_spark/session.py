@@ -50,11 +50,15 @@ def get_spark(
         # Spark frees shuffle files / broadcasts / checkpoint RDDs only when
         # the JVM GCs their driver-side handles (ContextCleaner is GC-driven).
         # A large mostly-idle heap never GCs naturally, so iterative jobs
-        # degrade severely (measured 10x). Periodic G1 cycles keep the
-        # cleaner draining; same flag belongs in spark-submit on a cluster.
-        # ExplicitGCInvokesConcurrent: the engine nudges System.gc() between
-        # supersteps (engine/superstep._cleanup_tick); without this flag that
-        # is a stop-the-world full GC — 10s+ pauses on a big heap that drop
+        # degrade severely (measured 10x). The shared superstep loops free
+        # their own cuts (superstep.release); the cleaner's periodic GC
+        # frees the rest on a JVM thread, so no superstep waits for it.
+        # 5s, not the 30min default, which a short run never reaches.
+        .config("spark.cleaner.periodicGC.interval", "5s")
+        # Periodic G1 cycles keep the cleaner draining; same flags belong
+        # in spark-submit on a cluster. ExplicitGCInvokesConcurrent: the
+        # periodic GC above is a System.gc(); without this flag that is a
+        # stop-the-world full GC — 10s+ pauses on a big heap that drop
         # executor heartbeats (observed as NettyRpcEnv timeouts).
         .config(
             "spark.driver.extraJavaOptions",

@@ -300,6 +300,29 @@ def test_lineage_from_footers_costs_zero_jobs(spark, tmp_path):
     assert len(lin) == 7 and all(130 <= v <= 160 for v in lin.values())
 
 
+def test_durable_cut_reads_back_with_written_schema(spark, tmp_path):
+    """write_state runs exactly one Spark job, the parquet write: the
+    re-read takes the written frame's schema instead of running a
+    schema-inference job over the footers. Names and types survive."""
+    sc = spark.sparkContext
+    ctx = RunContext(spark, str(tmp_path), "runS")
+    df = spark.range(50).select(
+        F.col("id"),
+        (F.col("id") * 0.5).alias("rank"),
+        (F.col("id") % 3 == 0).alias("changed"),
+        (F.col("id") * 1_000_000_007).cast("decimal(20,0)").alias("label"),
+    )
+    sc.setJobGroup("write-state-jobs", "write-state-jobs")
+    try:
+        out = ctx.write_state(df, 1)
+    finally:
+        sc.setJobGroup("", "")
+    jobs = len(sc.statusTracker().getJobIdsForGroup("write-state-jobs"))
+    assert jobs == 1, f"one durable cut launched {jobs} Spark jobs"
+    assert out.dtypes == df.dtypes
+    assert sorted(out.collect()) == sorted(df.collect())
+
+
 def test_resume_capped_at_requested_depth(spark, tmp_path):
     """A run dir holding a DEEPER run than requested must return the
     requested iterate (not silently the deeper one), and must raise

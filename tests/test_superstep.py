@@ -1,5 +1,6 @@
 """Shared superstep machinery: observed single-action supersteps, the
-private Spark APIs the cut depends on, the default-vertex-set loop
+private Spark APIs the cut and its release depend on, the loops freeing
+their own cuts, the default-vertex-set loop
 preambles on hub-heavy fixtures vs the oracles, and the graph edge
 cases every loop algorithm must handle."""
 
@@ -20,7 +21,7 @@ from fog_spark.algorithms.pagerank import (
 )
 from fog_spark.algorithms.scc import strongly_connected_components
 from fog_spark.algorithms.sssp import sssp
-from fog_spark.engine.superstep import active_metric, materialize_observed
+from fog_spark.engine.superstep import active_metric, materialize, materialize_observed, release
 from fog_spark.fixtures import Graph, graph_to_spark, named_graphs
 from tests.test_coreness import py_coreness
 
@@ -169,20 +170,46 @@ def test_fresh_leaf_pins_private_plan_apis(spark):
     assert size(cut) != default
 
 
-def test_cleanup_tick_reaches_jvm_gc(spark, monkeypatch):
-    """_GC_EVERY ticks reach _jvm.System.gc(), which collects."""
-    from fog_spark.engine import superstep
+def test_release_pins_private_rdd_apis(spark):
+    """release frees a local cut through the RDD that
+    queryExecution().analyzed().rdd() names on the localCheckpoint'd
+    frame: it must be the persisted RDD holding the cut's blocks, and
+    SparkContext.unpersistRDD must drop it from getPersistentRDDs at
+    once."""
+    sc = spark.sparkContext
+    cut = materialize(spark.range(10).select("id", (F.col("id") * 2).alias("x")))
+    rdd = cut._cut_rdd
+    assert rdd.getStorageLevel().useMemory() or rdd.getStorageLevel().useDisk()
+    assert rdd.id() in sc._jsc.getPersistentRDDs()
+    assert cut.count() == 10
 
-    beans = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    release(cut.select("id"))  # a derived frame has no handle: nothing happens
+    assert rdd.id() in sc._jsc.getPersistentRDDs()
+    release(cut)
+    assert rdd.id() not in sc._jsc.getPersistentRDDs()
 
-    def collections():
-        return sum(b.getCollectionCount() for b in beans)
 
-    monkeypatch.setattr(superstep, "_MATERIALIZE_TICKS", 0)
-    before = collections()
-    for _ in range(superstep._GC_EVERY):
-        superstep._cleanup_tick(spark)
-    assert collections() > before
+# loop -> a run of exactly 12 local-cut supersteps; cc's 20-vertex path
+# is still changing at superstep 12, so max_iters is what stops it
+RELEASING_LOOPS = {
+    "pagerank_fog": lambda e: pagerank_fog(e, niters=12),
+    "cc": lambda e: connected_components(e, max_iters=12),
+}
+
+
+@pytest.mark.parametrize("algo", list(RELEASING_LOOPS))
+def test_loops_release_their_cuts(spark, algo):
+    """The shared loops free each cut they replace: 12 supersteps leave
+    at most the caller's step-0 cut and the returned one persisted.
+    Counted right after the loop returns: a ContextCleaner GC in
+    between can only lower the count."""
+    sc = spark.sparkContext
+    edges = spark.createDataFrame([(i, i + 1) for i in range(19)], "src long, dst long")
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    out = RELEASING_LOOPS[algo](edges)
+    new = set(sc._jsc.getPersistentRDDs().keys()) - before
+    assert len(new) <= 2, f"{algo} left {len(new)} new persisted RDDs after 12 supersteps"
+    assert out.count() == 20
 
 
 def test_materialize_observed_matches_filter_count(spark):
@@ -195,7 +222,6 @@ def test_observe_saves_one_action_per_superstep(spark, monkeypatch):
     """The observed superstep must launch strictly fewer Spark jobs than
     the legacy materialize-then-count pattern on the same input."""
     import fog_spark.algorithms.cc as loop_mod  # owns the MIN-frontier loop bfs runs on
-    from fog_spark.engine.superstep import materialize
 
     sc = spark.sparkContext
     line = graph_to_spark(spark, GRAPHS["g_line"])

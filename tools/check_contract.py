@@ -4,17 +4,18 @@ Runs each __spark_entry__.queries() entry via Spark AND its oracle_sql()
 via DuckDB at the given sf dir; compares row count, column-name set, and
 order-insensitive values. Usage:
 
-    PYTHONPATH=/root/repo python tools/check_contract.py [sf_dir] [name ...]
+    python tools/check_contract.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
