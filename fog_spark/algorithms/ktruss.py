@@ -8,11 +8,11 @@ the reference never shipped (its TODO.list stops at SCC/triangles/MSF).
 
 Peeling formulation, one superstep per round:
 
-1. support: enumerate the current subgraph's triangles with the same
-   degree-ordered orientation as ``triangles.triangle_counts`` (hub
-   out-degrees bounded by ~sqrt(m); merge-hinted wedge join +
-   shuffle-hash closure — the measured plan), then fold each triangle
-   onto its three CANONICAL (a < b) edges;
+1. support: ``triangles.edge_support`` over the current subgraph — the
+   library's degree-ordered triangle stream (hub out-degrees bounded by
+   ~sqrt(m); broadcast closed wedges below
+   ``TRIANGLE_BROADCAST_MAX_EDGES``, the exchange plan above it), each
+   triangle folded onto its three (a < b) edges;
 2. peel: drop every edge with support < k-2;
 3. repeat until no edge drops (or exactly ``rounds`` rounds for the
    fixed-depth oracle form).
@@ -30,45 +30,8 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
+from fog_spark.algorithms.triangles import _undirected, edge_support
 from fog_spark.engine.superstep import materialize_observed
-
-
-def _canonical(edges: DataFrame) -> DataFrame:
-    return (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
-
-
-def _edge_support(und: DataFrame) -> DataFrame:
-    """(a, b, sup): triangles through each canonical edge of ``und``."""
-    deg = (
-        und.select(F.col("a").alias("v")).unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
-    )
-    da, db = deg.alias("da"), deg.alias("db")
-    lt = (F.col("da.deg") < F.col("db.deg")) | (
-        (F.col("da.deg") == F.col("db.deg")) & (F.col("a") < F.col("b"))
-    )
-    o = (
-        und.join(da, F.col("a") == F.col("da.v"))
-        .join(db, F.col("b") == F.col("db.v"))
-        .select(
-            F.when(lt, F.col("a")).otherwise(F.col("b")).alias("lo"),
-            F.when(lt, F.col("b")).otherwise(F.col("a")).alias("hi"),
-        )
-    )
-    e1 = o.select(F.col("lo").alias("x"), F.col("hi").alias("y")).hint("merge")
-    e2 = o.select(F.col("lo").alias("y"), F.col("hi").alias("z")).hint("merge")
-    e3 = o.select(F.col("lo").alias("x"), F.col("hi").alias("z")).hint("shuffle_hash")
-    tris = e1.join(e2, "y").join(e3, ["x", "z"]).select("x", "y", "z")
-    sides = (
-        tris.select(F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"))
-        .unionByName(tris.select(F.least("y", "z").alias("a"), F.greatest("y", "z").alias("b")))
-        .unionByName(tris.select(F.least("x", "z").alias("a"), F.greatest("x", "z").alias("b")))
-    )
-    return sides.groupBy("a", "b").agg(F.count(F.lit(1)).alias("sup"))
 
 
 def k_truss(
@@ -85,7 +48,7 @@ def k_truss(
     """
     if k < 2:
         raise ValueError("k-truss needs k >= 2")
-    und = _canonical(edges)
+    und = _undirected(edges)
 
     m = 0
     n_alive: int | None = None
@@ -100,7 +63,7 @@ def k_truss(
                 n_alive = und.count()
     while True:
         t0 = time.time()
-        sup = _edge_support(und)
+        sup = edge_support(und)
         keep = (
             und.join(sup, ["a", "b"], "left")
             .filter(F.coalesce("sup", F.lit(0)) >= k - 2)

@@ -18,7 +18,9 @@ missed, and such witnesses carry ~no signal — 1/ln(deg) -> 0 — which
 is exactly Adamic-Adar's own discount, made into a hard cutoff).
 ``min_common`` prunes the long tail of weak candidates map-side.
 Existing edges are removed by an anti-join, so the output is genuine
-prediction candidates.
+prediction candidates. The capped shared-center join is one helper,
+``_center_pairs``, which also feeds co-citation/coupling and
+related pages.
 """
 
 from __future__ import annotations
@@ -26,6 +28,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from fog_spark.engine.superstep import symmetrize
+
+
+def _center_pairs(adj: DataFrame, max_degree: int | None, *aggs) -> DataFrame:
+    """(a, b, *aggs) over the pairs a < b that share a center in ``adj``
+    (w, x): center w, endpoint x. Never all-pairs: a center of degree d
+    emits d(d-1)/2 pairs, so centers with d > ``max_degree`` are
+    skipped. Each joined row is (w, d, a, b), so ``aggs`` may read the
+    center degree ``d``."""
+    deg = adj.groupBy("w").agg(F.count(F.lit(1)).alias("d"))
+    centers = deg if max_degree is None else deg.filter(F.col("d") <= max_degree)
+    adjc = adj.join(centers, "w")
+    a = adjc.select("w", "d", F.col("x").alias("a"))
+    b = adjc.select("w", F.col("x").alias("b"))
+    return a.join(b, "w").where(F.col("a") < F.col("b")).groupBy("a", "b").agg(*aggs)
 
 
 def common_neighbor_scores(
@@ -36,7 +52,7 @@ def common_neighbor_scores(
     """(a, b, common, jaccard, adamic_adar, pref_attach) for candidate
     (non-edge) pairs with >= ``min_common`` shared neighbors, a < b."""
     # one concrete RDD for the adjacency: it feeds the wedge join twice,
-    # the existing-edge anti-join, and (via deg) three degree lookups —
+    # the existing-edge anti-join, and (via deg) two degree lookups —
     # without the cut each reference re-executes the upstream edge
     # derivation (Spark does not dedupe identical subplans, measured in
     # the walks work this round)
@@ -44,14 +60,11 @@ def common_neighbor_scores(
     deg = sym.groupBy(F.col("src").alias("w")).agg(
         F.count(F.lit(1)).alias("wdeg")
     ).localCheckpoint(eager=False)
-    centers = deg if max_degree is None else deg.filter(F.col("wdeg") <= max_degree)
-    adjw = sym.select(F.col("src").alias("w"), F.col("dst").alias("x")).join(centers, "w")
-    a = adjw.select("w", "wdeg", F.col("x").alias("a"))
-    b = adjw.select("w", F.col("x").alias("b"))
-    wedges = a.join(b, "w").where(F.col("a") < F.col("b"))
-    scored = wedges.groupBy("a", "b").agg(
+    scored = _center_pairs(
+        sym.select(F.col("src").alias("w"), F.col("dst").alias("x")),
+        max_degree,
         F.count(F.lit(1)).alias("common"),
-        F.sum(1.0 / F.log("wdeg")).alias("adamic_adar"),
+        F.sum(1.0 / F.log("d")).alias("adamic_adar"),
     ).filter(F.col("common") >= min_common)
     # drop existing edges (either direction collapses to a<b under sym)
     existing = sym.where(F.col("src") < F.col("dst")).select(
@@ -93,22 +106,10 @@ def cocitation_coupling(
     ded = edges.filter(F.col("src") != F.col("dst")).select("src", "dst") \
         .distinct().localCheckpoint(eager=False)
 
-    def pair_counts(adj: DataFrame, name: str) -> DataFrame:
-        # adj: (w, x) — center w, endpoint x
-        deg = adj.groupBy("w").agg(F.count(F.lit(1)).alias("d"))
-        centers = deg if max_degree is None else deg.filter(F.col("d") <= max_degree)
-        adjc = adj.join(centers.select("w"), "w")
-        a = adjc.select("w", F.col("x").alias("a"))
-        b = adjc.select("w", F.col("x").alias("b"))
-        return (
-            a.join(b, "w")
-            .where(F.col("a") < F.col("b"))
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-
-    cocite = pair_counts(ded.select(F.col("src").alias("w"), F.col("dst").alias("x")), "cocited")
-    couple = pair_counts(ded.select(F.col("dst").alias("w"), F.col("src").alias("x")), "coupled")
+    cocite = _center_pairs(ded.select(F.col("src").alias("w"), F.col("dst").alias("x")),
+                           max_degree, F.count(F.lit(1)).alias("cocited"))
+    couple = _center_pairs(ded.select(F.col("dst").alias("w"), F.col("src").alias("x")),
+                           max_degree, F.count(F.lit(1)).alias("coupled"))
     out = (
         cocite.join(couple, ["a", "b"], "full_outer")
         .select(
@@ -149,16 +150,10 @@ def related_pages(
         .distinct().localCheckpoint(eager=False)
     indeg = ded.groupBy(F.col("dst").alias("id")).agg(F.count(F.lit(1)).alias("indeg"))
 
-    cdeg = ded.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    centers = cdeg if max_degree is None else cdeg.filter(F.col("d") <= max_degree)
-    adj = ded.join(centers.select("src"), "src")
-    a = adj.select("src", F.col("dst").alias("a"))
-    b = adj.select("src", F.col("dst").alias("b"))
-    pairs = (
-        a.join(b, "src")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("cocited"))
+    pairs = _center_pairs(
+        ded.select(F.col("src").alias("w"), F.col("dst").alias("x")),
+        max_degree,
+        F.count(F.lit(1)).alias("cocited"),
     )
     both = pairs.select(F.col("a").alias("page"), F.col("b").alias("related"), "cocited").unionByName(
         pairs.select(F.col("b").alias("page"), F.col("a").alias("related"), "cocited")

@@ -8,12 +8,16 @@ a directed 2-path a→b, b→c closed by a→c, and — crucially for power-law
 graphs — hub vertices get LOW out-degree in the oriented graph, which
 bounds the wedge join's skew by sqrt(m) instead of max-degree.
 
+This module owns the triangle stream for the whole triangle family:
+``_undirected`` -> ``_oriented_cached`` -> ``_triangle_stream`` feeds
+the per-vertex and total counts, 4-cliques, and ``edge_support`` (per-
+edge triangle counts), which k-truss peeling reads instead of writing
+its own wedge join.
+
 Pure DataFrame equi-joins; no Python in the plan.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -30,38 +34,23 @@ from fog_spark.engine.superstep import vertices_of
 # remains the scale path (a broadcast relation must fit executor
 # memory). Measured at 4.78M oriented edges / 32 cores: adjacency path
 # 3.8-7.1s vs exchange path 9.9-15.0s for the full count.
-TRIANGLE_BROADCAST_MAX_EDGES = int(os.environ.get("FOGSPARK_TRIANGLE_BC_MAX", "8000000"))
+TRIANGLE_BROADCAST_MAX_EDGES = 8_000_000
 
 
-def _oriented(edges: DataFrame) -> DataFrame:
-    """Undirected simple edges oriented by (degree, id)."""
-    und = (
+def _undirected(edges: DataFrame) -> DataFrame:
+    """(a, b) with a < b: the distinct simple undirected edges."""
+    return (
         edges.filter(F.col("src") != F.col("dst"))
         .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .distinct()
     )
-    deg = (
-        und.select(F.col("a").alias("v")).unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
-    )
-    da, db = deg.alias("da"), deg.alias("db")
-    lt = (F.col("da.deg") < F.col("db.deg")) | (
-        (F.col("da.deg") == F.col("db.deg")) & (F.col("a") < F.col("b"))
-    )
-    return (
-        und.join(da, F.col("a") == F.col("da.v"))
-        .join(db, F.col("b") == F.col("db.v"))
-        .select(
-            F.when(lt, F.col("a")).otherwise(F.col("b")).alias("lo"),
-            F.when(lt, F.col("b")).otherwise(F.col("a")).alias("hi"),
-        )
-    )
 
 
-def _oriented_cached(edges: DataFrame) -> tuple[DataFrame, int]:
-    """Orient by (degree, id) and cache. Returns (o, |o|).
+def _oriented_cached(und: DataFrame) -> tuple[DataFrame, int]:
+    """Orient the ``_undirected`` frame by (degree, id) and cache.
+    Returns (o, |o|).
 
-    The undirected table is deduped, explicitly spread over the
+    The undirected table is explicitly spread over the
     shuffle-partition count (AQE would coalesce this small table to a
     couple of partitions and the downstream wedge stage inherits the
     cache's parallelism), and cached so the degree aggregation and the
@@ -70,15 +59,8 @@ def _oriented_cached(edges: DataFrame) -> tuple[DataFrame, int]:
     relation cannot broadcast, so past the gate AQE picks from runtime
     sizes as before. |o| == |und| (orientation is a bijection), so one
     count drives both materialization and the strategy gate."""
-    spark = edges.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .repartition(n, "a", "b")
-        .persist()
-    )
+    n = int(und.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    und = und.repartition(n, "a", "b").persist()
     n_und = und.count()
     deg = und.select(F.explode(F.array("a", "b")).alias("v")).groupBy("v").agg(
         F.count(F.lit(1)).alias("deg")
@@ -162,6 +144,30 @@ def _triangle_stream(o: DataFrame, n_o: int) -> DataFrame:
     return e1.join(e2, "y").join(e3, ["x", "z"]).select("x", "y", "z")
 
 
+def edge_support(und: DataFrame) -> DataFrame:
+    """(a, b, sup): the number of triangles through each edge of the
+    ``_undirected`` frame ``und``; edges on no triangle are absent.
+
+    One oriented triangle stream, each triangle folded onto its three
+    sides in one explode pass (a union of three projections would run
+    the stream three times). The result is materialized so the oriented
+    cache is released on return."""
+    o, n_o = _oriented_cached(und)
+
+    def side(p: str, q: str):
+        return F.struct(F.least(p, q).alias("a"), F.greatest(p, q).alias("b"))
+
+    sup = (
+        _triangle_stream(o, n_o)
+        .select(F.explode(F.array(side("x", "y"), side("y", "z"), side("x", "z"))).alias("e"))
+        .groupBy(F.col("e.a").alias("a"), F.col("e.b").alias("b"))
+        .agg(F.count(F.lit(1)).alias("sup"))
+        .localCheckpoint(eager=True)
+    )
+    o.unpersist()
+    return sup
+
+
 def triangle_counts(edges: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
     """Returns (id, tri_count) — per-vertex triangle membership. Exact.
 
@@ -169,7 +175,7 @@ def triangle_counts(edges: DataFrame, vertices: DataFrame | None = None) -> Data
     see triangle_total for the scalar.
     """
     vertices = vertices if vertices is not None else vertices_of(edges)
-    o, n_o = _oriented_cached(edges)
+    o, n_o = _oriented_cached(_undirected(edges))
     tris = _triangle_stream(o, n_o)
     # one explode pass, NOT a 3-way union of projections: the union plan
     # repeats the triangle-stream subtree per branch, and only exchanges
@@ -190,7 +196,8 @@ def triangle_counts(edges: DataFrame, vertices: DataFrame | None = None) -> Data
 
 
 def triangle_total(edges: DataFrame) -> int:
-    o, n_o = _oriented_cached(edges)
+    """The exact number of triangles of the undirected simple graph."""
+    o, n_o = _oriented_cached(_undirected(edges))
     if 0 <= n_o <= TRIANGLE_BROADCAST_MAX_EDGES:
         # sum of witness-array sizes — no need to even explode
         n = _closed_wedges(o).agg(F.sum(F.size("ws"))).collect()[0][0] or 0
@@ -210,7 +217,7 @@ def four_clique_total(edges: DataFrame) -> DataFrame:
     which bounds both the wedge and the extension fan-out on power-law
     graphs (the reason this shape survives web-scale inputs where a naive
     4-way enumeration does not)."""
-    o, n_o = _oriented_cached(edges)
+    o, n_o = _oriented_cached(_undirected(edges))
     tris = _triangle_stream(o, n_o)
     # tighter gate than the triangle stream: this path holds THREE
     # broadcast copies of the oriented pair table (extension probe +

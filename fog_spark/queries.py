@@ -223,22 +223,17 @@ def _sql_lpa(k: int) -> str:
 
 
 def q_triangle_total(spark, sf_dir):
-    """Exact triangle count (SURVEY §2.3) — degree-oriented.
-
-    Reuses algorithms/triangles._oriented: orienting each edge from the
+    """Exact triangle count (SURVEY §2.3) — algorithms/triangles.
+    triangle_total, as a one-row frame. Orienting each edge from the
     lower-(degree, id) endpoint bounds the wedge stream by ~sqrt(m) per
     vertex instead of max-degree, so no single task owns a hub's O(deg²)
     wedges on a power-law graph. The oracle SQL is orientation-agnostic
     (identical triangle set either way).
     """
-    from fog_spark.algorithms.triangles import _oriented
+    from fog_spark.algorithms.triangles import triangle_total
 
-    o = _oriented(cooccur_edges(spark, sf_dir))
-    e1 = o.select(F.col("lo").alias("x"), F.col("hi").alias("y")).hint("merge")
-    e2 = o.select(F.col("lo").alias("y"), F.col("hi").alias("z")).hint("merge")
-    e3 = o.select(F.col("lo").alias("x"), F.col("hi").alias("z")).hint("shuffle_hash")
-    tri = e1.join(e2, "y").join(e3, ["x", "z"])
-    return tri.agg(F.count(F.lit(1)).alias("n_triangles"))
+    n = triangle_total(cooccur_edges(spark, sf_dir))
+    return spark.createDataFrame([(n,)], "n_triangles long")
 
 
 SQL_TRIANGLE_TOTAL = (
@@ -2689,8 +2684,8 @@ def q_ktruss4_r2(spark, sf_dir):
     """k-truss support peel (algorithms/ktruss.k_truss), k=4, exactly 2
     rounds — the fixed-depth form the unrolled oracle replays (full
     convergence is pytest-oracled against a Python peeler). Support
-    counting reuses the degree-ordered triangle orientation, re-derived
-    per round from the surviving edges."""
+    is triangles.edge_support, the library's degree-ordered triangle
+    stream, re-derived per round from the surviving edges."""
     from fog_spark.algorithms.ktruss import k_truss
 
     return k_truss(cooccur_edges(spark, sf_dir), k=KTRUSS_K, rounds=KTRUSS_ROUNDS)

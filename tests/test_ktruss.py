@@ -44,6 +44,11 @@ def test_ktruss_random_graphs(spark):
         assert _run(spark, E, k) == py_ktruss(E, k), k
 
 
+def test_ktruss_random_graphs_exchange(spark, triangle_exchange):
+    """Support from the merge/shuffle-hash triangle stream."""
+    test_ktruss_random_graphs(spark)
+
+
 def test_ktruss_fixed_rounds_then_resume_converges(spark, tmp_path):
     from fog_spark.engine.checkpoint import RunContext
 

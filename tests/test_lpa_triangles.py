@@ -73,15 +73,24 @@ def test_lpa_fixed_point_validity(spark):
     assert got == expected.tolist()
 
 
-@pytest.mark.parametrize(
-    "name,total", [("g_tri", 4), ("g_line", 0), ("g_two_comp", 2), ("g_cycle", 0)]
-)
+# each triangle test runs twice: on the default (broadcast closed-wedge)
+# stream, and as its *_exchange twin on the merge/shuffle-hash stream
+TRIANGLE_TOTALS = [("g_tri", 4), ("g_line", 0), ("g_two_comp", 2), ("g_cycle", 0)]
+PER_VERTEX_GRAPHS = ["g_tri", "g_er_n100", "g_plaw_n1000"]
+
+
+@pytest.mark.parametrize("name,total", TRIANGLE_TOTALS)
 def test_triangle_totals(spark, name, total):
     g = GRAPHS[name]
     assert triangle_total(graph_to_spark(spark, g)) == total
 
 
-@pytest.mark.parametrize("name", ["g_tri", "g_er_n100", "g_plaw_n1000"])
+@pytest.mark.parametrize("name,total", TRIANGLE_TOTALS)
+def test_triangle_totals_exchange(spark, triangle_exchange, name, total):
+    test_triangle_totals(spark, name, total)
+
+
+@pytest.mark.parametrize("name", PER_VERTEX_GRAPHS)
 def test_triangle_per_vertex(spark, name):
     g = GRAPHS[name]
     per, tot = oracles.triangles(g.edges, g.n)
@@ -89,6 +98,11 @@ def test_triangle_per_vertex(spark, name):
     got = _col(triangle_counts(graph_to_spark(spark, g), vertices), "tri_count", g.n)
     assert got == per.tolist()
     assert triangle_total(graph_to_spark(spark, g)) == tot
+
+
+@pytest.mark.parametrize("name", PER_VERTEX_GRAPHS)
+def test_triangle_per_vertex_exchange(spark, triangle_exchange, name):
+    test_triangle_per_vertex(spark, name)
 
 
 def test_k_core_matches_oracle(spark):
@@ -444,6 +458,10 @@ def test_four_clique_total_brute_force(spark):
     )
     assert four_clique_total(df).collect()[0]["n_4cliques"] == expected
     assert expected > 0  # fixture sanity: the ER draw actually has 4-cliques
+
+
+def test_four_clique_total_brute_force_exchange(spark, triangle_exchange):
+    test_four_clique_total_brute_force(spark)
 
 
 def test_four_clique_known_graphs(spark):

@@ -63,15 +63,15 @@ def test_superstep_scatter_broadcasts_state_not_edges(spark):
 def test_triangle_closure_uses_shuffle_hash_join(spark):
     """The O(wedges) stream must never be sorted (SMJ) or collected to
     the driver (BHJ build)."""
-    from fog_spark.algorithms.triangles import _oriented
+    from fog_spark.algorithms.triangles import (
+        TRIANGLE_BROADCAST_MAX_EDGES, _oriented_cached, _triangle_stream, _undirected,
+    )
 
     g = named_graphs()["g_er_n100"]
-    o = _oriented(graph_to_spark(spark, g))
-    e1 = o.select(F.col("lo").alias("x"), F.col("hi").alias("y")).hint("merge")
-    e2 = o.select(F.col("lo").alias("y"), F.col("hi").alias("z")).hint("merge")
-    e3 = o.select(F.col("lo").alias("x"), F.col("hi").alias("z")).hint("shuffle_hash")
-    plan = _plan(e1.join(e2, "y").join(e3, ["x", "z"]))
+    o, _ = _oriented_cached(_undirected(graph_to_spark(spark, g)))
+    plan = _plan(_triangle_stream(o, TRIANGLE_BROADCAST_MAX_EDGES + 1))
     assert "ShuffledHashJoin" in plan
+    o.unpersist()
 
 
 def test_whole_stage_codegen_covers_superstep(spark):

@@ -1,7 +1,8 @@
-"""The graph queries whose Spark side runs the engine's loops capped at
-k supersteps, each against its DuckDB oracle (k dense rounds as chained
-CTEs) on the sf0.001 smoke tables — tools/check_contract.py's
-comparison for these queries, inside the test suite."""
+"""The graph queries whose Spark side runs the engine's own code — the
+loops capped at k supersteps, and the triangle family's shared stream —
+each against its DuckDB oracle (k dense rounds as chained CTEs) on the
+sf0.001 smoke tables: tools/check_contract.py's comparison for these
+queries, inside the test suite."""
 
 import duckdb
 import pytest
@@ -19,6 +20,9 @@ NAMES = [
     "sssp_k4",
     "scc_fwbw_k6",
     "repo_pagerank_top",
+    "triangle_total",
+    "ktruss4_r2",
+    "triad_full",
 ]
 
 

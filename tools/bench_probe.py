@@ -82,7 +82,7 @@ def probe_triangles_phases(spark):
     edges = _edges(spark)
     for rep in range(2):
         t = T()
-        o, n_o = tr._oriented_cached(edges)
+        o, n_o = tr._oriented_cached(tr._undirected(edges))
         t.mark(f"orient+cache+count ({n_o})")
         stream = tr._triangle_stream(o, n_o)
         n = stream.count()

@@ -52,20 +52,13 @@ dump("derive_edges", cooccur_edges(spark, SF))
 # --- triangles (the counted stream)
 import fog_spark.algorithms.triangles as tr  # noqa: E402
 
-if hasattr(tr, "_oriented_cached"):
-    o, n_o = tr._oriented_cached(edges)
-    if hasattr(tr, "_closed_wedges") and 0 <= n_o <= tr.TRIANGLE_BROADCAST_MAX_EDGES:
-        dump("triangles", tr._closed_wedges(o).agg(F.sum(F.size("ws"))))
-    else:
-        dump("triangles", tr._triangle_stream(o, n_o))
-    o.unpersist()
+# trees before the triangle family shared one stream orient the raw edges
+o, n_o = tr._oriented_cached(tr._undirected(edges) if hasattr(tr, "_undirected") else edges)
+if 0 <= n_o <= tr.TRIANGLE_BROADCAST_MAX_EDGES:
+    dump("triangles", tr._closed_wedges(o).agg(F.sum(F.size("ws"))))
 else:
-    o = tr._oriented(edges).persist()
-    e1 = o.select(F.col("lo").alias("x"), F.col("hi").alias("y")).hint("merge")
-    e2 = o.select(F.col("lo").alias("y"), F.col("hi").alias("z")).hint("merge")
-    e3 = o.select(F.col("lo").alias("x"), F.col("hi").alias("z")).hint("shuffle_hash")
-    dump("triangles", e1.join(e2, "y").join(e3, ["x", "z"]))
-    o.unpersist()
+    dump("triangles", tr._triangle_stream(o, n_o))
+o.unpersist()
 
 # --- pagerank: state init + one superstep (broadcast-state regime)
 from fog_spark.engine.superstep import materialize, maybe_broadcast, prepare_gather_edges  # noqa: E402

@@ -42,8 +42,11 @@ def main():
     import __spark_entry__ as entrymod
     from fog_spark.session import get_spark
 
+    # inputs are a few MB: a small driver heap bounds the gate's JVM,
+    # which grows to 6-8 GB resident on get_spark's 24g default
     spark = get_spark("contract-check", cpus=8, shuffle_partitions=16,
-                      extra_conf={"spark.ui.showConsoleProgress": "false"})
+                      extra_conf={"spark.ui.showConsoleProgress": "false",
+                                  "spark.driver.memory": os.environ.get("FOGSPARK_DRIVER_MEM", "4g")})
 
     con = duckdb.connect()
     for t in TABLES:
