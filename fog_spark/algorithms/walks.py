@@ -32,9 +32,13 @@ O(length) joins total, the walk-engine cost model DeepWalk length
 40-80 corpora need. ``plan_cuts=False`` keeps the fully-lazy plan
 (used by the plan-shape tests).
 
-Biased (node2vec p,q) walks: see ``node2vec_walks`` below — same
-point-lookup shape, with the previous vertex carried on the frontier
-and a second-order re-weighting resolved per candidate neighborhood.
+All five samplers run the one walk loop ``_walk``: it owns the start
+frontier, step 0's degree lookup, the per-step cut and the corpus
+union, and each sampler supplies only its adjacency and its per-step
+transition. Biased (node2vec p,q) walks: see ``node2vec_walks`` below —
+same point-lookup shape, with the previous vertex carried on the
+frontier and a second-order re-weighting resolved per candidate
+neighborhood.
 """
 
 from __future__ import annotations
@@ -42,26 +46,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def _hash_idx(walk_id, step: int, seed: int):
-    # first 8 md5 hex chars as an integer: < 2^32, positive on both
-    # Spark (conv base 16) and DuckDB (digit-fold) — see the oracle SQL
-    h = F.md5(F.concat_ws("-", walk_id, F.lit(step), F.lit(seed)))
-    return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-
-
 def _hash_tag(walk_id, tag, seed: int):
-    # independent hash stream per (step, attempt, role) tag — the
-    # rejection sampler burns several picks per step. ``tag`` may be a
-    # literal string or a Column (attempt index folded in per-row).
-    tag_col = tag if not isinstance(tag, str) else F.lit(tag)
+    # first 8 md5 hex chars as an integer: < 2^32, positive on both
+    # Spark (conv base 16) and DuckDB (digit-fold) — see the oracle SQL.
+    # One independent stream per tag: the step number for the uniform
+    # pick, "t:a:c"/"t:a:r"/"t:f"/"t:s"/"t:u" for the samplers that burn
+    # several draws per step; a Column tag folds the attempt in per row.
+    tag_col = F.lit(tag) if isinstance(tag, (int, str)) else tag
     h = F.md5(F.concat_ws("-", walk_id, tag_col, F.lit(seed)))
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
 
 
-def indexed_adjacency(edges: DataFrame) -> DataFrame:
-    """(src, idx, dst, outdeg): dedup'd out-adjacency with a dense
-    0-based per-source index ordered by dst (the determinism contract)."""
-    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
+def _cutter(plan_cuts: bool):
+    return (lambda df: df.localCheckpoint(eager=False)) if plan_cuts else (lambda df: df)
+
+
+def _index(e: DataFrame) -> DataFrame:
+    # dense 0-based per-source index ordered by dst, plus the out-degree
     w = Window.partitionBy("src").orderBy("dst")
     return (
         e.withColumn("idx", F.row_number().over(w) - 1)
@@ -69,19 +70,101 @@ def indexed_adjacency(edges: DataFrame) -> DataFrame:
     )
 
 
-def _adjacency_with_dst_outdeg(adj: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Returns (adj2, deg): ``adj2`` = (src, idx, dst, dst_outdeg) and
-    ``deg`` = (d_id, d_outdeg), one row per non-sink vertex. Attaching
-    the destination's out-degree once is what lets every subsequent
-    step be a pure (src, idx) equi-join with no degree lookup."""
-    deg = adj.where(F.col("idx") == 0).select(
+def indexed_adjacency(edges: DataFrame) -> DataFrame:
+    """(src, idx, dst, outdeg): dedup'd out-adjacency with a dense
+    0-based per-source index ordered by dst (the determinism contract)."""
+    return _index(edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct())
+
+
+def _int_weights(edges: DataFrame, weight_col: str, weight_scale: int) -> DataFrame:
+    """(src, dst, w): self-loop-free edges with integer weights
+    round(weight * weight_scale); parallel edges keep their max."""
+    w_int = F.round(F.col(weight_col) * weight_scale).cast("long")
+    return (
+        edges.filter(F.col("src") != F.col("dst"))
+        .select("src", "dst", w_int.alias("w"))
+        .groupBy("src", "dst")
+        .agg(F.max("w").alias("w"))
+    )
+
+
+def _require_positive(w_min) -> None:
+    # a positive weight that rounds to 0 would make its edge silently
+    # untraversable — and a vertex whose out-edges ALL round to 0 gets
+    # tot=0, a null pick in Spark vs a division-by-zero in the SQL
+    # replay. Fail loudly instead.
+    if w_min is not None and w_min < 1:
+        raise ValueError("integer weights must be >= 1 (raise weight_scale)")
+
+
+def _degrees(adj: DataFrame) -> DataFrame:
+    """(d_id, d_outdeg): one row per non-sink vertex of an indexed
+    adjacency."""
+    return adj.where(F.col("idx") == 0).select(
         F.col("src").alias("d_id"), F.col("outdeg").alias("d_outdeg")
     )
+
+
+def _adjacency_with_dst_outdeg(adj: DataFrame, *cols: str) -> tuple[DataFrame, DataFrame]:
+    """Returns (adj2, deg): ``adj2`` = (src, idx, dst, *cols, dst_outdeg)
+    and ``deg`` = ``_degrees(adj)``. Attaching the destination's
+    out-degree once is what lets every subsequent step be a pure
+    (src, idx) equi-join with no degree lookup."""
+    deg = _degrees(adj)
     adj2 = (
         adj.join(deg, adj["dst"] == deg["d_id"], "left")
-        .select("src", "idx", "dst", F.col("d_outdeg").alias("dst_outdeg"))
+        .select("src", "idx", "dst", *cols, F.col("d_outdeg").alias("dst_outdeg"))
     )
     return adj2, deg
+
+
+def _point_lookup(frame: DataFrame, adj: DataFrame, pick, key: str = "pick_idx") -> DataFrame:
+    # the draw join: the pick index is computed WALK-side and the join
+    # keys on BOTH (vertex, key) = (src, idx), one adjacency row per
+    # frame row; a null pick (sink) matches nothing
+    drawn = frame.withColumn(key, pick)
+    return drawn.join(adj, (drawn["vertex"] == adj["src"]) & (drawn[key] == adj["idx"]))
+
+
+def _walk(edges, vertices, walks_per_vertex, deg, length, step, cut) -> DataFrame:
+    """The walk loop every sampler runs -> (walk_id, step, vertex).
+
+    ``walks_per_vertex`` walks start at each of ``vertices`` (default:
+    every vertex of ``edges``), walk_id = vertex * walks_per_vertex +
+    replica. Step 0's frontier (walk_id, vertex, outdeg) takes its
+    out-degree from ``deg`` (null at a sink); afterwards the frontier
+    ``step(cur, t)`` returns carries whatever its sampler needs, and a
+    walk the step drops (a sink) simply ends. Each step's frontier is
+    ``cut`` — localCheckpoint'ed LAZILY: the plan is compiled to one
+    concrete RDD, so the union branch for step t and step t+1's chain
+    share it and each step computes ONCE. Without the cut, step t's
+    plan restates steps 1..t-1 and corpus generation goes superlinear
+    in walk length (measured: length 12 took 324s vs 9s at length 4 on
+    the same 100k-edge graph; DeepWalk corpora use length 40-80)."""
+    if vertices is None:
+        from fog_spark.engine.superstep import vertices_of
+
+        vertices = cut(vertices_of(edges))
+    starts = vertices.select(
+        F.explode(F.array(*[F.lit(r) for r in range(walks_per_vertex)])).alias("rep"),
+        F.col("id").alias("vertex"),
+    ).select(
+        (F.col("vertex") * walks_per_vertex + F.col("rep")).alias("walk_id"), "vertex"
+    )
+    cur = cut(
+        starts.join(deg, starts["vertex"] == deg["d_id"], "left")
+        .select("walk_id", "vertex", F.col("d_outdeg").alias("outdeg"))
+    )
+    parts = [cur.select("walk_id", F.lit(0).alias("step"), "vertex")]
+    for t in range(1, length + 1):
+        cur = cut(step(cur, t))
+        parts.append(cur.select("walk_id", F.lit(t).alias("step"), "vertex"))
+    while len(parts) > 1:  # halving unions keep the plan shallow
+        parts = [
+            parts[i].unionByName(parts[i + 1]) if i + 1 < len(parts) else parts[i]
+            for i in range(0, len(parts), 2)
+        ]
+    return parts[0]
 
 
 def random_walks(
@@ -95,62 +178,75 @@ def random_walks(
     """(walk_id, step, vertex): ``walks_per_vertex`` hash-driven walks
     from every vertex, each up to ``length`` steps (ending early at
     sinks). walk_id = start_vertex * walks_per_vertex + replica."""
-    _cut = (lambda df: df.localCheckpoint(eager=False)) if plan_cuts else (lambda df: df)
+    cut = _cutter(plan_cuts)
     # the indexed adjacency is compiled to ONE concrete RDD; everything
     # downstream (adj2, deg, every step's join) references that RDD, so
     # the edge derivation + index window run exactly once — separately
     # compiled cuts would each re-execute the (possibly expensive,
     # unpersisted) upstream edge derivation
-    adj = _cut(indexed_adjacency(edges))
-    adj2, deg = _adjacency_with_dst_outdeg(adj)
-    adj2 = _cut(adj2)
-    if vertices is None:
-        from fog_spark.engine.superstep import vertices_of
+    adj2, deg = _adjacency_with_dst_outdeg(cut(indexed_adjacency(edges)))
+    adj2 = cut(adj2)
 
-        vertices = _cut(vertices_of(edges))
-    starts = vertices.select(
-        F.explode(
-            F.array(*[F.lit(r) for r in range(walks_per_vertex)])
-        ).alias("rep"),
-        F.col("id").alias("vertex"),
-    ).select(
-        (F.col("vertex") * walks_per_vertex + F.col("rep")).alias("walk_id"),
-        "vertex",
-    )
-    # one degree lookup for step 0 only; afterwards the frontier carries it.
-    # Each step's frontier is localCheckpoint'ed LAZILY (eager=False):
-    # the plan is compiled to one concrete RDD now, so the union branch
-    # for step t and step t+1's chain share it — each step computes
-    # ONCE. Without the cut, step t's plan restates steps 1..t-1 and
-    # corpus generation goes superlinear in walk length (measured:
-    # length 12 took 324s vs 9s at length 4 on the same 100k-edge
-    # graph; DeepWalk corpora use length 40-80).
-    cur = _cut(
-        starts.join(deg, starts["vertex"] == deg["d_id"], "left")
-        .select("walk_id", "vertex", F.col("d_outdeg").alias("outdeg"))
-    )
-    parts = [cur.select("walk_id", F.lit(0).alias("step"), "vertex")]
-    for t in range(1, length + 1):
-        pick = _hash_idx(F.col("walk_id"), t, seed)
-        stepped = cur.select(
-            "walk_id", "vertex", F.pmod(pick, F.col("outdeg")).alias("pick_idx")
+    def step(cur, t):
+        pick = F.pmod(_hash_tag(F.col("walk_id"), t, seed), F.col("outdeg"))
+        return _point_lookup(cur, adj2, pick).select(
+            "walk_id", F.col("dst").alias("vertex"), F.col("dst_outdeg").alias("outdeg")
         )
-        nxt = stepped.join(
-            adj2,
-            (stepped["vertex"] == adj2["src"]) & (stepped["pick_idx"] == adj2["idx"]),
-        )
-        cur = _cut(nxt.select(
-            "walk_id",
-            F.col("dst").alias("vertex"),
-            F.col("dst_outdeg").alias("outdeg"),
-        ))
-        parts.append(cur.select("walk_id", F.lit(t).alias("step"), "vertex"))
-    while len(parts) > 1:  # halving unions keep the plan shallow
-        parts = [
-            parts[i].unionByName(parts[i + 1]) if i + 1 < len(parts) else parts[i]
-            for i in range(0, len(parts), 2)
-        ]
-    return parts[0]
+
+    return _walk(edges, vertices, walks_per_vertex, deg, length, step, cut)
+
+
+def _n2v_weight(frame: DataFrame, adj: DataFrame, p: int, q: int) -> DataFrame:
+    """``frame`` (.., prev, cand) plus ``w``, the scaled integer node2vec
+    weight of cand: q for a return, p*q if the edge prev->cand exists,
+    else p."""
+    eset = adj.select(F.col("src").alias("p_src"), F.col("dst").alias("p_dst"))
+    flagged = frame.join(
+        eset, (frame["prev"] == eset["p_src"]) & (frame["cand"] == eset["p_dst"]), "left"
+    )
+    w = (
+        F.when(F.col("cand") == F.col("prev"), F.lit(q))
+        .when(F.col("p_src").isNotNull(), F.lit(p * q))
+        .otherwise(F.lit(p))
+        .cast("long")
+    )
+    return flagged.withColumn("w", w).drop("p_src", "p_dst")
+
+
+def _holds(r):
+    # the candidate whose cumulative-weight range [cum - w, cum) holds r
+    return (r >= F.col("cum") - F.col("w")) & (r < F.col("cum"))
+
+
+def _cumulative_pick(live: DataFrame, adj: DataFrame, p: int, q: int, h) -> DataFrame:
+    """The exact node2vec step for the walks of ``live`` (walk_id,
+    vertex, prev, ..): gather each walk's neighborhood, weight it, and
+    choose the cand-ordered neighbor whose cumulative range holds
+    r = h mod total weight -> (walk_id, vertex, prev)."""
+    cand = live.join(adj, live["vertex"] == adj["src"]).select(
+        "walk_id", live["vertex"], "prev", F.col("dst").alias("cand")
+    )
+    by_walk = Window.partitionBy("walk_id")
+    wc = (
+        _n2v_weight(cand, adj, p, q)
+        .withColumn("cum", F.sum("w").over(
+            by_walk.orderBy("cand").rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("tot", F.sum("w").over(by_walk))
+    )
+    return wc.where(_holds(F.pmod(h, F.col("tot")))).select(
+        "walk_id", F.col("cand").alias("vertex"), F.col("vertex").alias("prev")
+    )
+
+
+def _first_step(cur: DataFrame, adj2: DataFrame, h) -> DataFrame:
+    # a second-order walk's step 1 has no previous vertex yet: the
+    # uniform (src, idx) point lookup, carrying prev and outdeg
+    return _point_lookup(cur, adj2, F.pmod(h, F.col("outdeg"))).select(
+        "walk_id",
+        F.col("dst").alias("vertex"),
+        F.col("src").alias("prev"),
+        F.col("dst_outdeg").alias("outdeg"),
+    )
 
 
 def node2vec_walks(
@@ -192,70 +288,55 @@ def node2vec_walks(
     """
     if p < 1 or q < 1:
         raise ValueError("p and q must be positive integers (weights scale by p*q)")
-    _cut = (lambda df: df.localCheckpoint(eager=False)) if plan_cuts else (lambda df: df)
+    cut = _cutter(plan_cuts)
     # one concrete RDD for the indexed adjacency (see random_walks):
     # steps reference it, its degree/eset projections stay cheap
-    adj = _cut(indexed_adjacency(edges))
+    adj = cut(indexed_adjacency(edges))
     adj2, deg = _adjacency_with_dst_outdeg(adj)
-    adj2 = _cut(adj2)
-    eset = adj.select(F.col("src").alias("p_src"), F.col("dst").alias("p_dst"))
-    if vertices is None:
-        from fog_spark.engine.superstep import vertices_of
+    adj2 = cut(adj2)
 
-        vertices = _cut(vertices_of(edges))
-    starts = vertices.select(
-        F.explode(F.array(*[F.lit(r) for r in range(walks_per_vertex)])).alias("rep"),
-        F.col("id").alias("vertex"),
-    ).select(
-        (F.col("vertex") * walks_per_vertex + F.col("rep")).alias("walk_id"), "vertex"
+    def step(cur, t):
+        h = _hash_tag(F.col("walk_id"), t, seed)
+        return _first_step(cur, adj2, h) if t == 1 else _cumulative_pick(cur, adj, p, q, h)
+
+    return _walk(edges, vertices, walks_per_vertex, deg, length, step, cut)
+
+
+def _draws(cur: DataFrame, adj2: DataFrame, attempts: int, t: int, seed: int, *carry: str) -> DataFrame:
+    """All ``attempts`` uniform (src, idx) draws of step t for every walk
+    of ``cur``, in ONE exploded point-lookup join (attempts x |walks|
+    rows, still O(|walks|)) -> (walk_id, a, cand, cand_outdeg, *carry).
+    A sequential attempt loop would schedule attempts x 2 joins of tiny
+    stages per step, and the constant factor dominates (measured 512s
+    vs this shape's seconds on the 200k funnel)."""
+    exploded = cur.withColumn("a", F.explode(F.array(*[F.lit(a) for a in range(attempts)])))
+    tag = F.concat(F.lit(f"{t}:"), F.col("a"), F.lit(":c"))
+    pick = F.pmod(_hash_tag(F.col("walk_id"), tag, seed), F.col("outdeg"))
+    return _point_lookup(exploded, adj2, pick).select(
+        "walk_id", "a", F.col("dst").alias("cand"), F.col("dst_outdeg").alias("cand_outdeg"), *carry
     )
-    parts = [starts.select("walk_id", F.lit(0).alias("step"), "vertex")]
-    # step 1: uniform point lookup (no previous vertex yet)
-    s0 = starts.join(deg, starts["vertex"] == deg["d_id"], "left").select(
-        "walk_id", "vertex", F.pmod(_hash_idx(F.col("walk_id"), 1, seed), F.col("d_outdeg")).alias("pick_idx")
+
+
+def _accept_bit(t: int, seed: int, bound: int):
+    # attempt a of step t accepts iff its own hash mod bound < its weight
+    tag = F.concat(F.lit(f"{t}:"), F.col("a"), F.lit(":r"))
+    return F.pmod(_hash_tag(F.col("walk_id"), tag, seed), F.lit(bound)) < F.col("w")
+
+
+def _first_accepted(drawn: DataFrame, acc, **carry: str) -> DataFrame:
+    """Per walk, the lowest-numbered draw passing ``acc`` -> (walk_id,
+    vertex, outdeg, *carry), each carry key taken from its drawn column."""
+    return (
+        drawn.where(acc)
+        .groupBy("walk_id")
+        .agg(F.min(F.struct("a", "cand", "cand_outdeg", *carry.values())).alias("b"))
+        .select(
+            "walk_id",
+            F.col("b.cand").alias("vertex"),
+            F.col("b.cand_outdeg").alias("outdeg"),
+            *[F.col(f"b.{c}").alias(k) for k, c in carry.items()],
+        )
     )
-    j1 = s0.join(adj2, (s0["vertex"] == adj2["src"]) & (s0["pick_idx"] == adj2["idx"]))
-    cur = _cut(j1.select(
-        "walk_id", F.col("dst").alias("vertex"), F.col("src").alias("prev")
-    ))
-    parts.append(cur.select("walk_id", F.lit(1).alias("step"), "vertex"))
-    for t in range(2, length + 1):
-        cand = cur.join(adj, cur["vertex"] == adj["src"]).select(
-            "walk_id", cur["vertex"], "prev", F.col("dst").alias("cand")
-        )
-        flagged = cand.join(
-            eset,
-            (cand["prev"] == eset["p_src"]) & (cand["cand"] == eset["p_dst"]),
-            "left",
-        )
-        w = (
-            F.when(F.col("cand") == F.col("prev"), F.lit(q))
-            .when(F.col("p_src").isNotNull(), F.lit(p * q))
-            .otherwise(F.lit(p))
-            .cast("long")
-        )
-        win_cum = (
-            Window.partitionBy("walk_id").orderBy("cand")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        win_tot = Window.partitionBy("walk_id")
-        wc = (
-            flagged.withColumn("w", w)
-            .withColumn("cum", F.sum("w").over(win_cum))
-            .withColumn("tot", F.sum("w").over(win_tot))
-        )
-        r = F.pmod(_hash_idx(F.col("walk_id"), t, seed), F.col("tot"))
-        sel = wc.where((r >= F.col("cum") - F.col("w")) & (r < F.col("cum")))
-        cur = _cut(sel.select(
-            "walk_id", F.col("cand").alias("vertex"), F.col("vertex").alias("prev")
-        ))  # per-step plan cut, see random_walks
-        parts.append(cur.select("walk_id", F.lit(t).alias("step"), "vertex"))
-    while len(parts) > 1:
-        parts = [
-            parts[i].unionByName(parts[i + 1]) if i + 1 < len(parts) else parts[i]
-            for i in range(0, len(parts), 2)
-        ]
-    return parts[0]
 
 
 def node2vec_walks_rejection(
@@ -298,116 +379,25 @@ def node2vec_walks_rejection(
     if attempts < 1:
         raise ValueError("attempts must be >= 1")
     big_w = max(q, p * q, p)
-    _cut = (lambda df: df.localCheckpoint(eager=False)) if plan_cuts else (lambda df: df)
-    adj = _cut(indexed_adjacency(edges))
+    cut = _cutter(plan_cuts)
+    adj = cut(indexed_adjacency(edges))
     adj2, deg = _adjacency_with_dst_outdeg(adj)
-    adj2 = _cut(adj2)
-    eset = adj.select(F.col("src").alias("p_src"), F.col("dst").alias("p_dst"))
-    if vertices is None:
-        from fog_spark.engine.superstep import vertices_of
+    adj2 = cut(adj2)
 
-        vertices = _cut(vertices_of(edges))
-    starts = vertices.select(
-        F.explode(F.array(*[F.lit(r) for r in range(walks_per_vertex)])).alias("rep"),
-        F.col("id").alias("vertex"),
-    ).select(
-        (F.col("vertex") * walks_per_vertex + F.col("rep")).alias("walk_id"), "vertex"
-    )
-    parts = [starts.select("walk_id", F.lit(0).alias("step"), "vertex")]
-    # step 1 is first-order: uniform point lookup, carry prev + outdeg
-    s0 = starts.join(deg, starts["vertex"] == deg["d_id"], "left").select(
-        "walk_id", "vertex",
-        F.pmod(_hash_tag(F.col("walk_id"), "1:c", seed), F.col("d_outdeg")).alias("pick_idx"),
-    )
-    j1 = s0.join(adj2, (s0["vertex"] == adj2["src"]) & (s0["pick_idx"] == adj2["idx"]))
-    cur = _cut(j1.select(
-        "walk_id",
-        F.col("dst").alias("vertex"),
-        F.col("src").alias("prev"),
-        F.col("dst_outdeg").alias("outdeg"),
-    ))
-    parts.append(cur.select("walk_id", F.lit(1).alias("step"), "vertex"))
-
-    def weighted(cand_frame, cand_col):
-        """Attach the scaled integer node2vec weight of cand_col."""
-        flagged = cand_frame.join(
-            eset,
-            (cand_frame["prev"] == eset["p_src"]) & (cand_frame[cand_col] == eset["p_dst"]),
-            "left",
-        )
-        w = (
-            F.when(F.col(cand_col) == F.col("prev"), F.lit(q))
-            .when(F.col("p_src").isNotNull(), F.lit(p * q))
-            .otherwise(F.lit(p))
-            .cast("long")
-        )
-        return flagged.withColumn("w", w).drop("p_src", "p_dst")
-
-    # all attempts are drawn in ONE exploded join per step (attempts x
-    # |walks| rows, still O(|walks|)) and the winner is the FIRST
-    # accepting attempt via a min-struct aggregation — a sequential
-    # attempt loop would schedule attempts x 2 joins of tiny stages per
-    # step, and the constant factor dominates (measured 512s vs this
-    # shape's seconds on the 200k funnel)
-    attempt_arr = F.array(*[F.lit(a) for a in range(attempts)])
-    for t in range(2, length + 1):
-        live = cur  # (walk_id, vertex, prev, outdeg); sinks have null outdeg
-        exploded = live.select(
-            "walk_id", "vertex", "prev", "outdeg", F.explode(attempt_arr).alias("a")
-        )
-        tagc = F.concat(F.lit(f"{t}:"), F.col("a"), F.lit(":c"))
-        tagr = F.concat(F.lit(f"{t}:"), F.col("a"), F.lit(":r"))
-        pick = F.pmod(_hash_tag(F.col("walk_id"), tagc, seed), F.col("outdeg"))
-        drawn = exploded.withColumn("pick_idx", pick).join(
-            adj2,
-            (exploded["vertex"] == adj2["src"]) & (F.col("pick_idx") == adj2["idx"]),
-        ).select(
-            "walk_id", exploded["vertex"], "prev", "a",
-            F.col("dst").alias("cand"), F.col("dst_outdeg").alias("cand_outdeg"),
-        )
-        wd = weighted(drawn, "cand")
-        acc = F.pmod(_hash_tag(F.col("walk_id"), tagr, seed), F.lit(big_w)) < F.col("w")
-        winners = (
-            wd.where(acc)
-            .groupBy("walk_id")
-            .agg(F.min(F.struct("a", "cand", "cand_outdeg", "vertex")).alias("b"))
-            .select(
-                "walk_id",
-                F.col("b.cand").alias("vertex"),
-                F.col("b.vertex").alias("prev"),
-                F.col("b.cand_outdeg").alias("outdeg"),
-            )
-        )
+    def step(cur, t):  # cur: (walk_id, vertex, prev, outdeg); sinks have null outdeg
+        if t == 1:
+            return _first_step(cur, adj2, _hash_tag(F.col("walk_id"), "1:c", seed))
+        drawn = _n2v_weight(_draws(cur, adj2, attempts, t, seed, "vertex", "prev"), adj, p, q)
+        winners = _first_accepted(drawn, _accept_bit(t, seed, big_w), prev="vertex")
         # exact cumulative-weight fallback for the residue (and only it)
-        live = live.join(winners.select("walk_id"), "walk_id", "left_anti")
-        cand = live.join(adj, live["vertex"] == adj["src"]).select(
-            "walk_id", live["vertex"], "prev", F.col("dst").alias("cand")
+        residue = cur.join(winners.select("walk_id"), "walk_id", "left_anti")
+        fb = _cumulative_pick(residue, adj, p, q, _hash_tag(F.col("walk_id"), f"{t}:f", seed))
+        fb = fb.join(deg, fb["vertex"] == deg["d_id"], "left").select(
+            "walk_id", "vertex", "prev", F.col("d_outdeg").alias("outdeg")
         )
-        wc = weighted(cand, "cand")
-        win_cum = (
-            Window.partitionBy("walk_id").orderBy("cand")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        wc = (
-            wc.withColumn("cum", F.sum("w").over(win_cum))
-            .withColumn("tot", F.sum("w").over(Window.partitionBy("walk_id")))
-        )
-        r = F.pmod(_hash_tag(F.col("walk_id"), f"{t}:f", seed), F.col("tot"))
-        fb = wc.where((r >= F.col("cum") - F.col("w")) & (r < F.col("cum")))
-        fb_next = fb.join(deg, fb["cand"] == deg["d_id"], "left").select(
-            "walk_id",
-            F.col("cand").alias("vertex"),
-            fb["vertex"].alias("prev"),
-            F.col("d_outdeg").alias("outdeg"),
-        )
-        cur = _cut(winners.unionByName(fb_next))
-        parts.append(cur.select("walk_id", F.lit(t).alias("step"), "vertex"))
-    while len(parts) > 1:
-        parts = [
-            parts[i].unionByName(parts[i + 1]) if i + 1 < len(parts) else parts[i]
-            for i in range(0, len(parts), 2)
-        ]
-    return parts[0]
+        return winners.unionByName(fb)
+
+    return _walk(edges, vertices, walks_per_vertex, deg, length, step, cut)
 
 
 def weighted_random_walks(
@@ -439,100 +429,34 @@ def weighted_random_walks(
     """
     if attempts < 1:
         raise ValueError("attempts must be >= 1")
-    _cut = (lambda df: df.localCheckpoint(eager=False)) if plan_cuts else (lambda df: df)
-    w_int = F.round(F.col(weight_col) * weight_scale).cast("long")
-    ew = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst", w_int.alias("w"))
-        .groupBy("src", "dst")
-        .agg(F.max("w").alias("w"))  # dedup parallel edges deterministically
-    )
+    cut = _cutter(plan_cuts)
     wnd = Window.partitionBy("src").orderBy("dst")
-    adj = _cut(
-        ew.withColumn("idx", F.row_number().over(wnd) - 1)
-        .withColumn("outdeg", F.count(F.lit(1)).over(Window.partitionBy("src")))
+    adj = cut(
+        _index(_int_weights(edges, weight_col, weight_scale))
         .withColumn(
             "cum", F.sum("w").over(wnd.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         )
         .withColumn("tot", F.sum("w").over(Window.partitionBy("src")))
     )
     wrow = adj.agg(F.max("w").alias("mx"), F.min("w").alias("mn")).collect()[0]
-    w_max, w_min = wrow["mx"], wrow["mn"]
-    if w_max is None:
-        return edges.sparkSession.createDataFrame([], "walk_id long, step int, vertex long")
-    if w_min < 1:
-        # a positive weight that rounds to 0 would make its edge
-        # silently untraversable — and a vertex whose out-edges ALL
-        # round to 0 gets tot=0, a null pick in Spark vs a
-        # division-by-zero in the SQL replay. Fail loudly instead.
-        raise ValueError("integer weights must be >= 1 (raise weight_scale)")
-    deg = adj.where(F.col("idx") == 0).select(
-        F.col("src").alias("d_id"), F.col("outdeg").alias("d_outdeg")
-    )
-    adj2 = _cut(
-        adj.join(deg, adj["dst"] == deg["d_id"], "left")
-        .select("src", "idx", "dst", "w", F.col("d_outdeg").alias("dst_outdeg"))
-    )
-    if vertices is None:
-        from fog_spark.engine.superstep import vertices_of
+    _require_positive(wrow["mn"])
+    # no walkable edge: no draw joins, so any accept bound will do
+    w_max = int(wrow["mx"]) if wrow["mx"] is not None else 1
+    adj2, deg = _adjacency_with_dst_outdeg(adj, "w")
+    adj2 = cut(adj2)
 
-        vertices = _cut(vertices_of(edges))
-    starts = vertices.select(
-        F.explode(F.array(*[F.lit(r) for r in range(walks_per_vertex)])).alias("rep"),
-        F.col("id").alias("vertex"),
-    ).select(
-        (F.col("vertex") * walks_per_vertex + F.col("rep")).alias("walk_id"), "vertex"
-    )
-    cur = _cut(
-        starts.join(deg, starts["vertex"] == deg["d_id"], "left")
-        .select("walk_id", "vertex", F.col("d_outdeg").alias("outdeg"))
-    )
-    parts = [cur.select("walk_id", F.lit(0).alias("step"), "vertex")]
-    attempt_arr = F.array(*[F.lit(a) for a in range(attempts)])
-    for t in range(1, length + 1):
-        live = cur
-        exploded = live.select(
-            "walk_id", "vertex", "outdeg", F.explode(attempt_arr).alias("a")
-        )
-        tagc = F.concat(F.lit(f"{t}:"), F.col("a"), F.lit(":c"))
-        tagr = F.concat(F.lit(f"{t}:"), F.col("a"), F.lit(":r"))
-        pick = F.pmod(_hash_tag(F.col("walk_id"), tagc, seed), F.col("outdeg"))
-        drawn = exploded.withColumn("pick_idx", pick).join(
-            adj2,
-            (exploded["vertex"] == adj2["src"]) & (F.col("pick_idx") == adj2["idx"]),
-        ).select(
-            "walk_id", "a", "w",
-            F.col("dst").alias("cand"), F.col("dst_outdeg").alias("cand_outdeg"),
-        )
-        acc = F.pmod(_hash_tag(F.col("walk_id"), tagr, seed), F.lit(int(w_max))) < F.col("w")
-        winners = (
-            drawn.where(acc)
-            .groupBy("walk_id")
-            .agg(F.min(F.struct("a", "cand", "cand_outdeg")).alias("b"))
-            .select(
-                "walk_id",
-                F.col("b.cand").alias("vertex"),
-                F.col("b.cand_outdeg").alias("outdeg"),
-            )
-        )
-        residue = live.join(winners.select("walk_id"), "walk_id", "left_anti")
+    def step(cur, t):  # cur: (walk_id, vertex, outdeg)
+        drawn = _draws(cur, adj2, attempts, t, seed, "w")
+        winners = _first_accepted(drawn, _accept_bit(t, seed, w_max))
+        residue = cur.join(winners.select("walk_id"), "walk_id", "left_anti")
         r = F.pmod(_hash_tag(F.col("walk_id"), f"{t}:f", seed), F.col("tot"))
-        fbj = residue.join(adj, residue["vertex"] == adj["src"]).where(
-            (r >= F.col("cum") - F.col("w")) & (r < F.col("cum"))
+        fb = residue.join(adj, residue["vertex"] == adj["src"]).where(_holds(r))
+        fb = fb.join(deg, fb["dst"] == deg["d_id"], "left").select(
+            "walk_id", F.col("dst").alias("vertex"), F.col("d_outdeg").alias("outdeg")
         )
-        fb_next = fbj.join(deg, fbj["dst"] == deg["d_id"], "left").select(
-            "walk_id",
-            F.col("dst").alias("vertex"),
-            F.col("d_outdeg").alias("outdeg"),
-        )
-        cur = _cut(winners.unionByName(fb_next))
-        parts.append(cur.select("walk_id", F.lit(t).alias("step"), "vertex"))
-    while len(parts) > 1:
-        parts = [
-            parts[i].unionByName(parts[i + 1]) if i + 1 < len(parts) else parts[i]
-            for i in range(0, len(parts), 2)
-        ]
-    return parts[0]
+        return winners.unionByName(fb)
+
+    return _walk(edges, vertices, walks_per_vertex, deg, length, step, cut)
 
 
 # ---------------------------------------------------------------------------
@@ -576,16 +500,8 @@ def build_alias_tables(
     import numpy as np
     import pandas as pd
 
-    w_int = F.round(F.col(weight_col) * weight_scale).cast("long")
-    ew = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst", w_int.alias("w"))
-        .groupBy("src", "dst")
-        .agg(F.max("w").alias("w"))
-    )
-    mn = ew.agg(F.min("w").alias("mn")).collect()[0]["mn"]
-    if mn is not None and mn < 1:
-        raise ValueError("integer weights must be >= 1 (raise weight_scale)")
+    ew = _int_weights(edges, weight_col, weight_scale)
+    _require_positive(ew.agg(F.min("w").alias("mn")).collect()[0]["mn"])
 
     def _build_block(pdf: pd.DataFrame) -> pd.DataFrame:
         m = len(pdf)
@@ -659,9 +575,7 @@ def build_alias_tables(
     # cut once: raw feeds BOTH the degree lookup and the table itself —
     # uncut, the pandas build would execute twice (union-branch lore)
     raw = dist.mapInPandas(_build, schema=_ALIAS_SCHEMA).localCheckpoint(eager=False)
-    deg = raw.where(F.col("idx") == 0).select(
-        F.col("src").alias("d_id"), F.col("outdeg").alias("d_outdeg")
-    )
+    deg = _degrees(raw)
     out = (
         raw.drop("dst_outdeg", "alias_outdeg")
         .join(deg, raw["dst"] == deg["d_id"], "left")
@@ -693,44 +607,17 @@ def weighted_random_walks_alias(
     stream, so corpora differ walk-by-walk while the per-edge
     transition distribution is identical.
     """
-    _cut = (lambda df: df.localCheckpoint(eager=False)) if plan_cuts else (lambda df: df)
-    alias = _cut(build_alias_tables(edges, weight_col, weight_scale))
-    deg = alias.where(F.col("idx") == 0).select(
-        F.col("src").alias("d_id"), F.col("outdeg").alias("d_outdeg")
-    )
-    if vertices is None:
-        from fog_spark.engine.superstep import vertices_of
+    cut = _cutter(plan_cuts)
+    alias = cut(build_alias_tables(edges, weight_col, weight_scale))
 
-        vertices = _cut(vertices_of(edges))
-    starts = vertices.select(
-        F.explode(F.array(*[F.lit(r) for r in range(walks_per_vertex)])).alias("rep"),
-        F.col("id").alias("vertex"),
-    ).select(
-        (F.col("vertex") * walks_per_vertex + F.col("rep")).alias("walk_id"), "vertex"
-    )
-    cur = _cut(
-        starts.join(deg, starts["vertex"] == deg["d_id"], "left")
-        .select("walk_id", "vertex", F.col("d_outdeg").alias("outdeg"))
-    )
-    parts = [cur.select("walk_id", F.lit(0).alias("step"), "vertex")]
-    for t in range(1, length + 1):
+    def step(cur, t):
         slot = F.pmod(_hash_tag(F.col("walk_id"), f"{t}:s", seed), F.col("outdeg"))
-        drawn = cur.withColumn("slot", slot).join(
-            alias, (cur["vertex"] == alias["src"]) & (F.col("slot") == alias["idx"])
-        )
-        u = F.pmod(_hash_tag(F.col("walk_id"), f"{t}:u", seed), F.col("tot"))
-        nxt = drawn.select(
+        drawn = _point_lookup(cur, alias, slot, key="slot")
+        keep = F.pmod(_hash_tag(F.col("walk_id"), f"{t}:u", seed), F.col("tot")) < F.col("prob")
+        return drawn.select(
             "walk_id",
-            F.when(u < F.col("prob"), F.col("dst")).otherwise(F.col("alias_dst")).alias("vertex"),
-            F.when(u < F.col("prob"), F.col("dst_outdeg"))
-            .otherwise(F.col("alias_outdeg"))
-            .alias("outdeg"),
+            F.when(keep, F.col("dst")).otherwise(F.col("alias_dst")).alias("vertex"),
+            F.when(keep, F.col("dst_outdeg")).otherwise(F.col("alias_outdeg")).alias("outdeg"),
         )
-        cur = _cut(nxt)
-        parts.append(cur.select("walk_id", F.lit(t).alias("step"), "vertex"))
-    while len(parts) > 1:
-        parts = [
-            parts[i].unionByName(parts[i + 1]) if i + 1 < len(parts) else parts[i]
-            for i in range(0, len(parts), 2)
-        ]
-    return parts[0]
+
+    return _walk(edges, vertices, walks_per_vertex, _degrees(alias), length, step, cut)

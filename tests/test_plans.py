@@ -216,6 +216,29 @@ def test_alias_walk_step_is_point_lookup_join(spark):
             raise AssertionError(f"slot applied as post-join filter: {s[:200]}")
 
 
+def test_rejection_walk_draws_are_point_lookup_joins(spark):
+    """The rejection samplers' draw joins must key on BOTH (vertex,
+    pick_idx) = (src, idx), one adjacency row per attempt. (Their
+    residue fallback filters on the cumulative range by design, so a
+    pmod filter is allowed here.)"""
+    import re
+
+    from fog_spark.algorithms.walks import node2vec_walks_rejection, weighted_random_walks
+
+    edges = cooccur_edges(spark, SF)
+    for w in (
+        node2vec_walks_rejection(edges, length=2, p=2, q=3, seed=42, attempts=2, plan_cuts=False),
+        weighted_random_walks(edges, length=2, seed=42, attempts=2, plan_cuts=False),
+    ):
+        draw_joins = re.findall(
+            r"(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)\s*"
+            r"(?:\w+\s+)?\[([^\]]*pick_idx[^\]]*)\],\s*\[([^\]]*)\]", _plan(w))
+        assert len(draw_joins) >= 2, f"expected two-key draw joins, got {draw_joins}"
+        for left_keys, right_keys in draw_joins:
+            assert "vertex" in left_keys and "pick_idx" in left_keys
+            assert "src" in right_keys and "idx" in right_keys
+
+
 def test_packing_offsets_have_no_global_window(spark):
     """The distributed prefix sum must not funnel the ledger through a
     single-partition global window: every Window in the plan is

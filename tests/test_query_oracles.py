@@ -1,8 +1,9 @@
 """The graph queries whose Spark side runs the engine's own code — the
-loops capped at k supersteps, and the triangle family's shared stream —
-each against its DuckDB oracle (k dense rounds as chained CTEs) on the
-sf0.001 smoke tables: tools/check_contract.py's comparison for these
-queries, inside the test suite."""
+loops capped at k supersteps, the triangle family's shared stream and
+the hash-replayed walk samplers — each against its DuckDB oracle (k
+dense rounds as chained CTEs) on the sf0.001 smoke tables:
+tools/check_contract.py's comparison for these queries, inside the
+test suite."""
 
 import duckdb
 import pytest
@@ -23,6 +24,10 @@ NAMES = [
     "triangle_total",
     "ktruss4_r2",
     "triad_full",
+    "random_walks_k4",
+    "node2vec_k3",
+    "node2vec_rej_k3",
+    "weighted_walks_k3",
 ]
 
 

@@ -15,7 +15,8 @@ import sys
 
 import duckdb
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -41,6 +42,13 @@ def main():
 
     import __spark_entry__ as entrymod
     from fog_spark.session import get_spark
+
+    # the Python UDF workers import fog_spark too: they see the
+    # environment, not this process's sys.path, so started outside the
+    # checkout they would miss it without the root on PYTHONPATH
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
 
     # inputs are a few MB: a small driver heap bounds the gate's JVM,
     # which grows to 6-8 GB resident on get_spark's 24g default
