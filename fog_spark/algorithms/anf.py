@@ -36,12 +36,15 @@ the classic ANF curve N(r) used for effective-diameter estimation.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 from fog_spark.datapipe.sketches import _KMV_BITS, _kmv_hash
-from fog_spark.engine.superstep import materialize, materialize_observed, vertices_of
+from fog_spark.engine.superstep import (
+    materialize,
+    materialize_observed,
+    run_supersteps,
+    vertices_of,
+)
 
 
 def _merged_bottom_k(k: int):
@@ -96,14 +99,16 @@ def estimate_from_sketch(k: int):
 
 def _seed(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(fwd, state_0): the simple self-loop-free edge table (cut once,
-    read every round) and each vertex's radius-0 sketch B(v, 0) = {v}."""
+    read every round) and each vertex's radius-0 sketch B(v, 0) = {v}
+    — for every endpoint of ``edges``, so a vertex whose only edge is
+    a self-loop keeps its ball {v}."""
     fwd = (
         edges.filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
         .distinct()
         .localCheckpoint(eager=False)
     )
-    return fwd, vertices_of(fwd).select("id", F.array(_kmv_hash(F.col("id"))).alias("hvs"))
+    return fwd, vertices_of(edges).select("id", F.array(_kmv_hash(F.col("id"))).alias("hvs"))
 
 
 def _grow(fwd: DataFrame, state: DataFrame, k: int) -> DataFrame:
@@ -123,30 +128,21 @@ def neighborhood_sketches(
     over the directed graph ``edges`` (src, dst). Self-loops are
     ignored (v is in its own ball regardless).
 
-    Checkpoint/resume through ``ctx`` like every other superstep
-    algorithm — the sketch array IS the state, so a resumed run
+    One round per superstep of ``run_supersteps``, which owns resume
+    and the commit: the sketch array IS the state, so a resumed run
     continues growing balls from the committed round.
     """
     fwd, state = _seed(edges)
-    start = 0
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(radius)
-        if rp is not None:
-            start, state = rp
-    if start == 0:
-        state = materialize(state, ctx, 0)
 
-    for r in range(start + 1, radius + 1):
-        t0 = time.time()
+    def grow(state, r):
         # total sketch mass rides the materialize job: the ANF curve
         # N(r) ~ Σ_v |sketch| saturates exactly when the balls do
         state, om = materialize_observed(
             _grow(fwd, state, k), [F.sum(F.size("hvs")).alias("mass")], ctx, r
         )
-        if ctx is not None:
-            ctx.commit(r, active=int(om["mass"] or 0), delta=None,
-                       wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-    return state
+        return state, int(om["mass"] or 0), None, False
+
+    return run_supersteps(state, ctx, radius, grow)
 
 
 def neighborhood_function(

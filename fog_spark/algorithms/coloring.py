@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.algorithms.mis import _priority
+from fog_spark.algorithms.mis import _local_minima, _priority
 from fog_spark.engine.superstep import (
     materialize_observed,
     symmetrize,
@@ -75,18 +75,7 @@ def greedy_coloring(
     prev_nv = None
     while True:
         t += 1
-        nmin = (
-            sym.join(alive.select(F.col("id").alias("src"), F.col("pri").alias("np")), "src")
-            .join(alive.select(F.col("id").alias("dst")), "dst", "left_semi")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("np").alias("nmin"))
-        )
-        winners = (
-            alive.join(nmin, "id", "left")
-            .filter(F.col("nmin").isNull() | (F.col("pri") < F.col("nmin")))
-            .select("id")
-            .localCheckpoint(eager=False)
-        )
+        winners = _local_minima(sym, alive).filter("win").select("id").localCheckpoint(eager=False)
         # forbidden colors: colors of already-colored neighbors
         if colors is None:
             wcol = winners.select("id", F.lit(0).alias("color"))

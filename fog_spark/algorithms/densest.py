@@ -27,6 +27,7 @@ from fractions import Fraction
 
 from pyspark.sql import DataFrame, functions as F
 
+from fog_spark.algorithms.kcore import _alive_degrees
 from fog_spark.engine.superstep import materialize_observed, symmetrize, vertices_of
 
 
@@ -74,15 +75,8 @@ def densest_subgraph(
     prev_nv = None
     while True:
         t += 1
-        ealive = (
-            sym.join(alive.select(F.col("id").alias("src")), "src", "left_semi")
-            .join(alive.select(F.col("id").alias("dst")), "dst", "left_semi")
-        )
-        deg = ealive.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).alias("deg")
-        )
-        st = alive.join(deg, "id", "left").select(
-            "id", F.coalesce("deg", F.lit(0)).alias("deg")
+        st = alive.join(_alive_degrees(sym, alive), "id", "left").select(
+            "id", F.coalesce("degree", F.lit(0)).alias("deg")
         )
         st, om = materialize_observed(
             st,

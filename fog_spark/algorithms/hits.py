@@ -15,15 +15,13 @@ Plan shape per iteration: two scatter joins + two keyed aggregations
 rides its pass's materialization as an OBSERVED metric — two Spark
 jobs per iteration, not four (a separate ``.agg().collect()`` per norm
 used to re-execute the whole scatter join just for the scalar; pinned
-by a job-count test). State is committed per iteration in its
-NORMALIZED form, so the snapshot is exactly what resume needs —
-checkpointable through the same RunContext seam as the other
-algorithms.
+by a job-count test). One iteration is one superstep of
+``engine/superstep.run_supersteps``, which owns resume and the commit;
+the state is committed in its NORMALIZED form, so the snapshot is
+exactly what resume needs.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -31,6 +29,7 @@ from fog_spark.engine.superstep import (
     materialize,
     materialize_observed,
     maybe_broadcast,
+    run_supersteps,
     vertices_of,
 )
 
@@ -45,24 +44,14 @@ def hits(
     rounds, starting from all-ones. Self-loops and duplicate edges are
     kept (each contributes to the sums), matching the textbook
     adjacency-matrix formulation A^T h / A a."""
-    spark = edges.sparkSession
     vertices = vertices if vertices is not None else vertices_of(edges)
     e = edges.select("src", "dst")
-    state = vertices.select("id", F.lit(1.0).alias("authority"), F.lit(1.0).alias("hub"))
+    n = None  # |V|, counted off the step-0 or resumed cut
 
-    start = 0
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(niters)
-        if rp is not None:
-            start, state = rp
-    if start == 0:
-        state = materialize(state, ctx, 0)
-    n = state.count()
-    if n == 0:
-        return state
-
-    for it in range(start + 1, niters + 1):
-        t0 = time.time()
+    def iterate(state, it):
+        nonlocal n
+        if n is None:
+            n = state.count()
         st = maybe_broadcast(state, n)
         # authority pass: gather hub mass over IN-edges
         amsg = e.join(st, e["src"] == st["id"]).select(e["dst"], F.col("hub").alias("m"))
@@ -92,14 +81,11 @@ def hits(
         )
         h_norm = float(om_h["ss"] or 0.0) ** 0.5 or 1.0
         norm = s2.select("id", "authority", (F.col("h_raw") / h_norm).alias("hub"))
-        if ctx is not None:
-            # durable NORMALIZED snapshot (exactly what resume needs) —
-            # a cheap projection scan of the just-checkpointed s2
-            state = materialize(norm, ctx, it)
-            ctx.commit(it, active=n, delta=None, wall_s=time.time() - t0,
-                       lineage=ctx.lineage_of(state))
-        else:
-            # the projection over the checkpointed s2 is already
-            # lineage-cut; no third job needed
-            state = norm
-    return state.select("id", "authority", "hub")
+        # with a ctx: the durable NORMALIZED snapshot (exactly what
+        # resume needs), a cheap projection scan of the just-cut s2;
+        # without: the projection over the cut s2 is already
+        # lineage-cut, no third job needed
+        return (norm if ctx is None else materialize(norm, ctx, it)), n, None, False
+
+    init = vertices.select("id", F.lit(1.0).alias("authority"), F.lit(1.0).alias("hub"))
+    return run_supersteps(init, ctx, niters, iterate).select("id", "authority", "hub")

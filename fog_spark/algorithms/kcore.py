@@ -11,14 +11,34 @@ the surviving-vertex count is OBSERVED on the materialize job
 (engine/superstep.materialize_observed), so one Spark job per round.
 The edge table is re-restricted lazily against the materialized
 survivor set — at 100 TB the round cost is one keyed shuffle over the
-still-alive edges, shrinking every round.
+still-alive edges, shrinking every round. Each round is one superstep
+of ``engine/superstep.run_supersteps``, which owns resume, the step-0
+cut of the vertex set and the commit; a round that drops nobody (or
+everybody) is done.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.engine.superstep import materialize_observed, symmetrize, vertices_of
+from fog_spark.engine.superstep import (
+    materialize_observed,
+    run_supersteps,
+    symmetrize,
+    vertices_of,
+)
+
+
+def _alive_degrees(sym: DataFrame, alive: DataFrame) -> DataFrame:
+    """(id, degree): each alive vertex's degree over the edges of
+    ``sym`` with both endpoints in ``alive`` (id); vertices with no
+    alive neighbor get no row. The peel round of k-core and densest."""
+    return (
+        sym.join(alive.select(F.col("id").alias("src")), "src", "left_semi")
+        .join(alive.select(F.col("id").alias("dst")), "dst", "left_semi")
+        .groupBy(F.col("src").alias("id"))
+        .agg(F.count(F.lit(1)).alias("degree"))
+    )
 
 
 def k_core(
@@ -32,62 +52,35 @@ def k_core(
     degree in the surviving subgraph.
 
     ``rounds=None`` peels to the fixed point (the true k-core);
-    ``rounds=m`` runs exactly m peels (convergence-independent form for
+    ``rounds=m`` runs at most m peels (convergence-independent form for
     external fixed-depth oracles, like the fixed-round graph queries).
 
     ``ctx`` (engine/checkpoint.RunContext): per-round survivor
-    snapshots + metrics, resumable mid-peel like cc/lpa — a killed run
-    restarted with the same run dir continues from the last committed
-    round and reaches the identical fixed point.
+    snapshots + metrics; a killed run restarted with the same run dir
+    continues from the last committed round and reaches the identical
+    fixed point, and a converged run dir returns without a round.
     """
-    import time
-
     vertices = vertices if vertices is not None else vertices_of(edges)
     # persist: every peel round re-reads the symmetrized edge table
     sym = symmetrize(edges).distinct().persist()
+    n_alive = None  # |alive| entering the round, counted off the first cut
+
+    def peel(alive, m):
+        nonlocal n_alive
+        if n_alive is None:
+            n_alive = alive.count()
+        survivors, om = materialize_observed(
+            _alive_degrees(sym, alive).filter(F.col("degree") >= k),
+            [F.count(F.lit(1)).alias("n")], ctx, m,
+        )
+        n_surv = int(om["n"] or 0)
+        done = n_surv in (n_alive, 0)  # nobody dropped / all gone
+        n_alive = n_surv
+        return survivors, n_surv, None, done
+
     try:
-        alive = vertices.select("id")
-        n_alive: int | None = None  # counted once, lazily, for round-1 fixed-point detection
-        m = 0
-        if ctx is not None:
-            # fixed-depth mode caps the resume at the REQUESTED round:
-            # a deeper earlier run must not silently answer for round k
-            # (raises if retention vacuumed the exact round's snapshot)
-            rp = ctx.resume_point() if rounds is None else ctx.resume_point_at_most(rounds)
-            if rp is not None:
-                m, state = rp
-                if rounds is not None and m >= rounds:
-                    return state.select("id", "degree")
-                alive = state.select("id")
-                if rounds is None:
-                    # fixed-point detection needs |alive| of the resumed round
-                    n_alive = alive.count()
-        while True:
-            t0 = time.time()
-            deg = (
-                sym.join(alive.select(F.col("id").alias("src")), "src", "left_semi")
-                .join(alive.select(F.col("id").alias("dst")), "dst", "left_semi")
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.count(F.lit(1)).alias("degree"))
-            )
-            survivors = deg.filter(F.col("degree") >= k)
-            survivors, om = materialize_observed(
-                survivors, [F.count(F.lit(1)).alias("n")], ctx, m + 1
-            )
-            n_surv = int(om["n"] or 0)
-            m += 1
-            if ctx is not None:
-                ctx.commit(m, active=n_surv, delta=None, wall_s=time.time() - t0,
-                           lineage=ctx.lineage_of(survivors))
-            if rounds is not None:
-                done = m >= rounds  # fixed-depth mode never needs |alive|
-            else:
-                if n_alive is None:
-                    n_alive = alive.count()
-                done = n_surv == n_alive or n_surv == 0  # nobody dropped / all gone
-            alive, n_alive = survivors.select("id"), n_surv
-            if done:
-                # survivors is materialized (lineage cut), safe to drop sym
-                return survivors.select("id", "degree")
+        init = vertices.select("id", F.lit(None).cast("long").alias("degree"))
+        # every state run_supersteps returns is a cut: safe to drop sym
+        return run_supersteps(init, ctx, rounds, peel).select("id", "degree")
     finally:
         sym.unpersist()

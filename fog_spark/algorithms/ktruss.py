@@ -19,19 +19,18 @@ Peeling formulation, one superstep per round:
 
 Orientation is re-derived each round from the surviving edges (degrees
 change as edges drop); the surviving-edge count rides the materialize
-job as an observed metric, and rounds checkpoint/resume through the
-same RunContext seam as k_core (a killed peel continues mid-
-decomposition).
+job as an observed metric. Each round is one superstep of
+``engine/superstep.run_supersteps``, which owns resume, the step-0 cut
+of the canonical edges and the commit, so a killed peel continues
+mid-decomposition.
 """
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.algorithms.triangles import _undirected, edge_support
-from fog_spark.engine.superstep import materialize_observed
+from fog_spark.engine.superstep import materialize_observed, run_supersteps
 
 
 def k_truss(
@@ -42,45 +41,29 @@ def k_truss(
 ) -> DataFrame:
     """(a, b): the canonical edges of the k-truss of ``edges``.
 
-    ``rounds=None`` peels to the fixed point; ``rounds=m`` runs exactly
+    ``rounds=None`` peels to the fixed point; ``rounds=m`` runs at most
     m peels (the convergence-independent form fixed-depth SQL oracles
-    replay). ``ctx``: per-round surviving-edge snapshots, resumable.
+    replay; a peel past the fixed point changes nothing). ``ctx``:
+    per-round surviving-edge snapshots, resumable; a converged run dir
+    returns without a round.
     """
     if k < 2:
         raise ValueError("k-truss needs k >= 2")
-    und = _undirected(edges)
+    n_alive = None  # |edges| entering the round, counted off the first cut
 
-    m = 0
-    n_alive: int | None = None
-    if ctx is not None:
-        rp = ctx.resume_point() if rounds is None else ctx.resume_point_at_most(rounds)
-        if rp is not None:
-            m, state = rp
-            if rounds is not None and m >= rounds:
-                return state.select("a", "b")
-            und = state.select("a", "b")
-            if rounds is None:
-                n_alive = und.count()
-    while True:
-        t0 = time.time()
-        sup = edge_support(und)
+    def peel(und, m):
+        nonlocal n_alive
+        if n_alive is None:
+            n_alive = und.count()
         keep = (
-            und.join(sup, ["a", "b"], "left")
+            und.join(edge_support(und), ["a", "b"], "left")
             .filter(F.coalesce("sup", F.lit(0)) >= k - 2)
             .select("a", "b")
         )
-        keep, om = materialize_observed(keep, [F.count(F.lit(1)).alias("n")], ctx, m + 1)
+        keep, om = materialize_observed(keep, [F.count(F.lit(1)).alias("n")], ctx, m)
         n_keep = int(om["n"] or 0)
-        m += 1
-        if ctx is not None:
-            ctx.commit(m, active=n_keep, delta=None, wall_s=time.time() - t0,
-                       lineage=ctx.lineage_of(keep))
-        if rounds is not None:
-            done = m >= rounds
-        else:
-            if n_alive is None:
-                n_alive = und.count()
-            done = n_keep == n_alive or n_keep == 0
-        und, n_alive = keep, n_keep
-        if done:
-            return und.select("a", "b")
+        done = n_keep in (n_alive, 0)  # nothing dropped / all gone
+        n_alive = n_keep
+        return keep, n_keep, None, done
+
+    return run_supersteps(_undirected(edges), ctx, rounds, peel).select("a", "b")

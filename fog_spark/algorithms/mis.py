@@ -47,6 +47,25 @@ def _priority(id_col, salt: int):
     )
 
 
+def _local_minima(sym: DataFrame, alive: DataFrame, n: int | None = None) -> DataFrame:
+    """(id, pri, win): every alive (id, pri) vertex, ``win`` when its
+    priority is below every alive neighbor's in ``sym`` (strict local
+    minimum; a vertex with no alive neighbor wins). One scatter join +
+    one (dst, min) aggregation, edges restricted to alive on both
+    endpoints by the two inner joins; ``n`` (|alive|, when known) lets
+    the alive side broadcast. The round body of MIS and coloring."""
+    st = maybe_broadcast(alive, n)
+    nmin = (
+        sym.join(st.select(F.col("id").alias("src"), F.col("pri").alias("np")), "src")
+        .join(st.select(F.col("id").alias("dst")), "dst", "left_semi")
+        .groupBy(F.col("dst").alias("id"))
+        .agg(F.min("np").alias("nmin"))
+    )
+    return alive.join(nmin, "id", "left").select(
+        "id", "pri", (F.col("nmin").isNull() | (F.col("pri") < F.col("nmin"))).alias("win")
+    )
+
+
 def maximal_independent_set(
     edges: DataFrame,
     salt: int = 5,
@@ -75,26 +94,10 @@ def maximal_independent_set(
     prev_nv = None
     while True:
         t += 1
-        st = maybe_broadcast(alive, n) if n is not None else alive
-        # min alive-neighbor priority per alive vertex (edges restricted
-        # to alive on both endpoints by the two inner joins)
-        nmin = (
-            sym.join(st.select(F.col("id").alias("src"), F.col("pri").alias("np")), "src")
-            .join(st.select(F.col("id").alias("dst")), "dst", "left_semi")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("np").alias("nmin"))
-        )
         # lazy cut: the winner flags feed both sides of the marked join
         # below, and Spark does not dedupe identical subplans — without
         # the cut the nmin scatter-agg would run twice per round
-        flagged = (
-            alive.join(nmin, "id", "left")
-            .select(
-                "id", "pri",
-                (F.col("nmin").isNull() | (F.col("pri") < F.col("nmin"))).alias("win"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        flagged = _local_minima(sym, alive, n).localCheckpoint(eager=False)
         winners = flagged.filter("win").select("id")
         # neighbors of winners, still alive, not winners themselves
         # (impossible by the strict-minimum rule, but distinct anyway)

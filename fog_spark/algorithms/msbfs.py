@@ -18,17 +18,16 @@ BENCH_SALTING.json: composite keys need no salting).
 A newly reached pair discovered at superstep s has dist == s exactly
 (BFS invariant), so the frontier is a filter on the accumulated state
 and the per-step new-pair count rides the materialize job as an
-observed metric — one Spark job per superstep, ctx-resumable like the
-other algorithms.
+observed metric — one Spark job per superstep. Each step is a superstep
+of ``engine/superstep.run_supersteps``, which owns resume and the
+commit; a step that reaches no new pair is done.
 """
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.engine.superstep import materialize, materialize_observed, with_frontier_hint
+from fog_spark.engine.superstep import materialize_observed, run_supersteps, with_frontier_hint
 
 
 def multi_source_bfs(
@@ -44,23 +43,12 @@ def multi_source_bfs(
     fwd = edges.filter(F.col("src") != F.col("dst")).select("src", "dst")
     if not isinstance(roots, DataFrame):
         roots = spark.createDataFrame([(int(r),) for r in roots], "root long")
-    state = roots.select(F.col("root").alias("id"), "root", F.lit(0).alias("dist"))
+    active = None  # pairs reached last step, counted off the first cut
 
-    start = 0
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(max_iters)
-        if rp is not None:
-            start, state = rp
-    if start == 0:
-        state = materialize(state, ctx, 0)
-        active = state.count()
-    else:
-        active = state.filter(F.col("dist") == start).count()
-
-    for step in range(start + 1, max_iters + 1):
-        if active == 0:
-            break
-        t0 = time.time()
+    def expand(state, step):
+        nonlocal active
+        if active is None:
+            active = state.filter(F.col("dist") == step - 1).count()
         frontier = with_frontier_hint(
             state.filter(F.col("dist") == step - 1).select("id", "root"), active
         )
@@ -78,7 +66,8 @@ def multi_source_bfs(
             step,
         )
         active = int(om["active"] or 0)
-        if ctx is not None:
-            ctx.commit(step, active=active, delta=None, wall_s=time.time() - t0,
-                       lineage=ctx.lineage_of(state))
+        return state, active, None, active == 0
+
+    init = roots.select(F.col("root").alias("id"), "root", F.lit(0).alias("dist"))
+    state = run_supersteps(init, ctx, max_iters, expand)
     return state.select("id", "root", F.col("dist").cast("long").alias("dist"))

@@ -35,14 +35,13 @@ would vanish from the pointer graph and split a component.)
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.engine.superstep import (
     materialize,
     materialize_observed,
     maybe_broadcast,
+    run_supersteps,
     vertices_of,
 )
 
@@ -109,37 +108,22 @@ def minimum_spanning_forest(
     ``rounds`` rounds for fixed-depth oracle replay (converged rounds
     are no-ops, so any rounds >= the convergence count yields the MSF).
 
-    Checkpointable through the same RunContext seam as the other
-    algorithms: per round the component map is the ``state`` snapshot
-    and the round's picked forest edges are a ``forest`` snapshot, so
-    a killed run resumes mid-forest and returns the COMPLETE forest
-    (already-picked rounds are read back from the run dir).
+    One Borůvka round is one superstep of
+    ``engine/superstep.run_supersteps``, which owns resume and the
+    commit: per round the component map is the ``state`` snapshot and
+    the round's picked forest edges are a ``forest`` snapshot, so a
+    killed run resumes mid-forest and returns the COMPLETE forest (every
+    committed round's picks are read back from the run dir). A round
+    with nothing left to pick is done.
     """
     ecan = canonical_edges(edges, weight_col).persist()
-    comp = vertices_of(edges).select("id", F.col("id").alias("comp"))
+    n = None  # |V|, counted off the step-0 or resumed cut
+    forest: list[DataFrame] = []
 
-    start = 0
-    if ctx is not None:
-        rp = ctx.resume_point() if rounds is None else ctx.resume_point_at_most(rounds)
-        if rp is not None:
-            start, comp = rp
-    if start == 0:
-        comp = materialize(comp, ctx, 0)
-    n = comp.count()
-    spark = edges.sparkSession
-
-    forest_parts: list[DataFrame] = []
-    if ctx is not None and start > 0:
-        # picked edges of completed rounds were committed alongside the
-        # component map — read them back so resume returns the FULL forest
-        for s in ctx.fmt.list_partitions("forest"):
-            if s <= start:
-                forest_parts.append(ctx.read_state(s, name="forest").select("a", "b", "w"))
-
-    r = start
-    while rounds is None or r < rounds:
-        t0 = time.time()
-        r += 1
+    def boruvka(comp, r):
+        nonlocal n
+        if n is None:
+            n = comp.count()
         cm = maybe_broadcast(comp, n)
         ca = cm.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
         cb = cm.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
@@ -152,23 +136,36 @@ def minimum_spanning_forest(
         )
         per_pick = msgs.groupBy("c").agg(F.min("e").alias("e")).localCheckpoint(eager=True)
         if per_pick.isEmpty():
-            break
-        picked = per_pick.select("e.w", "e.a", "e.b").distinct()
-        if ctx is not None:
-            picked = ctx.write_state(picked.select("a", "b", "w"), r, name="forest")
-        forest_parts.append(picked.select("a", "b", "w"))
+            # converged: with a ctx the final map is cut at r as well, so
+            # a rerun finds this round's done record and picks nothing
+            return (comp if ctx is None else materialize(comp, ctx, r)), -1, None, True
+        picked = per_pick.select("e.w", "e.a", "e.b").distinct().select("a", "b", "w")
+        if ctx is None:
+            forest.append(picked)
+        else:
+            ctx.write_state(picked, r, name="forest")
         relab = _contract(per_pick)
         comp = comp.join(maybe_broadcast(relab, n), "comp", "left").select(
             "id", F.coalesce("new_comp", "comp").alias("comp")
         )
-        comp = materialize(comp, ctx, r)
-        if ctx is not None:
-            ctx.commit(r, active=-1, delta=None, wall_s=time.time() - t0,
-                       lineage=ctx.lineage_of(comp))
+        return materialize(comp, ctx, r), -1, None, False
 
-    if not forest_parts:
-        return spark.createDataFrame([], "a long, b long, w double")
-    out = forest_parts[0]
-    for p in forest_parts[1:]:
+    comp = vertices_of(edges).select("id", F.col("id").alias("comp"))
+    try:
+        run_supersteps(comp, ctx, rounds, boruvka)
+    finally:
+        # the forest reads only the per-round pick cuts (or the run dir)
+        ecan.unpersist()
+    if ctx is not None:
+        # rounds past the requested depth belong to a deeper earlier run
+        forest = [
+            ctx.read_state(s, name="forest")
+            for s in ctx.fmt.list_partitions("forest")
+            if rounds is None or s <= rounds
+        ]
+    if not forest:
+        return edges.sparkSession.createDataFrame([], "a long, b long, w double")
+    out = forest[0]
+    for p in forest[1:]:
         out = out.unionByName(p)
     return out

@@ -14,7 +14,9 @@ with ZERO driver-side aggregations: two scatter joins + two keyed
 aggregations per iteration, one materialize (plan cut) per iteration,
 and the Σa≈1 invariant rides that job as an observed metric. The
 degree normalizations are attached to the edge table ONCE before the
-loop (the same pre-attachment as weighted PageRank's w/wsum).
+loop (the same pre-attachment as weighted PageRank's w/wsum). One
+iteration is one superstep of ``engine/superstep.run_supersteps``,
+which owns resume and the commit.
 
 Not in FOG (its apps stop at the PageRank family, fogsrc/main.cpp:
 51-135); SALSA is the standard web-graph companion the reference's
@@ -23,14 +25,12 @@ own roadmap never reached.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.engine.superstep import (
-    materialize,
     materialize_observed,
     maybe_broadcast,
+    run_supersteps,
     vertices_of,
 )
 
@@ -69,22 +69,13 @@ def salsa(
 
     n_auth = ind.count()
     auth0 = ind.select(F.col("dst").alias("id"), F.lit(1.0 / max(n_auth, 1)).alias("authority"))
-    state = (
+    init = (
         verts.join(auth0, "id", "left")
         .select("id", F.coalesce("authority", F.lit(0.0)).alias("authority"),
                 F.lit(0.0).alias("hub"))
     )
 
-    start = 0
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(niters)
-        if rp is not None:
-            start, state = rp
-    if start == 0:
-        state = materialize(state, ctx, 0)
-
-    for it in range(start + 1, niters + 1):
-        t0 = time.time()
+    def iterate(state, it):
         st = maybe_broadcast(state, n)
         # backward pass: authority mass -> hubs, 1/indeg per in-link
         hmsg = eb.join(st, eb["dst"] == st["id"]).select(
@@ -109,7 +100,6 @@ def salsa(
         state, om = materialize_observed(
             nxt, [F.sum("authority").alias("mass")], ctx, it
         )
-        if ctx is not None:
-            ctx.commit(it, active=n, delta=float(om["mass"] or 0.0),
-                       wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-    return state.select("id", "authority", "hub")
+        return state, n, float(om["mass"] or 0.0), False
+
+    return run_supersteps(init, ctx, niters, iterate).select("id", "authority", "hub")

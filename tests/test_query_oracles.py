@@ -1,7 +1,8 @@
 """The graph queries whose Spark side runs the engine's own code — the
-loops capped at k supersteps, the triangle family's shared stream and
-the hash-replayed walk samplers — each against its DuckDB oracle (k
-dense rounds as chained CTEs) on the sf0.001 smoke tables:
+loops capped at k supersteps, the programs on ``run_supersteps``, the
+triangle family's shared stream, the MIS/coloring rounds and the
+hash-replayed walk samplers — each against its DuckDB oracle (k dense
+rounds as chained CTEs) on the sf0.001 smoke tables:
 tools/check_contract.py's comparison for these queries, inside the
 test suite."""
 
@@ -28,6 +29,14 @@ NAMES = [
     "node2vec_k3",
     "node2vec_rej_k3",
     "weighted_walks_k3",
+    "hits_k2",
+    "salsa_k2",
+    "msbfs",
+    "msf",
+    "anf_ball3",
+    "kcore110_r2",
+    "mis_r3",
+    "coloring_r3",
 ]
 
 

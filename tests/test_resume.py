@@ -13,9 +13,15 @@ import pathlib
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from fog_spark.algorithms.anf import neighborhood_sketches
+from fog_spark.algorithms.hits import hits
 from fog_spark.algorithms.katz import katz
+from fog_spark.algorithms.kcore import k_core
+from fog_spark.algorithms.ktruss import k_truss
+from fog_spark.algorithms.msbfs import multi_source_bfs
+from fog_spark.algorithms.msf import minimum_spanning_forest
 from fog_spark.algorithms.salsa import salsa
 from fog_spark.engine.checkpoint import RunContext
 
@@ -28,22 +34,22 @@ RESUME_TESTS = {
     "anf.neighborhood_sketches": _KILL,
     "katz.katz": _KILL,
     "salsa.salsa": _KILL,
+    "hits.hits": _KILL,
+    "kcore.k_core": _KILL,
+    "ktruss.k_truss": _KILL,
+    "msbfs.multi_source_bfs": _KILL,
+    "msf.minimum_spanning_forest": _KILL,
     "bfs.bfs_levels": f"{_CKPT}::test_bfs_sssp_lpa_resume",
     "sssp.sssp": f"{_CKPT}::test_bfs_sssp_lpa_resume",
     "lpa.label_propagation": f"{_CKPT}::test_bfs_sssp_lpa_resume",
     "cc.min_frontier_loop": f"{_CKPT}::test_cc_resume_matches_clean",
     "cc.connected_components": f"{_CKPT}::test_cc_resume_matches_clean",
-    "kcore.k_core": f"{_CKPT}::test_kcore_resume_matches_clean",
     "pagerank.pagerank_fog": f"{_CKPT}::test_pagerank_resume_bit_identical",
     "pagerank.pagerank_standard": f"{_CKPT}::test_pagerank_standard_resume",
     "pagerank.pagerank_weighted": f"{_CKPT}::test_pagerank_standard_resume",
     "pagerank.pagerank_personalized": f"{_CKPT}::test_pagerank_standard_resume",
     "coreness.coreness": "tests/test_coreness.py::test_coreness_fixed_rounds_upper_bounds_and_resume",
     "dag.topo_levels": "tests/test_dag.py::test_topo_levels_commits_and_resumes",
-    "hits.hits": "tests/test_pagerank.py::test_hits_resume_matches_clean",
-    "ktruss.k_truss": "tests/test_ktruss.py::test_ktruss_fixed_rounds_then_resume_converges",
-    "msbfs.multi_source_bfs": "tests/test_traversals.py::test_multi_source_bfs_resume",
-    "msf.minimum_spanning_forest": "tests/test_msf.py::test_msf_resume_returns_full_forest",
 }
 
 
@@ -100,6 +106,21 @@ def _graph(spark):
     return spark.createDataFrame(pairs, "src long, dst long")
 
 
+def _truss_graph(spark):
+    """24-vertex seeded graph dense enough that its 4-truss peel takes
+    four rounds (three that drop edges, one that drops none)."""
+    rnd = random.Random(33)
+    pairs = [(rnd.randrange(24), rnd.randrange(24)) for _ in range(120)]
+    return spark.createDataFrame(pairs, "src long, dst long")
+
+
+def _weighted(e):
+    return e.withColumn("weight", ((F.col("src") * 31 + F.col("dst") * 17) % 13 + 1).cast("double"))
+
+
+# name -> run(edges, supersteps or None (to convergence), ctx): a
+# comparable result. The convergent programs (msbfs, msf, kcore, ktruss)
+# cap at `steps` and may stop earlier.
 RUNS = {
     "katz": lambda e, steps, ctx: {
         r["id"]: r["katz"] for r in katz(e, alpha=0.1, niters=steps, ctx=ctx).collect()
@@ -110,24 +131,74 @@ RUNS = {
     "anf": lambda e, steps, ctx: {
         r["id"]: tuple(r["hvs"]) for r in neighborhood_sketches(e, steps, k=8, ctx=ctx).collect()
     },
+    "hits": lambda e, steps, ctx: {
+        r["id"]: (r["authority"], r["hub"]) for r in hits(e, niters=steps, ctx=ctx).collect()
+    },
+    "msbfs": lambda e, steps, ctx: {
+        tuple(r) for r in multi_source_bfs(e, [0, 5], max_iters=steps or 10_000, ctx=ctx).collect()
+    },
+    "msf": lambda e, steps, ctx: {
+        tuple(r) for r in minimum_spanning_forest(_weighted(e), rounds=steps, ctx=ctx).collect()
+    },
+    "kcore": lambda e, steps, ctx: {
+        tuple(r) for r in k_core(e, 3, rounds=steps, ctx=ctx).collect()
+    },
+    "ktruss": lambda e, steps, ctx: {
+        tuple(r) for r in k_truss(e, 4, rounds=steps, ctx=ctx).collect()
+    },
 }
+GRAPHS = {"ktruss": _truss_graph}  # the rest run on _graph
+CONVERGENT = ["kcore", "ktruss", "msbfs", "msf"]
+
+
+def _steps(ctx):
+    return {m["superstep"]: m["ts"] for m in ctx.metrics()}
 
 
 @pytest.mark.parametrize("name", sorted(RUNS))
 def test_kill_and_resume_matches_clean(spark, tmp_path, name):
     """k/2 supersteps with a ctx, then k on the same run dir: equal to a
     clean k-step run (bit for bit: both restart every step from the
-    previous step's parquet), and the first k/2 steps are not redone."""
-    run, k, e = RUNS[name], 4, _graph(spark)
-    clean = run(e, k, RunContext(spark, str(tmp_path), "clean"))
+    previous step's parquet), the same steps are committed, and the
+    first k/2 are not redone."""
+    run, k, e = RUNS[name], 4, GRAPHS.get(name, _graph)(spark)
+    clean_ctx = RunContext(spark, str(tmp_path), "clean")
+    clean = run(e, k, clean_ctx)
+    steps = sorted(_steps(clean_ctx))
+    assert steps[-1] > k // 2, "the kill must land before the clean run's last step"
 
     killed = RunContext(spark, str(tmp_path), "resume")
     run(e, k // 2, killed)
-    written = {m["superstep"]: m["ts"] for m in killed.metrics()}
-    assert sorted(written) == list(range(1, k // 2 + 1))
+    written = _steps(killed)
+    assert sorted(written) == [s for s in steps if s <= k // 2]
 
     ctx = RunContext(spark, str(tmp_path), "resume")
     assert run(e, k, ctx) == clean
-    after = {m["superstep"]: m["ts"] for m in ctx.metrics()}
-    assert sorted(after) == list(range(1, k + 1))
+    after = _steps(ctx)
+    assert sorted(after) == steps
     assert all(after[s] == ts for s, ts in written.items())
+
+
+@pytest.mark.parametrize("name", sorted(RUNS))
+def test_resume_after_keep_last_vacuum_matches_clean(spark, tmp_path, name):
+    """The kill at k/2 under keep_last=1 leaves only the newest
+    snapshot; resuming from it still gives the clean k-step result."""
+    run, k, e = RUNS[name], 4, GRAPHS.get(name, _graph)(spark)
+    clean = run(e, k, RunContext(spark, str(tmp_path), "clean"))
+    run(e, k // 2, RunContext(spark, str(tmp_path), "vac", keep_last=1))
+    ctx = RunContext(spark, str(tmp_path), "vac", keep_last=1)
+    assert run(e, k, ctx) == clean
+    assert sorted(_steps(ctx)) == [max(_steps(ctx))]
+
+
+@pytest.mark.parametrize("name", CONVERGENT)
+def test_converged_rerun_runs_no_round(spark, tmp_path, name):
+    """A run dir whose last record says done returns its snapshot: the
+    same output, and no metric record is written or rewritten."""
+    run, e = RUNS[name], GRAPHS.get(name, _graph)(spark)
+    ctx = RunContext(spark, str(tmp_path), "run")
+    first = run(e, None, ctx)
+    before = _steps(ctx)
+    assert ctx.last_committed()["done"] is True
+    assert run(e, None, RunContext(spark, str(tmp_path), "run")) == first
+    assert _steps(ctx) == before

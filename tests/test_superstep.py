@@ -9,21 +9,31 @@ import pytest
 from pyspark.sql import functions as F
 
 from fog_spark import oracles
+from fog_spark.algorithms.anf import neighborhood_function
 from fog_spark.algorithms.bfs import bfs_levels
 from fog_spark.algorithms.cc import connected_components
 from fog_spark.algorithms.coreness import coreness
+from fog_spark.algorithms.hits import hits
+from fog_spark.algorithms.kcore import k_core
+from fog_spark.algorithms.ktruss import k_truss
 from fog_spark.algorithms.lpa import label_propagation
+from fog_spark.algorithms.msbfs import multi_source_bfs
+from fog_spark.algorithms.msf import minimum_spanning_forest
 from fog_spark.algorithms.pagerank import (
     pagerank_fog,
     pagerank_personalized,
     pagerank_standard,
     pagerank_weighted,
 )
+from fog_spark.algorithms.salsa import salsa
 from fog_spark.algorithms.scc import strongly_connected_components
 from fog_spark.algorithms.sssp import sssp
 from fog_spark.engine.superstep import active_metric, materialize, materialize_observed, release
 from fog_spark.fixtures import Graph, graph_to_spark, named_graphs
+from tests.test_anf import py_ball_sizes
 from tests.test_coreness import py_coreness
+from tests.test_ktruss import py_ktruss
+from tests.test_salsa import np_salsa
 
 GRAPHS = named_graphs()
 
@@ -127,12 +137,71 @@ LOOPS = {
 }
 
 
+MSBFS_ROOTS = [0, 3]
+
+
+def _bfs_pairs(g):
+    """{(id, root): (dist,)} for every pair reached from MSBFS_ROOTS; a
+    root is reached from itself even when no edge touches it."""
+    n = max(g.n, max(MSBFS_ROOTS) + 1)
+    return {
+        (v, r): (int(d),)
+        for r in MSBFS_ROOTS
+        for v, d in enumerate(oracles.bfs(g.edges, n, r))
+        if d != oracles.UNREACHED
+    }
+
+
+# the programs on run_supersteps -> (run(edges, vertices) -> {key:
+# values}, reference(graph) -> {key: values}). `vertices` is None for
+# the programs that take none; their vertex set is the edge endpoints.
+PROGRAMS = {
+    "kcore": (
+        lambda e, v: {r["id"]: (r["degree"],) for r in k_core(e, 2, vertices=v).collect()},
+        lambda g: {i: (d,) for i, d in oracles.k_core(g.edges, g.n, 2).items()},
+    ),
+    "hits": (
+        lambda e, v: {r["id"]: (r["authority"], r["hub"]) for r in hits(e, v, niters=5).collect()},
+        lambda g: dict(enumerate(zip(*oracles.hits(g.edges, g.n, niters=5)))),
+    ),
+    "salsa": (
+        lambda e, v: {r["id"]: (r["authority"], r["hub"]) for r in salsa(e, niters=3).collect()},
+        lambda g: {v: (a, h) for v, a, h in zip(*np_salsa([tuple(e) for e in g.edges.tolist()], 3))},
+    ),
+    "anf": (
+        lambda e, v: {r["id"]: (r["n_seen"],) for r in neighborhood_function(e, 2, k=16).collect()},
+        lambda g: {i: (b,) for i, b in py_ball_sizes(g.edges.tolist(), 2).items()},
+    ),
+    "ktruss": (
+        lambda e, v: {(r["a"], r["b"]): () for r in k_truss(e, 3).collect()},
+        lambda g: dict.fromkeys(py_ktruss(g.edges.tolist(), 3), ()),
+    ),
+    "msbfs": (
+        lambda e, v: {(r["id"], r["root"]): (r["dist"],) for r in multi_source_bfs(e, MSBFS_ROOTS).collect()},
+        _bfs_pairs,
+    ),
+    "msf": (
+        lambda e, v: {(r["a"], r["b"]): (r["w"],) for r in minimum_spanning_forest(e).collect()},
+        lambda g: {(a, b): (w,) for a, b, w in oracles.msf_kruskal(g.edges, g.weights())},
+    ),
+}
+PASS_VERTICES = {"kcore", "hits"}
+
+
 @pytest.mark.parametrize("case", list(EDGE_CASES))
-@pytest.mark.parametrize("algo", list(LOOPS))
+@pytest.mark.parametrize("algo", list(LOOPS) + list(PROGRAMS))
 def test_loop_edge_cases(spark, algo, case):
     g, pass_vertices = EDGE_CASES[case]
-    run, columns = LOOPS[algo]
     edges = spark.createDataFrame(g.to_pandas(), "src long, dst long, weight double")
+    if algo in PROGRAMS:
+        run, reference = PROGRAMS[algo]
+        vertices = spark.range(g.n).select("id") if pass_vertices and algo in PASS_VERTICES else None
+        got, want = run(edges, vertices), reference(g)
+        assert sorted(got) == sorted(want)
+        for key, vals in want.items():
+            assert np.allclose(got[key], vals, rtol=1e-9, atol=1e-12), (key, got[key], vals)
+        return
+    run, columns = LOOPS[algo]
     vertices = spark.range(g.n).select("id") if pass_vertices else None
     out, iters = run(spark, edges, vertices)
     rows = out.collect()
