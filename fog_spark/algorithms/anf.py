@@ -134,7 +134,7 @@ def neighborhood_sketches(
     """
     fwd, state = _seed(edges)
 
-    def grow(state, r):
+    def grow(state, r, n):
         # total sketch mass rides the materialize job: the ANF curve
         # N(r) ~ Σ_v |sketch| saturates exactly when the balls do
         state, om = materialize_observed(
@@ -142,7 +142,7 @@ def neighborhood_sketches(
         )
         return state, int(om["mass"] or 0), None, False
 
-    return run_supersteps(state, ctx, radius, grow)
+    return run_supersteps(lambda: state, ctx, radius, grow)[0]
 
 
 def neighborhood_function(

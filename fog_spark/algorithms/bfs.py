@@ -41,7 +41,7 @@ def bfs_levels(
         F.when(F.col("id") == root, F.lit(0)).otherwise(F.lit(UNREACHED)).cast("long").alias("level"),
         (F.col("id") == root).alias("changed"),
     )
-    state = min_frontier_loop(fwd, state, "level", F.col("level") + 1, ctx, max_iters, active0=1)
+    state = min_frontier_loop(fwd, lambda: state, "level", F.col("level") + 1, ctx, max_iters, active0=1)
     return state.select("id", "level")
 
 
@@ -60,5 +60,5 @@ def reachable_set(
         F.when(seeded, F.lit(0)).otherwise(F.lit(UNREACHED)).cast("long").alias("r"),
         seeded.alias("changed"),
     )
-    state = min_frontier_loop(edges.select("src", "dst"), state, "r", F.col("r"), None, max_iters)
+    state = min_frontier_loop(edges.select("src", "dst"), lambda: state, "r", F.col("r"), None, max_iters)
     return state.filter(F.col("r") == 0).select("id")

@@ -1,14 +1,16 @@
 """Connected components by hash-min label propagation (WCC), and the
-MIN-frontier superstep loop it shares with bfs, sssp, scc, bowtie and
-dag.
+MIN-frontier superstep program it shares with bfs, sssp, scc, bowtie
+and dag.
 
-``min_frontier_loop`` is the TARGET-engine loop
-(fogsrc/fog_engine.cpp:159-209): only changed vertices scatter, the
-gather is MIN, improved vertices re-activate, and the run stops when
-the frontier empties. It owns resume, the step-0 cut, the |V| and
-active counts, the frontier broadcast hint, the fan-out-guarded merge,
-the active count observed on the cut itself (one Spark job per
-superstep) and the commit. cc, bfs (and its multi-root
+``min_frontier_loop`` is the TARGET-engine program
+(fogsrc/fog_engine.cpp:159-209) on the engine's one loop,
+``superstep.run_supersteps``: only changed vertices scatter, the
+gather is MIN, improved vertices re-activate, and the run is done when
+the frontier empties. The loop owns resume, the step-0 cut and |V|,
+the commit and the stop; the superstep here owns the resumed active
+count, the edge alignment, the frontier broadcast hint, the
+fan-out-guarded merge and the active count observed on the cut itself
+(one Spark job per superstep). cc, bfs (and its multi-root
 ``reachable_set``), sssp, scc's forward pass and dag's longest-path
 levels supply only their vertex programs: the initial state, the
 scatter message and, for sssp, the merge.
@@ -25,20 +27,21 @@ one on disk).
 
 from __future__ import annotations
 
-import time
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-# The loop lives here, not in engine/: perfbench/tracing.py finds
-# supersteps by wrapping these names on this module (the other
-# MIN-frontier programs import the loop from here).
+# The step body lives here, not in engine/: perfbench/tracing.py finds
+# supersteps by wrapping the materialize_observed and
+# prepare_gather_edges names on this module (the other MIN-frontier
+# programs import the program from here).
 from fog_spark.engine.superstep import (
     active_metric,
-    materialize,
     materialize_observed,
     merge_join,
     prepare_gather_edges,
     release,
+    run_supersteps,
     symmetrize,
     with_frontier_hint,
 )
@@ -46,7 +49,7 @@ from fog_spark.engine.superstep import (
 
 def min_frontier_loop(
     edges: DataFrame,
-    state: DataFrame,
+    init: Callable[[], DataFrame],
     value: str,
     msg: Column,
     ctx,
@@ -54,43 +57,37 @@ def min_frontier_loop(
     active0: int | None = None,
     merge: list[Column] | None = None,
 ) -> DataFrame:
-    """Run a MIN-gather frontier program to its fixed point (or
-    ``max_iters``) and return the final state.
+    """Run a MIN-gather frontier program on ``superstep.run_supersteps``
+    to its fixed point (or ``max_iters``) and return the final state.
 
-    ``state`` is the fresh initial state: ``id``, ``value``, a
-    ``changed`` flag marking the frontier, and any column ``merge``
-    keeps; ``active0`` is its frontier size (None: every vertex). A
-    ``ctx`` resume point, capped at ``max_iters``, replaces it — the
-    persisted ``changed`` flag restores the frontier. Each superstep
-    scatters ``msg`` (over edges ⨝ frontier(id, value)) along ``edges``,
-    MIN-gathers it per dst into ``cand`` and selects ``id, *merge`` over
-    state ⟕ gather. The default merge keeps least(value, cand) and
-    re-activates the vertices it lowered. Each cut is released as soon
-    as the next one exists.
+    ``init()`` builds the fresh initial state (a fresh run only):
+    ``id``, ``value``, a ``changed`` flag marking the frontier, and any
+    column ``merge`` keeps; ``active0`` is its frontier size (None:
+    every vertex). A ``ctx`` resume point, capped at ``max_iters``,
+    replaces it — the persisted ``changed`` flag restores the frontier.
+    Each superstep scatters ``msg`` (over edges ⨝ frontier(id, value))
+    along ``edges``, MIN-gathers it per dst into ``cand`` and selects
+    ``id, *merge`` over state ⟕ gather. The default merge keeps
+    least(value, cand) and re-activates the vertices it lowered. The run
+    is done once the frontier empties. The first superstep does the
+    per-run setup (the frontier size, the edge alignment); each
+    superstep releases the cut it replaces.
     """
-    start = 0
-    if ctx is not None:
-        rp = ctx.resume_point_at_most(max_iters)
-        if rp is not None:
-            start, state = rp
-    if start == 0:
-        state = materialize(state, ctx, 0)
-    n = state.count()
-    if start:
-        active = state.filter("changed").count()
-    else:
-        active = n if active0 is None else active0
     if merge is None:
         cand = F.coalesce("cand", F.col(value))
         merge = [F.least(value, cand).alias(value), (cand < F.col(value)).alias("changed")]
+    prepared, active = None, None
 
-    # gather-aligned edge cache: zero shuffle exchanges per superstep in
-    # the broadcast-state regime (superstep.prepare_gather_edges)
-    prepared = prepare_gather_edges(edges, n)
-    for step in range(start + 1, max_iters + 1):
-        if active == 0:
-            break
-        t0 = time.time()
+    def superstep(state, k, n):
+        nonlocal prepared, active
+        if prepared is None:
+            if k > 1:  # resumed: the persisted flags are the frontier
+                active = state.filter("changed").count()
+            else:
+                active = n if active0 is None else active0
+            # gather-aligned edge cache: zero shuffle exchanges per
+            # superstep in the broadcast-state regime
+            prepared = prepare_gather_edges(edges, n)
         frontier = with_frontier_hint(state.filter("changed").select("id", value), active)
         msgs = prepared.join(frontier, prepared["src"] == frontier["id"]).select(
             prepared["dst"], msg.alias("cand")
@@ -99,14 +96,13 @@ def min_frontier_loop(
         # fan-out guard: the agg can have far more rows than the
         # frontier (hub out-neighborhoods) but never more than |V|
         nxt = merge_join(state, agg, state["id"] == agg["dst"], min(active * 64, n)).select("id", *merge)
-        nxt, om = materialize_observed(nxt, [active_metric()], ctx, step)
+        nxt, om = materialize_observed(nxt, [active_metric()], ctx, k)
         release(state)  # the step-0 cut or a resume read is the loop's own, too
-        state = nxt
         active = int(om["active"] or 0)
-        if ctx is not None:
-            ctx.commit(step, active=active, delta=None, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
+        return nxt, active, None, active == 0
 
-    if prepared is not edges:
+    state, _ = run_supersteps(init, ctx, max_iters, superstep)
+    if prepared is not None and prepared is not edges:
         prepared.unpersist()
     return state
 
@@ -170,6 +166,6 @@ def connected_components(
         )
     else:
         state = dv.select("id", F.col("id").alias("comp"), F.lit(True).alias("changed"))
-    return min_frontier_loop(sym, state, "comp", F.col("comp"), ctx, max_iters).select(
+    return min_frontier_loop(sym, lambda: state, "comp", F.col("comp"), ctx, max_iters).select(
         "id", F.col("comp").alias("component")
     )

@@ -13,16 +13,18 @@ value >= h). c_t decreases monotonically to the exact coreness: H of a
 neighbor multiset never exceeds |N(v)| = c_0, and H is monotone in its
 inputs, so pointwise decrease propagates by induction.
 
-A vertex program on the GLOBAL-mode loop (``pagerank._power_iterate``):
-the state carries c as ``rank``, every vertex scatters it over the
-symmetrized edges, and the gather is the h-index as
-max(least(value, row_number)) over each vertex's neighbor values in
-descending order — a window partitioned by the gather vertex, so it
-shards exactly like every other gather here. The loop owns the gather-aligned edge cache,
-the broadcast state, the merge, resume and the commit. The
-fixed-round form (``rounds=m``) is what the unrolled SQL oracle
-replays; ``rounds=None`` stops at the first round that changes no
-value (``tol=1`` on integer values) and is pytest-oracled against the
+A GLOBAL-mode program (``pagerank._power_iterate``) on the engine's one
+loop, ``superstep.run_supersteps``: the state carries c as ``rank``,
+every vertex scatters it over the symmetrized edges, and the gather is
+the h-index as max(least(value, row_number)) over each vertex's
+neighbor values in descending order — a window partitioned by the
+gather vertex, so it shards exactly like every other gather here. The
+program owns the gather-aligned edge cache, the broadcast state and
+the merge; the loop owns resume, the step-0 cut, the commit and the
+stop. The fixed-round form (``rounds=m``) is what the unrolled SQL
+oracle replays; ``rounds=None`` is done at the first round that
+changes no value (``tol=1`` on integer values), so a rerun on that run
+dir returns its snapshot at once, and is pytest-oracled against the
 Batagelj-Zaversnik peel.
 """
 
@@ -30,8 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from fog_spark.algorithms.pagerank import _power_iterate, _resume
-from fog_spark.engine.superstep import materialize, symmetrize, vertices_of
+from fog_spark.algorithms.pagerank import _power_iterate
+from fog_spark.engine.superstep import symmetrize, vertices_of
 
 
 def _h_index(msgs: DataFrame) -> DataFrame:
@@ -57,25 +59,18 @@ def coreness(
     then an upper bound, exact once converged); ``rounds=None`` runs to
     the fixed point (exact coreness). ctx-resumable per round."""
     cap, tol = (max_iters, 1) if rounds is None else (rounds, None)
-    start, state, done = _resume(ctx, cap, tol)
-    if done:
-        return state.select("id", F.col("rank").alias("coreness"))
     sym = symmetrize(edges).distinct().persist()
+
+    def init():
+        vs = vertices if vertices is not None else vertices_of(edges)
+        deg = sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("c"))
+        return vs.join(deg, "id", "left").select("id", F.coalesce("c", F.lit(0)).cast("long").alias("rank"))
+
     try:
-        if state is None:
-            vertices = vertices if vertices is not None else vertices_of(edges)
-            deg = sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("c"))
-            state = materialize(
-                vertices.join(deg, "id", "left").select(
-                    "id", F.coalesce("c", F.lit(0)).cast("long").alias("rank")
-                ),
-                ctx,
-                0,
-            )
         c, _ = _power_iterate(
-            sym, state, state.count(), start, cap, ctx,
+            sym, init, cap, ctx,
             msg=F.col("rank"),
-            rank=lambda _: F.coalesce("incoming", F.lit(0)),
+            rank=lambda n, _: F.coalesce("incoming", F.lit(0)),
             carry=(),
             tol=tol,
             gather=_h_index,

@@ -85,7 +85,7 @@ def topo_levels(
         "id", F.lit(0).cast("long").alias("neg"), F.lit(True).alias("changed")
     )
     n_comp = state.count()
-    state = min_frontier_loop(cedges, state, "neg", F.col("neg") - 1, ctx, n_comp)
+    state = min_frontier_loop(cedges, lambda: state, "neg", F.col("neg") - 1, ctx, n_comp)
     # a true condensation settles within |C| supersteps
     if not state.filter("changed").isEmpty():
         raise ValueError(

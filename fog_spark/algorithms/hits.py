@@ -46,12 +46,8 @@ def hits(
     adjacency-matrix formulation A^T h / A a."""
     vertices = vertices if vertices is not None else vertices_of(edges)
     e = edges.select("src", "dst")
-    n = None  # |V|, counted off the step-0 or resumed cut
 
-    def iterate(state, it):
-        nonlocal n
-        if n is None:
-            n = state.count()
+    def iterate(state, it, n):
         st = maybe_broadcast(state, n)
         # authority pass: gather hub mass over IN-edges
         amsg = e.join(st, e["src"] == st["id"]).select(e["dst"], F.col("hub").alias("m"))
@@ -88,4 +84,4 @@ def hits(
         return (norm if ctx is None else materialize(norm, ctx, it)), n, None, False
 
     init = vertices.select("id", F.lit(1.0).alias("authority"), F.lit(1.0).alias("hub"))
-    return run_supersteps(init, ctx, niters, iterate).select("id", "authority", "hub")
+    return run_supersteps(lambda: init, ctx, niters, iterate)[0].select("id", "authority", "hub")

@@ -8,9 +8,10 @@ the PageRank family (algorithms/pagerank.py) replaces with degree
 normalization. Convergence needs alpha < 1/lambda_max; callers pick a
 conservative alpha (default 0.1) or a fixed depth.
 
-Scale shape is exactly PageRank's — it is a vertex program over
-pagerank._power_iterate: one scatter join + one (dst, sum) gather + one
-cut per round, no normalization scalar. The state (and a ``ctx``
+Scale shape is exactly PageRank's — it is a GLOBAL-mode program
+(``pagerank._power_iterate``) on the engine's one loop,
+``superstep.run_supersteps``: one scatter join + one (dst, sum) gather +
+one cut per round, no normalization scalar. The state (and a ``ctx``
 snapshot) carries x as ``rank``.
 
 Not in FOG (its apps stop at PageRank/SpMV, fogsrc/main.cpp:51-135);
@@ -21,8 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.algorithms.pagerank import _power_iterate, _resume
-from fog_spark.engine.superstep import materialize, vertices_of
+from fog_spark.algorithms.pagerank import _power_iterate
+from fog_spark.engine.superstep import vertices_of
 
 
 def katz(
@@ -36,15 +37,11 @@ def katz(
     (duplicate edges are collapsed; self-loops kept, as in the
     reference's GLOBAL-mode semantics, SURVEY §2.2 F2)."""
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
-    start, state, _ = _resume(ctx, niters)
-    if state is None:
-        state = materialize(vertices_of(e).select("id", F.lit(0.0).alias("rank")), ctx, 0)
-    n = state.count()
     # x_{k+1} = alpha * (sum of in-neighbor x_k) + beta
     x, _ = _power_iterate(
-        e, state, n, start, niters, ctx,
+        e, lambda: vertices_of(e).select("id", F.lit(0.0).alias("rank")), niters, ctx,
         msg=F.col("rank"),
-        rank=lambda _: alpha * F.coalesce("incoming", F.lit(0.0)) + beta,
+        rank=lambda n, _: alpha * F.coalesce("incoming", F.lit(0.0)) + beta,
         carry=(),
     )
     return x.select("id", F.col("rank").alias("katz"))

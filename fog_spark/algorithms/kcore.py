@@ -8,7 +8,7 @@ table (a self-loop must not let a vertex keep itself alive).
 
 Each peel round is one degree aggregation + one semi-join restriction;
 the surviving-vertex count is OBSERVED on the materialize job
-(engine/superstep.materialize_observed), so one Spark job per round.
+(engine/superstep.materialize_counted), so one Spark job per round.
 The edge table is re-restricted lazily against the materialized
 survivor set — at 100 TB the round cost is one keyed shuffle over the
 still-alive edges, shrinking every round. Each round is one superstep
@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.engine.superstep import (
-    materialize_observed,
+    materialize_counted,
     run_supersteps,
     symmetrize,
     vertices_of,
@@ -63,24 +63,20 @@ def k_core(
     vertices = vertices if vertices is not None else vertices_of(edges)
     # persist: every peel round re-reads the symmetrized edge table
     sym = symmetrize(edges).distinct().persist()
-    n_alive = None  # |alive| entering the round, counted off the first cut
+    n_alive = None  # |alive| entering the round
 
-    def peel(alive, m):
+    def peel(alive, m, n):
         nonlocal n_alive
-        if n_alive is None:
-            n_alive = alive.count()
-        survivors, om = materialize_observed(
-            _alive_degrees(sym, alive).filter(F.col("degree") >= k),
-            [F.count(F.lit(1)).alias("n")], ctx, m,
+        survivors, n_surv = materialize_counted(
+            _alive_degrees(sym, alive).filter(F.col("degree") >= k), ctx, m
         )
-        n_surv = int(om["n"] or 0)
-        done = n_surv in (n_alive, 0)  # nobody dropped / all gone
+        done = n_surv in (n_alive or n, 0)  # nobody dropped / all gone
         n_alive = n_surv
         return survivors, n_surv, None, done
 
     try:
         init = vertices.select("id", F.lit(None).cast("long").alias("degree"))
         # every state run_supersteps returns is a cut: safe to drop sym
-        return run_supersteps(init, ctx, rounds, peel).select("id", "degree")
+        return run_supersteps(lambda: init, ctx, rounds, peel)[0].select("id", "degree")
     finally:
         sym.unpersist()

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.algorithms.triangles import _undirected, edge_support
-from fog_spark.engine.superstep import materialize_observed, run_supersteps
+from fog_spark.engine.superstep import materialize_counted, run_supersteps
 
 
 def k_truss(
@@ -49,21 +49,18 @@ def k_truss(
     """
     if k < 2:
         raise ValueError("k-truss needs k >= 2")
-    n_alive = None  # |edges| entering the round, counted off the first cut
+    n_alive = None  # |edges| entering the round
 
-    def peel(und, m):
+    def peel(und, m, n):
         nonlocal n_alive
-        if n_alive is None:
-            n_alive = und.count()
         keep = (
             und.join(edge_support(und), ["a", "b"], "left")
             .filter(F.coalesce("sup", F.lit(0)) >= k - 2)
             .select("a", "b")
         )
-        keep, om = materialize_observed(keep, [F.count(F.lit(1)).alias("n")], ctx, m)
-        n_keep = int(om["n"] or 0)
-        done = n_keep in (n_alive, 0)  # nothing dropped / all gone
+        keep, n_keep = materialize_counted(keep, ctx, m)
+        done = n_keep in (n_alive or n, 0)  # nothing dropped / all gone
         n_alive = n_keep
         return keep, n_keep, None, done
 
-    return run_supersteps(_undirected(edges), ctx, rounds, peel).select("a", "b")
+    return run_supersteps(lambda: _undirected(edges), ctx, rounds, peel)[0].select("a", "b")

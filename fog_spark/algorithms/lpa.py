@@ -7,11 +7,12 @@ neighbor labels with ties broken toward the smallest label; synchronous
 rounds; stop at fixed point or max_iters (synchronous LPA can 2-cycle
 on bipartite structures, so a cap is part of the semantics).
 
-A vertex program on the GLOBAL-mode loop (``pagerank._power_iterate``):
-every vertex scatters every superstep, the state carries the label as
-``rank``, and the loop owns resume, the cuts, the commit and the stop
-rule. Labels are integers, so ``tol=1`` stops exactly at the first
-superstep that changes no label.
+A GLOBAL-mode program (``pagerank._power_iterate``) on the engine's one
+loop, ``superstep.run_supersteps``: every vertex scatters every
+superstep, the state carries the label as ``rank``, and the loop owns
+resume, the step-0 cut, the commit and the stop. Labels are integers,
+so ``tol=1`` is done exactly at the first superstep that changes no
+label, and a rerun on that run dir returns its snapshot at once.
 
 The mode gather is two aggregations — groupBy(dst, label).count() then
 argmax per dst — both map-side combinable. The argmax-with-tiebreak is
@@ -25,8 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from fog_spark.algorithms.pagerank import _power_iterate, _resume
-from fog_spark.engine.superstep import materialize, symmetrize
+from fog_spark.algorithms.pagerank import _power_iterate
+from fog_spark.engine.superstep import symmetrize
 
 
 def _mode(msgs: DataFrame) -> DataFrame:
@@ -44,32 +45,26 @@ def label_propagation(
     ctx=None,
 ) -> DataFrame:
     """Returns (id, label). Isolated vertices keep their own id."""
-    start, state, done = _resume(ctx, max_iters, 1)
-    if done:
-        return state.select("id", F.col("rank").alias("label"))
     # mode counts must not double-count duplicate (src,dst) pairs.
     # The distinct is a full shuffle — cache it so the vertex set and
     # the loop's aligned re-partition read it once, not recompute it each.
     sym0 = symmetrize(edges).distinct().persist()
-    if state is None:
-        # default vertex set from ONE aggregate over the cached sym0 plus
-        # the self-loop-only vertices symmetrize drops
-        if vertices is None:
-            vertices = (
-                sym0.select(F.col("dst").alias("id"))
-                .unionByName(
-                    edges.select("src", "dst")
-                    .filter(F.col("src") == F.col("dst"))
-                    .select(F.col("src").alias("id"))
-                )
-                .distinct()
+    # default vertex set from ONE aggregate over the cached sym0 plus
+    # the self-loop-only vertices symmetrize drops
+    if vertices is None:
+        vertices = (
+            sym0.select(F.col("dst").alias("id"))
+            .unionByName(
+                edges.select("src", "dst")
+                .filter(F.col("src") == F.col("dst"))
+                .select(F.col("src").alias("id"))
             )
-        state = materialize(vertices.select("id", F.col("id").alias("rank")), ctx, 0)
-    n = state.count()
+            .distinct()
+        )
     labels, _ = _power_iterate(
-        sym0, state, n, start, max_iters, ctx,
+        sym0, lambda: vertices.select("id", F.col("id").alias("rank")), max_iters, ctx,
         msg=F.col("rank"),
-        rank=lambda _: F.coalesce("incoming", F.col("rank")),
+        rank=lambda n, _: F.coalesce("incoming", F.col("rank")),
         carry=(),
         tol=1,
         gather=_mode,

@@ -45,7 +45,7 @@ def multi_source_bfs(
         roots = spark.createDataFrame([(int(r),) for r in roots], "root long")
     active = None  # pairs reached last step, counted off the first cut
 
-    def expand(state, step):
+    def expand(state, step, n):
         nonlocal active
         if active is None:
             active = state.filter(F.col("dist") == step - 1).count()
@@ -69,5 +69,5 @@ def multi_source_bfs(
         return state, active, None, active == 0
 
     init = roots.select(F.col("root").alias("id"), "root", F.lit(0).alias("dist"))
-    state = run_supersteps(init, ctx, max_iters, expand)
+    state, _ = run_supersteps(lambda: init, ctx, max_iters, expand)
     return state.select("id", "root", F.col("dist").cast("long").alias("dist"))

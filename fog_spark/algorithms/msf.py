@@ -117,13 +117,9 @@ def minimum_spanning_forest(
     with nothing left to pick is done.
     """
     ecan = canonical_edges(edges, weight_col).persist()
-    n = None  # |V|, counted off the step-0 or resumed cut
     forest: list[DataFrame] = []
 
-    def boruvka(comp, r):
-        nonlocal n
-        if n is None:
-            n = comp.count()
+    def boruvka(comp, r, n):
         cm = maybe_broadcast(comp, n)
         ca = cm.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
         cb = cm.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
@@ -152,7 +148,7 @@ def minimum_spanning_forest(
 
     comp = vertices_of(edges).select("id", F.col("id").alias("comp"))
     try:
-        run_supersteps(comp, ctx, rounds, boruvka)
+        run_supersteps(lambda: comp, ctx, rounds, boruvka)
     finally:
         # the forest reads only the per-round pick cuts (or the run dir)
         ecan.unpersist()

@@ -1,16 +1,18 @@
 """PageRank — one power-iteration loop, four vertex programs.
 
-``_power_iterate`` is the GLOBAL-mode superstep loop (every vertex
-scatters every superstep, fogsrc/fog_engine.cpp:116-158): edge
-alignment, scatter → gather → merge, the per-superstep cut, the commit
-and the stop rule. ``_resume`` picks up a ``RunContext`` run. Each
-public function supplies only its vertex program: the initial state,
+``_power_iterate`` is the GLOBAL-mode program (every vertex scatters
+every superstep, fogsrc/fog_engine.cpp:116-158) on the engine's one
+loop, ``superstep.run_supersteps``, which owns resume, the step-0 cut
+and |V|, the commit and the stop. Its superstep does the edge
+alignment once, then scatter → gather → merge and the per-superstep
+cut, and reports done once max|Δ| < tol. Each public function supplies
+only its vertex program: the initial state (built on a fresh run only),
 the scatter message, the new-rank expression and, for the convergent
 modes, the dangling predicate and the ``tol`` stop rule. ``katz.katz``,
-``lpa.label_propagation`` and ``coreness.coreness`` run on the same
-loop; the last two bring their own gather fold (mode, h-index) in place
-of the ``F.sum`` default. ``hits`` and ``salsa`` keep their own loop:
-they alternate two gathers per iteration.
+``lpa.label_propagation`` and ``coreness.coreness`` are programs of the
+same kind; the last two bring their own gather fold (mode, h-index) in
+place of the ``F.sum`` default. ``hits`` and ``salsa`` alternate two
+gathers per iteration and supply their own superstep.
 
 - **FOG mode** (the correctness oracle): the reference's exact —
   non-standard — recurrence, traced in SURVEY §2.8 from
@@ -41,22 +43,24 @@ Arrow boundary every superstep (measured ~10x slower, BASELINE.md).
 
 from __future__ import annotations
 
-import time
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import IntegralType
 
-# The loop lives here, not in engine/: perfbench/tracing.py finds
-# supersteps by wrapping these names on this module.
+# The step body lives here, not in engine/: perfbench/tracing.py finds
+# supersteps by wrapping the materialize* and prepare_gather_edges names
+# on this module.
 from fog_spark.engine.superstep import (
     degrees_and_vertices,
     materialize,
+    materialize_counted,
     materialize_observed,
     maybe_broadcast,
     merge_join,
     prepare_gather_edges,
     release,
+    run_supersteps,
     vertices_of,
 )
 
@@ -77,21 +81,6 @@ def _outdegrees(edges: DataFrame, vertices: DataFrame | None) -> DataFrame:
     )
 
 
-def _resume(ctx, max_iters: int, tol: float | None = None) -> tuple[int, DataFrame | None, bool]:
-    """(superstep, state, converged) to continue a ``ctx`` run from;
-    (0, None, False) for a fresh run. Convergence is judged by the
-    metric record OF the resumed step: last_committed() may describe a
-    NEWER step whose snapshot was lost (resume_point walked past it)."""
-    rp = ctx.resume_point_at_most(max_iters) if ctx is not None else None
-    if rp is None:
-        return 0, None, False
-    step, state = rp
-    if tol is None:
-        return step, state, False
-    rec = next((m for m in reversed(ctx.metrics()) if m["superstep"] == step), {})
-    return step, state, rec.get("delta") is not None and rec["delta"] < tol
-
-
 def _sum_gather(msgs: DataFrame) -> DataFrame:
     """The default gather fold: (dst, incoming = Σ msg)."""
     return msgs.groupBy("dst").agg(F.sum("msg").alias("incoming"))
@@ -99,88 +88,87 @@ def _sum_gather(msgs: DataFrame) -> DataFrame:
 
 def _power_iterate(
     edges: DataFrame,
-    state: DataFrame,
-    n: int,
-    start: int,
+    init: Callable[[], DataFrame],
     max_iters: int,
     ctx,
     msg: Column,
-    rank: Callable[[float], Column],
+    rank: Callable[[int, float], Column],
     carry: tuple[str, ...],
     dangles: Column | None = None,
     tol: float | None = None,
-    m_edges: int | None = None,
+    m_edges: Callable[[DataFrame], int] | None = None,
     gather: Callable[[DataFrame], DataFrame] = _sum_gather,
 ) -> tuple[DataFrame, int]:
-    """Supersteps start+1..max_iters from the cut ``state`` (n rows).
+    """Supersteps 1..max_iters of a GLOBAL-mode program on
+    ``superstep.run_supersteps``, from ``init()`` (built on a fresh run
+    only) or the ``ctx`` resume point.
 
     Each superstep scatters ``msg`` along ``edges`` (src → dst), folds
     the (dst, msg) messages into (dst, incoming) with ``gather`` (a sum
     by default), and keeps ``id``, the ``carry`` columns and
-    ``rank(dangling)`` over state ⟕ gather as the next state.
+    ``rank(n, dangling)`` over state ⟕ gather as the next state, where
+    n is the loop's row count.
 
     A number ``tol`` makes the run convergent: the old rank is kept as
     ``prev``, max|Δ| rides the cut as an observed metric (one job per
-    superstep), and the loop stops once max|Δ| < tol. A dangling
+    superstep), and the run is done once max|Δ| < tol. A dangling
     predicate ``dangles`` adds the next superstep's dangling mass to
     the observed metrics. With ``tol=None`` each superstep is a plain
-    cut and the run goes to max_iters; ``m_edges`` then lets
-    prepare_gather_edges decline an alignment the remaining supersteps
-    cannot amortize. Each cut the loop made is released as soon as the
-    next one exists. Returns ((id, rank), last superstep run).
+    cut and the run goes to max_iters; ``m_edges`` (|E| from the
+    entering state) then lets prepare_gather_edges decline an alignment
+    the remaining supersteps cannot amortize. The first superstep does
+    the per-run setup (|E|, the edge alignment, the dangling mass);
+    each superstep releases the cut it replaces. Returns ((id, rank),
+    last superstep run).
     """
-    # gather-aligned edge cache: zero shuffle exchanges per superstep
-    # when the state broadcasts (superstep.prepare_gather_edges)
-    prepared = prepare_gather_edges(edges, n, m_edges=m_edges, expected_iters=max_iters - start)
-    prev, observed = (), []
-    if tol is not None:
-        prev = (F.col("rank").alias("prev"),)
-        r, p = F.col("rank"), F.col("prev")
-        if isinstance(state.schema["rank"].dataType, IntegralType):
-            # exact for integer ranks (labels): a long subtraction overflows
-            # on far-apart labels, and a double loses unit steps above 2^53
-            r, p = r.cast("decimal(20,0)"), p.cast("decimal(20,0)")
-        observed.append(F.max(F.abs(r - p)).alias("delta"))
-    dangling = 0.0
-    if dangles is not None:
-        dangling = state.filter(dangles).agg(F.sum("rank")).collect()[0][0] or 0.0
-        observed.append(F.sum(F.when(dangles, F.col("rank")).otherwise(F.lit(0.0))).alias("dangling"))
+    prev = (F.col("rank").alias("prev"),) if tol is not None else ()
+    observed: list[Column] = []
+    prepared, dangling = None, 0.0
 
-    it = start
-    for it in range(start + 1, max_iters + 1):
-        t0 = time.time()
+    def superstep(state, k, n):
+        nonlocal prepared, dangling
+        if prepared is None:
+            m = m_edges(state) if m_edges is not None else None
+            # gather-aligned edge cache: zero shuffle exchanges per
+            # superstep when the state broadcasts
+            prepared = prepare_gather_edges(edges, n, m_edges=m, expected_iters=max_iters - k + 1)
+            if tol is not None:
+                r, p = F.col("rank"), F.col("prev")
+                if isinstance(state.schema["rank"].dataType, IntegralType):
+                    # exact for integer ranks (labels): a long subtraction overflows
+                    # on far-apart labels, and a double loses unit steps above 2^53
+                    r, p = r.cast("decimal(20,0)"), p.cast("decimal(20,0)")
+                observed.append(F.max(F.abs(r - p)).alias("delta"))
+            if dangles is not None:
+                dangling = state.filter(dangles).agg(F.sum("rank")).collect()[0][0] or 0.0
+                observed.append(F.sum(F.when(dangles, F.col("rank")).otherwise(F.lit(0.0))).alias("dangling"))
         st = maybe_broadcast(state, n)
         msgs = prepared.join(st, prepared["src"] == st["id"]).select(prepared["dst"], msg.alias("msg"))
         agg = gather(msgs)
         nxt = merge_join(state, agg, state["id"] == agg["dst"], n).select(
-            "id", *carry, *prev, rank(dangling).alias("rank")
+            "id", *carry, *prev, rank(n, dangling).alias("rank")
         )
         delta = None
         if not observed:
-            nxt = materialize(nxt, ctx, it)
+            nxt = materialize(nxt, ctx, k)
         else:
-            nxt, om = materialize_observed(nxt, observed, ctx, it)
-            # om values are None on an empty vertex set — an empty graph
-            # is converged (matches cc's observed-metric null handling)
+            nxt, om = materialize_observed(nxt, observed, ctx, k)
             if tol is not None:
                 delta = float(om["delta"] or 0.0)
             dangling = float(om.get("dangling") or 0.0)
-        if it > start + 1:  # before that, state is the caller's frame
-            release(state)
-        state = nxt
-        if ctx is not None:
-            ctx.commit(it, active=n, delta=delta, wall_s=time.time() - t0, lineage=ctx.lineage_of(state))
-        if delta is not None and delta < tol:
-            break
-    if prepared is not edges:
+        release(state)  # the step-0 cut or a resume read is the loop's own, too
+        return nxt, n, delta, delta is not None and delta < tol
+
+    state, k = run_supersteps(init, ctx, max_iters, superstep)
+    if prepared is not None and prepared is not edges:
         prepared.unpersist()
-    return state.select("id", "rank"), it
+    return state.select("id", "rank"), k
 
 
-def _uniform_rank(d: float, n: int) -> Callable[[float], Column]:
+def _uniform_rank(d: float) -> Callable[[int, float], Column]:
     """Standard/weighted update: uniform teleport plus a uniform share of
     the dangling mass."""
-    return lambda dangling: (1.0 - d) / n + d * (F.coalesce("incoming", F.lit(0.0)) + dangling / n)
+    return lambda n, dangling: (1.0 - d) / n + d * (F.coalesce("incoming", F.lit(0.0)) + dangling / n)
 
 
 # ---------------------------------------------------------------------------
@@ -196,19 +184,14 @@ def pagerank_fog(
     ctx=None,
 ) -> DataFrame:
     """FOG-mode accumulating PageRank. Returns (id, rank)."""
-    start, state, _ = _resume(ctx, niters)
-    if state is None:
-        state = materialize(_outdegrees(edges, vertices).withColumn("rank", F.lit(1.0)), ctx, 0)
-    n = state.count()  # known once; drives broadcast decisions every superstep
-    # |E| = sum(outdeg) — a tiny agg over the materialized state — feeds
-    # the edge-alignment amortization guard for this fixed-niters run
-    m = int(state.agg(F.sum("outdeg")).collect()[0][0] or 0)
     return _power_iterate(
-        edges, state, n, start, niters, ctx,
+        edges, lambda: _outdegrees(edges, vertices).withColumn("rank", F.lit(1.0)), niters, ctx,
         msg=d * F.col("rank") / F.col("outdeg") + (1.0 - d),
-        rank=lambda _: F.col("rank") + F.coalesce("incoming", F.lit(0.0)),
+        rank=lambda n, _: F.col("rank") + F.coalesce("incoming", F.lit(0.0)),
         carry=("outdeg",),
-        m_edges=m,
+        # |E| = sum(outdeg) — a tiny agg over the cut state — feeds the
+        # edge-alignment amortization guard for this fixed-niters run
+        m_edges=lambda state: int(state.agg(F.sum("outdeg")).collect()[0][0] or 0),
     )[0]
 
 
@@ -240,42 +223,33 @@ def pagerank_standard(
     supersteps. Vertices absent from ``init_ranks`` (newly arrived)
     start at 1/n; a ``ctx`` resume snapshot takes precedence.
     """
-    start, state, done = _resume(ctx, max_iters, tol)
-    if done:
-        return state.select("id", "rank"), start
-    if state is None:
+
+    def init():
         # one materialized (id, outdeg) preamble frame: vertex set and
-        # scatter degrees in a single shuffle, and the init plan
-        # executes ONCE (the old count-then-checkpoint flow re-executed
-        # the degree aggregation for each)
-        base = materialize(_outdegrees(edges, vertices))
-        n = base.count()
-        if n == 0:  # an empty graph is converged (and 1/n is undefined)
-            return base.select("id", F.lit(0.0).alias("rank")), 0
-        state = base.select("id", "outdeg", F.lit(1.0 / n).alias("rank"), F.lit(0.0).alias("prev"))
-        if init_ranks is not None:
-            warm = init_ranks.select(F.col("id").alias("wid"), F.col("rank").alias("wrank"))
-            state = base.join(maybe_broadcast(warm, n), base["id"] == F.col("wid"), "left").select(
-                "id", "outdeg", F.coalesce("wrank", F.lit(1.0 / n)).alias("rank"), F.lit(0.0).alias("prev")
-            )
-            # Normalize to sum 1: mass error lies along the principal
-            # eigenvector and decays only at rate d (the SLOWEST mode) —
-            # an unnormalized warm start from a grown graph measurably
-            # converges slower than uniform (103 vs 30 supersteps at 1e-10
-            # on a 31-vertex drive). Shape error decays at d·λ2, so the
-            # normalized warm start is the fast path the docstring promises.
-            tot = state.agg(F.sum("rank")).collect()[0][0] or 1.0
-            state = state.withColumn("rank", F.col("rank") / tot)
-        # without a ctx or a warm join, the thin projection over the cut
-        # base IS the stable step-0 leaf — a second cut would only copy it
-        if ctx is not None or init_ranks is not None:
-            state = materialize(state, ctx, 0)
-    else:
-        n = state.count()
+        # scatter degrees in a single shuffle, |V| observed on the same
+        # job; on an empty graph the loop returns the empty step-0 cut
+        base, n = materialize_counted(_outdegrees(edges, vertices))
+        r0 = 1.0 / max(n, 1)
+        state = base.select("id", "outdeg", F.lit(r0).alias("rank"), F.lit(0.0).alias("prev"))
+        if init_ranks is None:
+            return state
+        warm = init_ranks.select(F.col("id").alias("wid"), F.col("rank").alias("wrank"))
+        state = base.join(maybe_broadcast(warm, n), base["id"] == F.col("wid"), "left").select(
+            "id", "outdeg", F.coalesce("wrank", F.lit(r0)).alias("rank"), F.lit(0.0).alias("prev")
+        )
+        # Normalize to sum 1: mass error lies along the principal
+        # eigenvector and decays only at rate d (the SLOWEST mode) —
+        # an unnormalized warm start from a grown graph measurably
+        # converges slower than uniform (103 vs 30 supersteps at 1e-10
+        # on a 31-vertex drive). Shape error decays at d·λ2, so the
+        # normalized warm start is the fast path the docstring promises.
+        tot = state.agg(F.sum("rank")).collect()[0][0] or 1.0
+        return state.withColumn("rank", F.col("rank") / tot)
+
     return _power_iterate(
-        edges, state, n, start, max_iters, ctx,
+        edges, init, max_iters, ctx,
         msg=F.col("rank") / F.col("outdeg"),
-        rank=_uniform_rank(d, n),
+        rank=_uniform_rank(d),
         carry=("outdeg",),
         dangles=F.col("outdeg") == 0,
         tol=tol,
@@ -320,26 +294,19 @@ def pagerank_weighted(
         .select("src", "dst", (F.col("w") / F.col("wsum")).alias("p"))
         .localCheckpoint(eager=False)
     )
-    start, state, done = _resume(ctx, max_iters, tol)
-    if done:
-        return state.select("id", "rank"), start
-    if state is None:
-        vertices = vertices if vertices is not None else vertices_of(edges)
-        state = vertices.join(wsum, vertices["id"] == wsum["src"], "left").select(
+
+    def init():
+        vs = vertices if vertices is not None else vertices_of(edges)
+        state = vs.join(wsum, vs["id"] == wsum["src"], "left").select(
             "id", F.col("wsum").isNotNull().alias("has_out")
         )
-        n = state.count()
-        if n == 0:
-            return state.select("id", F.lit(0.0).alias("rank")), 0
-        state = materialize(
-            state.select("id", "has_out", F.lit(1.0 / n).alias("rank"), F.lit(0.0).alias("prev")), ctx, 0
-        )
-    else:
-        n = state.count()
+        r0 = 1.0 / max(state.count(), 1)  # an empty graph: the loop returns at once
+        return state.select("id", "has_out", F.lit(r0).alias("rank"), F.lit(0.0).alias("prev"))
+
     return _power_iterate(
-        pe, state, n, start, max_iters, ctx,
+        pe, init, max_iters, ctx,
         msg=F.col("rank") * F.col("p"),
-        rank=_uniform_rank(d, n),
+        rank=_uniform_rank(d),
         carry=("has_out",),
         dangles=~F.col("has_out"),
         tol=tol,
@@ -379,17 +346,12 @@ def pagerank_personalized(
     ``max_iters=k`` that is the fixed-depth form external fixed-k
     oracles replay.
     """
-    start, state, done = _resume(ctx, max_iters, tol)
-    if done:
-        return state.select("id", "rank"), start
-    if state is None:
+
+    def init():
         # one materialized (id, outdeg) preamble frame (see
         # pagerank_standard): vertex set and scatter degrees in a single
-        # shuffle, executed once
-        base = materialize(_outdegrees(edges, vertices))
-        n = base.count()
-        if n == 0:
-            return base.select("id", F.lit(0.0).alias("rank")), 0
+        # shuffle, |V| observed on the same job
+        base, n = materialize_counted(_outdegrees(edges, vertices))
         # intersect the seeds with the vertex set BEFORE sizing 1/|S|:
         # an unknown seed id would otherwise keep a share of teleport mass
         # that the state join then drops, deflating every rank and breaking
@@ -399,26 +361,19 @@ def pagerank_personalized(
             .join(base.select(F.col("id").alias("sid")), "sid", "left_semi")
         )
         n_seeds = seed_set.count()
-        if n_seeds == 0:
+        if n_seeds == 0 and n > 0:  # an empty graph: the loop returns at once
             raise ValueError(
                 "pagerank_personalized needs a non-empty seed set intersecting the graph's vertices"
             )
-        tele = F.when(F.col("sid").isNotNull(), F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
-        # the seed join is not a thin projection over the cut base —
-        # cut it so superstep 1 doesn't execute it twice
-        state = materialize(
-            base.join(seed_set, base["id"] == seed_set["sid"], "left").select(
-                "id", "outdeg", tele.alias("tele"), tele.alias("rank"), F.lit(0.0).alias("prev")
-            ),
-            ctx,
-            0,
+        tele = F.when(F.col("sid").isNotNull(), F.lit(1.0 / max(n_seeds, 1))).otherwise(F.lit(0.0))
+        return base.join(seed_set, base["id"] == seed_set["sid"], "left").select(
+            "id", "outdeg", tele.alias("tele"), tele.alias("rank"), F.lit(0.0).alias("prev")
         )
-    else:
-        n = state.count()
+
     return _power_iterate(
-        edges, state, n, start, max_iters, ctx,
+        edges, init, max_iters, ctx,
         msg=F.col("rank") / F.col("outdeg"),
-        rank=lambda dangling: (1.0 - d + d * dangling) * F.col("tele") + d * F.coalesce("incoming", F.lit(0.0)),
+        rank=lambda n, dangling: (1.0 - d + d * dangling) * F.col("tele") + d * F.coalesce("incoming", F.lit(0.0)),
         carry=("outdeg", "tele"),
         dangles=F.col("outdeg") == 0,
         tol=tol,

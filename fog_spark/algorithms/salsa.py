@@ -13,10 +13,12 @@ no norm scalar is needed between passes, so unlike HITS the loop runs
 with ZERO driver-side aggregations: two scatter joins + two keyed
 aggregations per iteration, one materialize (plan cut) per iteration,
 and the Σa≈1 invariant rides that job as an observed metric. The
-degree normalizations are attached to the edge table ONCE before the
-loop (the same pre-attachment as weighted PageRank's w/wsum). One
+degree normalizations are attached to the edge table ONCE, by the first
+superstep (the same pre-attachment as weighted PageRank's w/wsum). One
 iteration is one superstep of ``engine/superstep.run_supersteps``,
-which owns resume and the commit.
+which owns resume, |V| and the commit; the initial state and the edge
+tables are built only when a run needs them, so a rerun on a finished
+run dir returns its snapshot without a preamble.
 
 Not in FOG (its apps stop at the PageRank family, fogsrc/main.cpp:
 51-135); SALSA is the standard web-graph companion the reference's
@@ -24,6 +26,8 @@ own roadmap never reached.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -45,37 +49,41 @@ def salsa(
     uniform over vertices with indeg > 0 and stays summed to 1; hub
     mass likewise over outdeg > 0 vertices. Vertices outside either
     side report 0.0 for that score."""
-    e = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
-    verts = vertices_of(e).localCheckpoint(eager=False)
-    n = verts.count()
+    @functools.cache
+    def simple():
+        """(e, ind): the simple edge table, cut once, and its in-degrees."""
+        e = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
+        return e, e.groupBy("dst").agg(F.count(F.lit(1)).alias("ind"))
 
-    ind = e.groupBy("dst").agg(F.count(F.lit(1)).alias("ind"))
-    od = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    # normalizations ride the edges once — the loop never recomputes them.
-    # The degree side is broadcast by hint: planned by AQE instead, the
-    # joined edges came out in a different order from run to run, and
-    # with them the float sums of every superstep, so a resumed run could
-    # differ from a clean one in the last bits
-    eb = (
-        e.join(maybe_broadcast(ind, n), "dst")
-        .select("src", "dst", (F.lit(1.0) / F.col("ind")).alias("wb"))
-        .localCheckpoint(eager=False)
-    )
-    ef = (
-        e.join(maybe_broadcast(od, n), "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("od")).alias("wf"))
-        .localCheckpoint(eager=False)
-    )
+    def init():
+        e, ind = simple()
+        auth0 = ind.select(F.col("dst").alias("id"), F.lit(1.0 / max(ind.count(), 1)).alias("authority"))
+        return vertices_of(e).join(auth0, "id", "left").select(
+            "id", F.coalesce("authority", F.lit(0.0)).alias("authority"), F.lit(0.0).alias("hub")
+        )
 
-    n_auth = ind.count()
-    auth0 = ind.select(F.col("dst").alias("id"), F.lit(1.0 / max(n_auth, 1)).alias("authority"))
-    init = (
-        verts.join(auth0, "id", "left")
-        .select("id", F.coalesce("authority", F.lit(0.0)).alias("authority"),
-                F.lit(0.0).alias("hub"))
-    )
+    eb = ef = None  # the degree-weighted edges, built by the first superstep
 
-    def iterate(state, it):
+    def iterate(state, it, n):
+        nonlocal eb, ef
+        if eb is None:
+            e, ind = simple()
+            od = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
+            # normalizations ride the edges once — the loop never recomputes
+            # them. The degree side is broadcast by hint: planned by AQE
+            # instead, the joined edges came out in a different order from
+            # run to run, and with them the float sums of every superstep,
+            # so a resumed run could differ from a clean one in the last bits
+            eb = (
+                e.join(maybe_broadcast(ind, n), "dst")
+                .select("src", "dst", (F.lit(1.0) / F.col("ind")).alias("wb"))
+                .localCheckpoint(eager=False)
+            )
+            ef = (
+                e.join(maybe_broadcast(od, n), "src")
+                .select("src", "dst", (F.lit(1.0) / F.col("od")).alias("wf"))
+                .localCheckpoint(eager=False)
+            )
         st = maybe_broadcast(state, n)
         # backward pass: authority mass -> hubs, 1/indeg per in-link
         hmsg = eb.join(st, eb["dst"] == st["id"]).select(
@@ -102,4 +110,4 @@ def salsa(
         )
         return state, n, float(om["mass"] or 0.0), False
 
-    return run_supersteps(init, ctx, niters, iterate).select("id", "authority", "hub")
+    return run_supersteps(init, ctx, niters, iterate)[0].select("id", "authority", "hub")

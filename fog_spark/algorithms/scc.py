@@ -32,16 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from fog_spark.algorithms.bfs import reachable_set
 from fog_spark.algorithms.cc import min_frontier_loop
-from fog_spark.engine.superstep import materialize, materialize_observed, vertices_of
-
-
-def _mat_count(df: DataFrame) -> tuple[DataFrame, int]:
-    """Materialize + row count folded into the SAME Spark job (observe):
-    the SCC driver loop needs a cardinality after nearly every
-    materialization, and a separate .count() job per round doubles the
-    driver round-trips at 100s of peel rounds."""
-    out, om = materialize_observed(df, [F.count(F.lit(1)).alias("n")])
-    return out, int(om["n"] or 0)
+from fog_spark.engine.superstep import materialize, materialize_counted, vertices_of
 
 
 def forward_backward(
@@ -55,7 +46,7 @@ def forward_backward(
     (fwd(id, lbl), conf(id)): fwd(v) = min id reaching v (incl. itself),
     conf = the vertices confirmed into SCC(fwd label)."""
     lbl = vertices.select("id", F.col("id").alias("lbl"), F.lit(True).alias("changed"))
-    fwd = min_frontier_loop(edges, lbl, "lbl", F.col("lbl"), None, fwd_iters)
+    fwd = min_frontier_loop(edges, lambda: lbl, "lbl", F.col("lbl"), None, fwd_iters)
 
     # reach from the roots along reversed edges whose endpoints share a
     # forward label
@@ -78,7 +69,7 @@ def strongly_connected_components(
     vertices = vertices if vertices is not None else vertices_of(edges)
     e = edges.filter(F.col("src") != F.col("dst")).select("src", "dst")
 
-    remaining, n_rem = _mat_count(vertices.select("id"))
+    remaining, n_rem = materialize_counted(vertices.select("id"))
     assigned_parts: list[DataFrame] = []
 
     for _ in range(max_outer):
@@ -98,11 +89,11 @@ def strongly_connected_components(
             trimmed = remaining.join(both, "id", "left_anti").select(
                 "id", F.col("id").alias("component")
             )
-            trimmed, n_trim = _mat_count(trimmed)
+            trimmed, n_trim = materialize_counted(trimmed)
             if n_trim == 0:
                 break
             assigned_parts.append(trimmed)
-            remaining, n_rem = _mat_count(remaining.join(trimmed, "id", "left_anti"))
+            remaining, n_rem = materialize_counted(remaining.join(trimmed, "id", "left_anti"))
             sub = materialize(
                 sub.join(remaining.select(F.col("id").alias("src")), "src", "left_semi")
                 .join(remaining.select(F.col("id").alias("dst")), "dst", "left_semi")
@@ -116,7 +107,7 @@ def strongly_connected_components(
             fwd.join(conf, "id", "left_semi").select("id", F.col("lbl").alias("component"))
         )
         assigned_parts.append(done)
-        remaining, n_rem = _mat_count(remaining.join(done, "id", "left_anti"))
+        remaining, n_rem = materialize_counted(remaining.join(done, "id", "left_anti"))
 
     if n_rem > 0:
         raise RuntimeError(

@@ -46,7 +46,7 @@ def sssp(
     absorb = (F.col("cand.dist") < F.col("dist")) & (F.abs(F.col("cand.dist") - F.col("dist")) > EPS)
     state = min_frontier_loop(
         fwd,
-        state,
+        lambda: state,
         "dist",
         F.struct((F.col("dist") + F.col("weight")).alias("dist"), F.col("id").alias("pred")),
         ctx,

@@ -48,14 +48,6 @@ def _count(col, pattern: str):
     return F.size(F.regexp_extract_all(col, F.lit(pattern), F.lit(0))).cast("long")
 
 
-def mask_pii(col):
-    """The masked text column: emails -> <EMAIL>, IPv4 -> <IP>,
-    international phones -> <PHONE>, applied in that order."""
-    t = F.regexp_replace(F.coalesce(col, F.lit("")), EMAIL_RE, EMAIL_TOKEN)
-    t = F.regexp_replace(t, IPV4_RE, IP_TOKEN)
-    return F.regexp_replace(t, PHONE_RE, PHONE_TOKEN)
-
-
 def pii_scrub(
     docs: DataFrame,
     id_col: str = "doc_id",

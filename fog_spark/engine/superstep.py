@@ -27,13 +27,17 @@ Physical notes (the part FOG does by hand that Spark gives us):
   frees what other loops leave, along with old shuffle files and
   broadcasts. No superstep blocks on a GC.
 
-``run_supersteps`` is the one resumable loop the hand-written vertex
-programs (anf, hits, salsa, msbfs, msf, kcore, ktruss) run on: it owns
-resume, the step-0 cut, the per-step timer and the commit, and a
-program supplies only its superstep. The two traced loops,
-``pagerank._power_iterate`` and ``cc.min_frontier_loop``, keep their
-own, because the perfbench tracer finds supersteps by the ``materialize``
-names imported into those modules.
+``run_supersteps`` is the one superstep loop: it owns resume, the
+step-0 cut and its row count, the per-step timer, the commit and the
+stop, and a program supplies only its initial state and its superstep.
+The GLOBAL-mode power iteration (``pagerank._power_iterate``: the four
+PageRank modes, katz, lpa, coreness), the MIN frontier
+(``cc.min_frontier_loop``: cc, bfs, sssp, scc, bowtie, dag) and the
+hand-written programs (anf, hits, salsa, msbfs, msf, kcore, ktruss) all
+run on it. Only the step bodies of the first two stay in ``pagerank.py``
+and ``cc.py``: the perfbench tracer finds their supersteps by wrapping
+the ``materialize*`` and ``prepare_gather_edges`` names those modules
+import.
 """
 
 from __future__ import annotations
@@ -247,44 +251,62 @@ def materialize_observed(
     return out, obs.get
 
 
-def run_supersteps(state: DataFrame, ctx, last: int | None, step) -> DataFrame:
-    """Run supersteps 1..``last`` of a vertex program (``last=None``:
-    until the program reports done) and return the final state.
+def materialize_counted(df: DataFrame, ctx=None, step: int | None = None) -> tuple[DataFrame, int]:
+    """``materialize`` + the cut's row count, observed on the same job."""
+    out, om = materialize_observed(df, [F.count(F.lit(1)).alias("n")], ctx, step)
+    return out, int(om["n"] or 0)
 
-    ``step(state, k) -> (state, active, delta, done)`` computes
+
+def run_supersteps(init, ctx, last: int | None, step) -> tuple[DataFrame, int]:
+    """Run supersteps 1..``last`` of a vertex program (``last=None``:
+    until the program reports done); return the final state and the
+    last superstep run.
+
+    ``init()`` builds the fresh step-0 state; only a fresh run calls it,
+    after the resume lookup, so a rerun pays for no preamble.
+    ``step(state, k, n) -> (state, active, delta, done)`` computes
     superstep k from the state after k-1 and cuts its own result
     (``materialize[_observed](…, ctx, k)``), so the durable snapshot at
-    k is the step's write. The loop owns the rest:
+    k is the step's write; ``n`` is the state's row count entering the
+    run. The loop owns the rest:
 
     - resume: with a RunContext, continue from the last committed step
       (capped at ``last``); a resumed step whose record says ``done``
       returns at once, so a converged run dir reruns no round;
-    - the step-0 cut of ``state`` on a fresh run;
-    - one ``ctx.commit`` per step, carrying ``done`` so a rerun can
-      tell a converged run dir from an interrupted one.
+    - the step-0 cut of ``init()`` on a fresh run, with ``n`` observed
+      on the cut's own job; a resumed run counts its snapshot, and only
+      when a step will run. An empty state returns at once;
+    - the per-step timer and one ``ctx.commit`` per step, carrying
+      ``done`` so a rerun can tell a converged run dir from an
+      interrupted one, and the stop on done or at ``last``.
 
     The loop releases no cut: a step may cut more than once (hits) or
-    keep earlier cuts alive (msf's forest), so cut lifetime stays with
-    the ContextCleaner (see ``release``)."""
-    k = 0
+    keep earlier cuts alive (msf's forest), so a step that can free the
+    cut it replaces does so itself (``release``: the power-iteration and
+    MIN-frontier steps), and the ContextCleaner frees the rest."""
+    k, state = 0, None
     if ctx is not None:
         rp = ctx.resume_point() if last is None else ctx.resume_point_at_most(last)
         if rp is not None:
             k, state = rp
             if any(r["superstep"] == k and r.get("done") for r in ctx.metrics()):
-                return state
-    if k == 0:
-        state = materialize(state, ctx, 0)
-    while last is None or k < last:
+                return state, k
+    if state is None:
+        state, n = materialize_counted(init(), ctx, 0)
+    elif last is None or k < last:
+        n = state.count()
+    else:
+        return state, k
+    while n and (last is None or k < last):
         k += 1
         t0 = time.time()
-        state, active, delta, done = step(state, k)
+        state, active, delta, done = step(state, k, n)
         if ctx is not None:
             ctx.commit(k, active=active, delta=delta, wall_s=time.time() - t0,
                        lineage=ctx.lineage_of(state), done=bool(done))
         if done:
             break
-    return state
+    return state, k
 
 
 def active_metric(col: str = "changed") -> Column:

@@ -16,12 +16,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from fog_spark.algorithms.anf import neighborhood_sketches
+from fog_spark.algorithms.bfs import bfs_levels
+from fog_spark.algorithms.cc import connected_components
+from fog_spark.algorithms.coreness import coreness
 from fog_spark.algorithms.hits import hits
 from fog_spark.algorithms.katz import katz
 from fog_spark.algorithms.kcore import k_core
 from fog_spark.algorithms.ktruss import k_truss
+from fog_spark.algorithms.lpa import label_propagation
 from fog_spark.algorithms.msbfs import multi_source_bfs
 from fog_spark.algorithms.msf import minimum_spanning_forest
+from fog_spark.algorithms.pagerank import pagerank_fog, pagerank_standard
 from fog_spark.algorithms.salsa import salsa
 from fog_spark.engine.checkpoint import RunContext
 
@@ -118,10 +123,31 @@ def _weighted(e):
     return e.withColumn("weight", ((F.col("src") * 31 + F.col("dst") * 17) % 13 + 1).cast("double"))
 
 
+def _pagerank_standard(e, steps, ctx):
+    ranks, iters = pagerank_standard(e, max_iters=steps or 200, ctx=ctx)
+    return {r["id"]: r["rank"] for r in ranks.collect()}, iters
+
+
 # name -> run(edges, supersteps or None (to convergence), ctx): a
-# comparable result. The convergent programs (msbfs, msf, kcore, ktruss)
-# cap at `steps` and may stop earlier.
+# comparable result. The convergent programs (CONVERGENT, plus bfs) cap
+# at `steps` and may stop earlier.
 RUNS = {
+    "pagerank_fog": lambda e, steps, ctx: {
+        r["id"]: r["rank"] for r in pagerank_fog(e, niters=steps, ctx=ctx).collect()
+    },
+    "pagerank_standard": _pagerank_standard,
+    "lpa": lambda e, steps, ctx: {
+        r["id"]: r["label"] for r in label_propagation(e, max_iters=steps or 20, ctx=ctx).collect()
+    },
+    "coreness": lambda e, steps, ctx: {
+        r["id"]: r["coreness"] for r in coreness(e, max_iters=steps or 10_000, ctx=ctx).collect()
+    },
+    "cc": lambda e, steps, ctx: {
+        r["id"]: r["component"] for r in connected_components(e, max_iters=steps or 200, ctx=ctx).collect()
+    },
+    "bfs": lambda e, steps, ctx: {
+        r["id"]: r["level"] for r in bfs_levels(e, 0, max_iters=steps or 10_000, ctx=ctx).collect()
+    },
     "katz": lambda e, steps, ctx: {
         r["id"]: r["katz"] for r in katz(e, alpha=0.1, niters=steps, ctx=ctx).collect()
     },
@@ -148,46 +174,81 @@ RUNS = {
     },
 }
 GRAPHS = {"ktruss": _truss_graph}  # the rest run on _graph
-CONVERGENT = ["kcore", "ktruss", "msbfs", "msf"]
+CONVERGENT = ["cc", "coreness", "kcore", "ktruss", "lpa", "msbfs", "msf", "pagerank_standard"]
+K = 4  # supersteps of the clean run; the kill lands at K // 2
 
 
 def _steps(ctx):
     return {m["superstep"]: m["ts"] for m in ctx.metrics()}
 
 
+def _jobs(spark, fn):
+    """(fn(), the number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("rerun-jobs", "rerun-jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup("rerun-jobs"))
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, tmp_path_factory):
+    """name -> (output, committed steps) of one clean K-step ctx run,
+    made once and shared by the kill and the vacuum tests."""
+    root, runs = str(tmp_path_factory.mktemp("clean")), {}
+
+    def get(name):
+        if name not in runs:
+            ctx = RunContext(spark, root, name)
+            out = RUNS[name](GRAPHS.get(name, _graph)(spark), K, ctx)
+            runs[name] = out, sorted(_steps(ctx))
+        return runs[name]
+
+    return get
+
+
 @pytest.mark.parametrize("name", sorted(RUNS))
-def test_kill_and_resume_matches_clean(spark, tmp_path, name):
-    """k/2 supersteps with a ctx, then k on the same run dir: equal to a
-    clean k-step run (bit for bit: both restart every step from the
+def test_kill_and_resume_matches_clean(spark, tmp_path, clean_run, name):
+    """K/2 supersteps with a ctx, then K on the same run dir: equal to a
+    clean K-step run (bit for bit: both restart every step from the
     previous step's parquet), the same steps are committed, and the
-    first k/2 are not redone."""
-    run, k, e = RUNS[name], 4, GRAPHS.get(name, _graph)(spark)
-    clean_ctx = RunContext(spark, str(tmp_path), "clean")
-    clean = run(e, k, clean_ctx)
-    steps = sorted(_steps(clean_ctx))
-    assert steps[-1] > k // 2, "the kill must land before the clean run's last step"
+    first K/2 are not redone. salsa then reruns the finished run dir:
+    the same output and no round, from at most 3 Spark jobs."""
+    run, e = RUNS[name], GRAPHS.get(name, _graph)(spark)
+    clean, steps = clean_run(name)
+    assert steps[-1] > K // 2, "the kill must land before the clean run's last step"
 
     killed = RunContext(spark, str(tmp_path), "resume")
-    run(e, k // 2, killed)
+    run(e, K // 2, killed)
     written = _steps(killed)
-    assert sorted(written) == [s for s in steps if s <= k // 2]
+    assert sorted(written) == [s for s in steps if s <= K // 2]
 
     ctx = RunContext(spark, str(tmp_path), "resume")
-    assert run(e, k, ctx) == clean
+    assert run(e, K, ctx) == clean
     after = _steps(ctx)
     assert sorted(after) == steps
     assert all(after[s] == ts for s, ts in written.items())
 
+    if name == "salsa":
+        # the call alone: no preamble is built before the loop returns
+        # the finished snapshot
+        out, jobs = _jobs(spark, lambda: salsa(e, niters=K, ctx=RunContext(spark, str(tmp_path), "resume")))
+        assert jobs <= 3, f"a rerun on a finished run dir launched {jobs} Spark jobs"
+        assert {r["id"]: (r["authority"], r["hub"]) for r in out.collect()} == clean
+        assert _steps(ctx) == after
+
 
 @pytest.mark.parametrize("name", sorted(RUNS))
-def test_resume_after_keep_last_vacuum_matches_clean(spark, tmp_path, name):
-    """The kill at k/2 under keep_last=1 leaves only the newest
-    snapshot; resuming from it still gives the clean k-step result."""
-    run, k, e = RUNS[name], 4, GRAPHS.get(name, _graph)(spark)
-    clean = run(e, k, RunContext(spark, str(tmp_path), "clean"))
-    run(e, k // 2, RunContext(spark, str(tmp_path), "vac", keep_last=1))
+def test_resume_after_keep_last_vacuum_matches_clean(spark, tmp_path, clean_run, name):
+    """The kill at K/2 under keep_last=1 leaves only the newest
+    snapshot; resuming from it still gives the clean K-step result."""
+    run, e = RUNS[name], GRAPHS.get(name, _graph)(spark)
+    clean, _ = clean_run(name)
+    run(e, K // 2, RunContext(spark, str(tmp_path), "vac", keep_last=1))
     ctx = RunContext(spark, str(tmp_path), "vac", keep_last=1)
-    assert run(e, k, ctx) == clean
+    assert run(e, K, ctx) == clean
     assert sorted(_steps(ctx)) == [max(_steps(ctx))]
 
 

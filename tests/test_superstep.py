@@ -269,7 +269,7 @@ RELEASING_LOOPS = {
 @pytest.mark.parametrize("algo", list(RELEASING_LOOPS))
 def test_loops_release_their_cuts(spark, algo):
     """The shared loops free each cut they replace: 12 supersteps leave
-    at most the caller's step-0 cut and the returned one persisted.
+    at most a preamble cut and the returned one persisted.
     Counted right after the loop returns: a ContextCleaner GC in
     between can only lower the count."""
     sc = spark.sparkContext
